@@ -68,33 +68,43 @@ object Bench {
     // (GC pauses, page-cache misses), which is exactly the pollution the
     // round-over-round comparison needs removed.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted(n) }
-      .map { case (name, fn) =>
-      val times = (0 until reps).map { _ =>
-        // isolate queries: drop caches left by earlier queries' staged
-        // hash pipelines so they don't occupy memory during this timing.
-        // The explicit GC matters with a large heap: ContextCleaner frees
-        // localCheckpoint blocks and shuffle files only when the JVM collects
-        // the RDD references — without it a 51-query run accumulates every
-        // previous query's blocks and the later (IO-heavy engine) queries run
-        // 3-5x slower against the polluted block manager.
-        spark.catalog.clearCache()
-        System.gc()
-        // label the rep's jobs (guide §1.5) so an event-log profile maps
-        // every job — including eager fixture/guard jobs launched during
-        // plan construction — to its query without timestamp archaeology
-        spark.sparkContext.setJobDescription(s"bench:$name")
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+    // One timing loop for the sf0.1 run and the sf1 side-bench. Each rep
+    // runs on a clean slate: drop caches left by earlier queries' staged
+    // hash pipelines so they don't occupy memory during this timing. The
+    // explicit GC matters with a large heap: ContextCleaner frees
+    // localCheckpoint blocks and shuffle files only when the JVM collects
+    // the RDD references — without it a 51-query run accumulates every
+    // previous query's blocks and the later (IO-heavy engine) queries run
+    // 3-5x slower against the polluted block manager. A failed rep records
+    // NO time (a fast AnalysisException would read as a dramatic speedup in
+    // the cross-round JSON): a query with any failed rep is left out of the
+    // results and counted as failed.
+    def timeAll(names: Seq[String], dir: String, tag: String)
+        : (Seq[(String, Double)], Int) = {
+      val timed = names.map { name =>
+        val times = (0 until reps).flatMap { _ =>
+          spark.catalog.clearCache()
+          System.gc()
+          // label the rep's jobs (guide §1.5) so an event-log profile maps
+          // every job — including eager fixture/guard jobs launched during
+          // plan construction — to its query without timestamp archaeology
+          spark.sparkContext.setJobDescription(s"bench:$name")
+          val t0 = System.nanoTime()
+          try {
+            SparkEntry.queries(name)(spark, dir)
+              .write.format("noop").mode("overwrite").save()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+            None
+          } finally spark.sparkContext.setJobDescription(null)
         }
-        spark.sparkContext.setJobDescription(null)
-        (System.nanoTime() - t0) / 1e9
+        name -> (if (times.size < reps) None else Some(times.min))
       }
-      name -> times.min
+      (timed.collect { case (n, Some(t)) => n -> t }, timed.count(_._2.isEmpty))
     }
+    val (results, failed) =
+      timeAll(SparkEntry.queries.keys.toSeq.sorted.filter(wanted), sfDir, "bench")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -231,10 +241,9 @@ object Bench {
       // all documents-family faces GenScale replicates
       "text_charset", "text_etld", "mm_mp4_scan", "mm_exif",
       "mm_decode_webp", "pipeline_pagerank_wat")
-    var sf1Failed = 0
-    val sf1Results: Seq[(String, Double)] =
+    val (sf1Results, sf1Failed) =
       if (args.nonEmpty || !sfDir.replace("/", "").endsWith("sf0.1") ||
-          sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "1") Seq.empty
+          sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "1") (Seq.empty, 0)
       else try {
         val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1-bench")
         val marker = new java.io.File(sf1Dir, "_GENSCALE_DONE")
@@ -252,35 +261,16 @@ object Bench {
         try SparkEntry.queries("engine_count")(spark, sf1Dir)
           .write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
-        // min-of-`reps`, SAME estimator as the sf0.1 loop (round-14 fix:
-        // a single end-of-JVM-life pass recorded mm_video_phash at 23.8×
-        // for 10× data when the true plan ratio is ~2.2× — JIT-cold codec
-        // paths plus 350 prior queries' block-manager residue all landed
-        // on the first heavy row; the committed JSON must be plan
-        // evidence, not warm-up noise)
-        Sf1Subset.filter(SparkEntry.queries.contains).flatMap { name =>
-          val times = (0 until reps).flatMap { _ =>
-            spark.catalog.clearCache()
-            System.gc()
-            val t0 = System.nanoTime()
-            // a failed query must NOT record its time-to-failure as a result
-            // (a fast AnalysisException would read as a dramatic speedup in
-            // the cross-round JSON) — drop it and count it in sf1_failed
-            try {
-              SparkEntry.queries(name)(spark, sf1Dir)
-                .write.format("noop").mode("overwrite").save()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench sf1] $name failed: ${e.getMessage}")
-              None
-            }
-          }
-          if (times.size < reps) { sf1Failed += 1; None }
-          else Some(name -> times.min)
-        }
+        // min-of-`reps`, SAME estimator and failure rule as the sf0.1 loop
+        // (round-14 fix: a single end-of-JVM-life pass recorded
+        // mm_video_phash at 23.8× for 10× data when the true plan ratio is
+        // ~2.2× — JIT-cold codec paths plus 350 prior queries' block-manager
+        // residue all landed on the first heavy row; the committed JSON must
+        // be plan evidence, not warm-up noise)
+        timeAll(Sf1Subset.filter(SparkEntry.queries.contains), sf1Dir, "bench sf1")
       } catch { case e: Throwable =>
         System.err.println(s"[bench sf1] skipped: ${e.getMessage}")
-        Seq.empty
+        (Seq.empty, 0)
       }
     val sf1Qs = sf1Results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -289,8 +279,9 @@ object Bench {
     // back to a full scan because the sidecar's stale span overflowed the
     // IN-list cap — nonzero here means "run refreshValueIndex"
     val staleFallbacks = graft.engine.Tsdb.valueIndexStaleFallbacks.get()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""queries":$qs,""" +
+    // the totals + quality-metrics fields shared by the archived line and
+    // the console summary
+    val summary = s""""failed":$failed,""" +
       s""""ann_lsh_recall_at5":${recalls.getOrElse("lsh", -1.0)},""" +
       s""""ann_ivf_recall_at5":${recalls.getOrElse("ivf", -1.0)},""" +
       s""""emb_lsh_cand_ratio_loose":$ratioLoose,""" +
@@ -300,8 +291,9 @@ object Bench {
       s""""vindex_stale_fallbacks":$staleFallbacks,""" +
       s""""winnow_density":$winnowDensity,""" +
       s""""sf1_total":$sf1Total,"sf1_nqueries":${sf1Results.size},""" +
-      s""""sf1_failed":$sf1Failed,""" +
-      s""""sf1_queries":$sf1Qs,"sf":"$sfDir"}"""
+      s""""sf1_failed":$sf1Failed"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
+      s""""queries":$qs,$summary,"sf1_queries":$sf1Qs,"sf":"$sfDir"}"""
     // Persist machine-readable first (sbt prefixes stdout with [info], which
     // breaks downstream JSON parsing of the console line), then stop Spark
     // BEFORE printing so the metrics lines are the LAST stdout the process
@@ -329,9 +321,9 @@ object Bench {
     // reachable from this side of the contract. What we CAN do safely:
     //   first: the per-query map alone, 3-decimal rounding (~6.6 KB) — for
     //     humans reading full console logs / driver logs that keep stdout;
-    //   LAST: the totals + quality-metrics summary (bit-identical shape to
-    //     the line the r18 driver parsed, ~505 chars) so the tail-window
-    //     parse keeps working exactly as before.
+    //   LAST: the totals + quality-metrics summary (the fields of the
+    //     line the r18 driver parsed plus `failed`, ~520 chars) so the
+    //     tail-window parse keeps working as before.
     // Full-precision per-query numbers live in bench_out.json and the
     // tracked BENCH_ARCHIVE.jsonl (written above, before Spark shutdown).
     val qs3 = results.map { case (k, v) =>
@@ -341,16 +333,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},""" +
       s""""reps":$reps,"queries":$qs3,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},""" +
-      s""""reps":$reps,"detail":"$out","ann_lsh_recall_at5":${recalls.getOrElse("lsh", -1.0)},""" +
-      s""""ann_ivf_recall_at5":${recalls.getOrElse("ivf", -1.0)},""" +
-      s""""emb_lsh_cand_ratio_loose":$ratioLoose,""" +
-      s""""emb_lsh_cand_ratio_tight":$ratioTight,""" +
-      s""""ann_ivf_recall_clustered":$clRecall,""" +
-      s""""ivf_list_skew_clustered":$clSkew,""" +
-      s""""vindex_stale_fallbacks":$staleFallbacks,""" +
-      s""""winnow_density":$winnowDensity,""" +
-      s""""sf1_total":$sf1Total,"sf1_nqueries":${sf1Results.size},""" +
-      s""""sf1_failed":$sf1Failed,"sf":"$sfDir"}""")
+      s""""reps":$reps,"detail":"$out",$summary,"sf":"$sfDir"}""")
     System.out.flush()
   }
 }

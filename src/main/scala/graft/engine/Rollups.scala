@@ -17,14 +17,7 @@ object Rollups {
   /** The FIELD is part of the rollup identity: downsampling a second field
     * with the same window must not resolve to the first field's rollup
     * measurement (same schema => createMeasurement would accept it and the
-    * writes would collide on identical timestamps).
-    *
-    * Roots written under the pre-field naming (`<m>__rollup_<w>`) are
-    * migrated by `Tsdb.downsample` on first use: auto-renamed when the
-    * parent has exactly one field (the only unambiguous case — the legacy
-    * name never recorded its source field), otherwise a loud
-    * MeasurementExistsException tells the operator which rename to make.
-    * Nothing silently creates a parallel measurement over stale readers. */
+    * writes would collide on identical timestamps). */
   def name(m: String, field: String, windowWidth: Long): String =
     s"${m}__rollup_${field}_$windowWidth"
 }

@@ -48,9 +48,12 @@ final case class WriteResult(written: Long, discarded: Long, overwriteVerified: 
   * partition layout preserves that property for the cluster.
   *
   * Concurrency: the reference serializes writers per series with flocks
-  * (series.h:42-179). Here the contract is single-writer-per-series (Spark
-  * jobs are the writers); readers always see a consistent snapshot because
-  * parquet files are immutable and the watermark swap is atomic (rename).
+  * (series.h:42-179). Here Spark jobs are the writers, and the contract is:
+  * a one-series batch (every `writePoints`, a one-series `writeBatch`, the
+  * per-series maintenance ops) may run beside writers of other series; a
+  * multi-series batch is the measurement's only writer. Readers always see
+  * a consistent snapshot because parquet files are immutable and the
+  * watermark swap is atomic (rename).
   *
   * Metadata scale: watermarks live in ONE log-structured table per
   * measurement ([[WatermarkStore]]): every update — single-series append or
@@ -163,152 +166,61 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   // ---------------------------------------------------------------- write
 
-  /** Validated append — the reference's `write_wal` semantics
-    * (src/libtsdb/wal.cc:53-347):
-    *  - `time_ns` must be non-null and unique within the batch (the
-    *    strictly-increasing rule, wal.cc:63-68; a DataFrame has no inherent
-    *    order, so monotonicity degenerates to uniqueness — the engine imposes
-    *    the physical order on write).
+  /** Validated append of ONE series — `writeBatch` over the batch with the
+    * series column set to `series`; see [[writeBatch]] for the semantics. A
+    * one-series batch stages under the series' own directory, so it may run
+    * beside writers of OTHER series of the measurement.
+    * @return the series' (written, discarded, overwriteVerified); all zero
+    *         for an empty batch. */
+  def writePoints(db: String, m: String, series: String, points: DataFrame): WriteResult = {
+    validSeriesName(series)
+    writeBatch(db, m, points.withColumn(SeriesCol, lit(series)))
+      .getOrElse(series, WriteResult(0, 0, 0))
+  }
+
+  /** Bulk append of a MULTI-series batch — the backfill path (reference
+    * analog: large writes bypass the WAL and commit directly,
+    * src/libtsdb/wal.cc:248-277). The same single pass as [[writeBatch]],
+    * minus the idempotent-rewrite window: any point at-or-below an existing
+    * series' `time_last` REJECTS the whole batch (replays belong to
+    * `writeBatch`/`writePoints`). Points below a series' delete watermark
+    * `time_first` still discard silently. Same concurrency contract and
+    * crash safety as `writeBatch`. @return per-series written counts. */
+  def bulkLoad(db: String, m: String, points: DataFrame): Map[String, Long] =
+    writeBatchImpl(db, m, points, allowOverlap = false)
+      .collect { case (sn, r) if r.written > 0 => sn -> r.written }
+
+  /** Validated append — the engine's one write path, with the reference's
+    * `write_wal` semantics per series (src/libtsdb/wal.cc:53-347):
+    *  - `time_ns` must be non-null and unique per series within the batch
+    *    (the strictly-increasing rule, wal.cc:63-68; a DataFrame has no
+    *    inherent order, so monotonicity degenerates to uniqueness — the
+    *    engine imposes the physical order on write).
     *  - points below the delete watermark `time_first` are silently
     *    discarded (wal.cc:70-85).
     *  - points in `[time_first, time_last]` are an idempotent tail overwrite:
     *    accepted iff BITWISE identical to what is stored — float/double
     *    compared by raw IEEE-754 bits exactly like the reference's memcmp
     *    (wal.cc:87-246, 104, 116) — and the overlapped stored range must be
-    *    covered exactly (no gaps, no never-seen past points). Any mismatch
-    *    rejects the whole write.
+    *    covered exactly (no gaps, no never-seen past points).
     *  - points above `time_last` are appended, sorted, bucket-partitioned;
     *    the watermark then advances. Idempotent overwrite is what makes
     *    at-least-once streaming replay exactly-once (see graft.streaming).
-    */
-  def writePoints(db: String, m: String, series: String, points: DataFrame): WriteResult = {
-    validSeriesName(series)
-    val schema = getSchema(db, m)
-    val cols = TimeCol +: schema.fields.map(_.name)
-    val missing = cols.filterNot(points.columns.contains)
-    if (missing.nonEmpty)
-      throw new InvalidSchemaException(s"write batch missing columns: ${missing.mkString(",")}")
-    val pts = points.select(
-      col(TimeCol).cast(LongType).as(TimeCol) +:
-      schema.fields.map(f => col(f.name).cast(f.ftype.spark).as(f.name)): _*)
-
-    // single validation pass: batch size, NULL/duplicate timestamps, the
-    // watermark partition counts AND the new-point count/range all come
-    // from ONE aggregation job over the batch
-    val wm = seriesRange(db, m, series)
-    val (tf, tl) = wm.fold((Long.MinValue, Long.MinValue))(r => (r.timeFirst, r.timeLast))
-    // "new" = above the append watermark AND not below the delete watermark
-    // (time_first > time_last after a delete-into-the-future: points between
-    // them are discarded, not appended); a never-written series takes
-    // everything
-    val isNew = if (wm.isEmpty) lit(true) else col(TimeCol) > tl && col(TimeCol) >= tf
-    val stats = pts.agg(
-      count(lit(1)).as("n"), count(col(TimeCol)).as("n_ts"),
-      countDistinct(col(TimeCol)).as("n_distinct"),
-      sum(when(col(TimeCol) < tf, 1L).otherwise(0L)).as("disc"),
-      sum(when(col(TimeCol).between(tf, tl), 1L).otherwise(0L)).as("ov"),
-      min(when(col(TimeCol).between(tf, tl), col(TimeCol))).as("ov_min"),
-      count(when(isNew, lit(1))).as("new_n"),
-      min(when(isNew, col(TimeCol))).as("new_min"),
-      max(when(isNew, col(TimeCol))).as("new_max")).head()
-    val n = stats.getLong(0)
-    if (n == 0) return WriteResult(0, 0, 0)
-    if (stats.getLong(1) < n)
-      throw new OutOfOrderTimestampsException(s"${n - stats.getLong(1)} NULL $TimeCol values")
-    if (stats.getLong(2) < n)
-      throw new OutOfOrderTimestampsException(
-        s"${n - stats.getLong(2)} duplicate timestamps within batch")
-
-    val (discarded, overlapN) = if (wm.isEmpty) (0L, 0L) else {
-      val ovN = stats.getLong(4)
-      if (ovN > 0) verifyOverlap(db, m, series, schema,
-        pts.filter(col(TimeCol).between(tf, tl)), stats.getLong(5), tl, ovN)
-      (stats.getLong(3), ovN)
-    }
-
-    // crash recovery (reference write.cc:93-252: time_last-governed tail
-    // truncation on open): a crash BETWEEN the data append and the watermark
-    // advance leaves committed rows above time_last; replaying the batch
-    // would duplicate them. The append-intent marker makes the check free on
-    // the clean path: it exists on entry only if a previous append died
-    // mid-flight, and only then is the (bucket-pruned) truncation scan run.
-    // With NO watermark yet, everything stored is an orphan of a crashed
-    // FIRST append — drop the series data dir so the replay starts clean.
-    val pending = pendingPath(db, m, series)
-    if (fs(pending).exists(pending)) {
-      wm match {
-        case Some(r) => truncateAbove(db, m, series, schema, r.timeLast)
-        case None =>
-          val sdir = seriesDir(db, m, series)
-          fs(sdir).delete(sdir, true)
-      }
-      fs(pending).delete(pending, false)
-    }
-
-    // the write job, bracketed by the append-intent marker (removed after
-    // the watermark advances); new-point count/range came from the stats job
-    val newPts = if (wm.isEmpty) pts else pts.filter(isNew)
-    val newN = stats.getLong(6)
-    val written = if (newN == 0) 0L
-                  else {
-                    atomicWrite(pending, s"""{"version":1}""")
-                    appendSorted(db, m, series, newPts, newN)
-                  }
-    if (written > 0 || wm.isEmpty) {
-      val nstats = if (written > 0) Some((stats.getLong(7), stats.getLong(8))) else None
-      val next = (wm, nstats) match {
-        case (Some(r), Some((_, mx))) => SeriesRange(r.timeFirst, math.max(r.timeLast, mx))
-        case (Some(r), None)          => r
-        case (None, Some((mn, mx)))   => SeriesRange(mn, mx)
-        case (None, None)             => SeriesRange(1, 0) // reference empty-series sentinel
-      }
-      wmStore(db, m).update(Map(series -> next))
-    }
-    if (written > 0) fs(pending).delete(pending, false)
-    WriteResult(written, discarded, overlapN)
-  }
-
-  /** Bulk append of a MULTI-series batch in one distributed pass — the
-    * backfill path (reference analog: large writes bypass the WAL and
-    * commit directly, src/libtsdb/wal.cc:248-277). Where `writePoints` runs
-    * one validation job + one write job PER series, bulkLoad runs one
-    * validation job and one `partitionBy(series, bucket)` write job for the
-    * whole batch — at backfill scale that is the difference between O(series)
-    * and O(1) job launches, with the write spread over the full cluster.
+    * Any validation failure rejects the WHOLE batch before anything lands.
     *
-    * Semantics vs `writePoints`: same non-null/unique-per-series timestamp
-    * validation, same silent discard of points below a series' delete
-    * watermark `time_first`; but any point at-or-below an existing series'
-    * `time_last` REJECTS the whole batch (no idempotent-rewrite window —
-    * replays belong to the per-series path). Contract: exclusive writer for
-    * the measurement while a bulk load runs (the shared `partitionBy` write
-    * stages through one `_temporary/`; see `appendSorted` on why concurrent
-    * same-directory jobs must not overlap).
+    * A fixed number of Spark queries whatever the series count: one stats
+    * aggregation, one bitwise overlap verify (only when a replayed tail
+    * exists) and one write; the watermarks commit as one delta. No job is
+    * spent on the watermark lookup, nor on range sampling below
+    * `Tsdb.RangeWriteThreshold` new points. A micro-batch of 10⁴ series
+    * costs about what one series does, not 10⁴× (the reference's WAL
+    * serializes per series because it is single-node, wal.cc:248-277).
     *
-    * Crash safety: per-series append-intent markers bracket the write, so a
-    * died bulk load is healed by the normal recovery on each series' next
-    * append. @return per-series written counts. */
-  def bulkLoad(db: String, m: String, points: DataFrame): Map[String, Long] =
-    writeBatchImpl(db, m, points, allowOverlap = false)
-      .collect { case (sn, r) if r.written > 0 => sn -> r.written }
-
-  /** Validated append of a MULTI-series batch with `writePoints` semantics
-    * per series — the streaming-sink path (SURVEY §7.2.7): below-watermark
-    * points silently discard, points inside `[time_first, time_last]` are a
-    * BITWISE-verified idempotent tail overwrite (reference wal.cc:87-246),
-    * points above append. Unlike the per-series `writePoints` loop this runs
-    * a FIXED number of Spark jobs whatever the series count: one stats
-    * aggregation, one distributed overlap verify (only when a replayed tail
-    * exists), one `partitionBy(series, bucket)` write, one watermark delta —
-    * a micro-batch of 10⁴ series costs 3 jobs, not 2×10⁴ (the r5 streaming
-    * dispatch ceiling; the reference's WAL serializes per series because it
-    * is single-node, wal.cc:248-277).
-    *
-    * Contract: exclusive writer for the measurement while the batch commits
-    * (one shared `_temporary/` staging dir — see `appendSorted`); a
-    * micro-batch sink IS that exclusive writer. Any per-series validation
-    * failure (NULL/duplicate timestamps, diverging overlap bytes) rejects
-    * the WHOLE batch before anything lands — replay-safe.
+    * Concurrency contract: a one-series batch stages under that series'
+    * directory and may run beside writers of other series; a multi-series
+    * batch stages through the measurement's shared `data/_temporary/` and
+    * must be the measurement's only writer (a streaming micro-batch sink is
+    * that writer).
     * @return per-series (written, discarded, overwriteVerified). */
   def writeBatch(db: String, m: String, points: DataFrame): Map[String, WriteResult] =
     writeBatchImpl(db, m, points, allowOverlap = true)
@@ -319,139 +231,173 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val cols = SeriesCol +: TimeCol +: schema.fields.map(_.name)
     val missing = cols.filterNot(points.columns.contains)
     if (missing.nonEmpty)
-      throw new InvalidSchemaException(s"bulk batch missing columns: ${missing.mkString(",")}")
+      throw new InvalidSchemaException(s"write batch missing columns: ${missing.mkString(",")}")
     val pts = points.select(
       col(SeriesCol).cast(StringType).as(SeriesCol) +:
       col(TimeCol).cast(LongType).as(TimeCol) +:
       schema.fields.map(f => col(f.name).cast(f.ftype.spark).as(f.name)): _*)
 
-    // existing watermarks, broadcast against the batch (catalog-scale;
-    // ONE bounded load, not one file per series)
-    val wms = wmStore(db, m).load()
-    import spark.implicits._
-    // NULL _tf/_tl = series with no watermark yet (everything appends, like
-    // writePoints' wm.isEmpty path) — a real column-null flag, NOT a
+    // existing watermarks, looked up per row (catalog-scale; ONE bounded
+    // load, not one file per series). NULL _tf/_tl = series with no
+    // watermark yet (everything appends) — a real column-null flag, NOT a
     // Long.MinValue sentinel, which would collide with a representable
     // timestamp at the type's edge
-    val tagged =
-      if (wms.isEmpty)
-        pts.withColumn("_tf", lit(null).cast(LongType))
-          .withColumn("_tl", lit(null).cast(LongType))
-      else {
-        val wdf = broadcast(
-          wms.toSeq.map { case (sn, r) => (sn, r.timeFirst, r.timeLast) }
-            .toDF(SeriesCol, "_tf", "_tl"))
-        pts.join(wdf, Seq(SeriesCol), "left")
-      }
-    // keep = above both watermarks (or a brand-new series); discard =
-    // inside the delete window — identical visibility rules to writePoints
-    val known = col("_tf").isNotNull
-    val keep = !known || (col(TimeCol) > col("_tl") && col(TimeCol) >= col("_tf"))
-    val inTail = known && col(TimeCol).between(col("_tf"), col("_tl"))
+    val wms = wmStore(db, m).load()
+    withSeriesBounds(wms.map { case (sn, r) => sn -> (r.timeFirst, r.timeLast) }) { (tf, tl) =>
+      val tagged = pts.withColumn("_tf", tf).withColumn("_tl", tl)
+      // keep = above both watermarks (or a brand-new series); discard =
+      // inside the delete window. "Above both": time_first > time_last after
+      // a delete-into-the-future, and points between them are discarded
+      val known = col("_tf").isNotNull
+      val keep = !known || (col(TimeCol) > col("_tl") && col(TimeCol) >= col("_tf"))
+      val inTail = known && col(TimeCol).between(col("_tf"), col("_tl"))
 
-    // ONE validation job for every series
-    val stats = tagged.groupBy(col(SeriesCol)).agg(
-      count(lit(1)).as("n"), count(col(TimeCol)).as("n_ts"),
-      countDistinct(col(TimeCol)).as("n_distinct"),
-      sum(when(known && col(TimeCol) <= col("_tl"), 1L).otherwise(0L)).as("le_tl"),
-      count(when(keep, lit(1))).as("new_n"),
-      min(when(keep, col(TimeCol))).as("new_min"),
-      max(when(keep, col(TimeCol))).as("new_max"),
-      sum(when(known && col(TimeCol) < col("_tf"), 1L).otherwise(0L)).as("disc"),
-      sum(when(inTail, 1L).otherwise(0L)).as("ov"),
-      min(when(inTail, col(TimeCol))).as("ov_min")).collect()
-    // row layout: series(0), n(1), n_ts(2), n_distinct(3), le_tl(4),
-    // new_n(5), new_min(6), new_max(7), disc(8), ov(9), ov_min(10)
-    stats.foreach { r =>
-      val sn = r.getString(0)
-      validSeriesName(sn)
-      if (r.getLong(3) < r.getLong(1))
-        throw new OutOfOrderTimestampsException(
-          s"$sn: ${r.getLong(1) - r.getLong(3)} duplicate/NULL timestamps in bulk batch")
-      if (!allowOverlap && r.getLong(4) > 0)
-        throw new OverwriteMismatchException(
-          s"$sn: ${r.getLong(4)} points at-or-below time_last — bulk load is append-only")
-    }
-    // replayed tails: ONE distributed bitwise verify over every overlapping
-    // series at once (per-series writePoints semantics, reference
-    // wal.cc:87-246 memcmp; the batch analog of verifyOverlap)
-    if (allowOverlap) {
-      val ovRows = stats.filter(_.getLong(9) > 0)
-      if (ovRows.nonEmpty)
-        verifyOverlapBatch(db, m, schema, tagged.filter(inTail),
-          ovRows.map(r => (r.getString(0), r.getLong(10), wms(r.getString(0)).timeLast)))
-    }
-    // heal any series a previous append/bulk load died on (same recovery
-    // rules as writePoints: truncate orphans above the watermark, or drop
-    // the dir when no watermark was ever written)
-    stats.map(_.getString(0)).foreach { sn =>
-      val p = pendingPath(db, m, sn)
-      if (fs(p).exists(p)) {
-        wms.get(sn) match {
-          case Some(r) => truncateAbove(db, m, sn, schema, r.timeLast)
-          case None =>
-            val sdir = seriesDir(db, m, sn)
-            fs(sdir).delete(sdir, true)
+      // ONE validation job for every series
+      val stats = tagged.groupBy(col(SeriesCol)).agg(
+        count(lit(1)).as("n"), count(col(TimeCol)).as("n_ts"),
+        countDistinct(col(TimeCol)).as("n_distinct"),
+        sum(when(known && col(TimeCol) <= col("_tl"), 1L).otherwise(0L)).as("le_tl"),
+        count(when(keep, lit(1))).as("new_n"),
+        min(when(keep, col(TimeCol))).as("new_min"),
+        max(when(keep, col(TimeCol))).as("new_max"),
+        sum(when(known && col(TimeCol) < col("_tf"), 1L).otherwise(0L)).as("disc"),
+        sum(when(inTail, 1L).otherwise(0L)).as("ov"),
+        min(when(inTail, col(TimeCol))).as("ov_min")).collect()
+      // row layout: series(0), n(1), n_ts(2), n_distinct(3), le_tl(4),
+      // new_n(5), new_min(6), new_max(7), disc(8), ov(9), ov_min(10)
+      stats.foreach { r =>
+        val sn = r.getString(0)
+        validSeriesName(sn)
+        if (r.getLong(3) < r.getLong(1))
+          throw new OutOfOrderTimestampsException(
+            s"$sn: ${r.getLong(1) - r.getLong(3)} duplicate/NULL timestamps in batch")
+        if (!allowOverlap && r.getLong(4) > 0)
+          throw new OverwriteMismatchException(
+            s"$sn: ${r.getLong(4)} points at-or-below time_last — bulk load is append-only")
+      }
+      // replayed tails: ONE distributed bitwise verify over every overlapping
+      // series at once (reference wal.cc:87-246 memcmp)
+      if (allowOverlap) {
+        val ovRows = stats.filter(_.getLong(9) > 0)
+        if (ovRows.nonEmpty)
+          verifyOverlapBatch(db, m, schema, tagged.filter(inTail), ovRows.map { r =>
+            r.getString(0) -> (r.getLong(10), wms(r.getString(0)).timeLast)
+          }.toMap)
+      }
+      // crash recovery (reference write.cc:93-252: time_last-governed tail
+      // truncation on open): a crash BETWEEN the data append and the watermark
+      // advance leaves committed rows above time_last; replaying the batch
+      // would duplicate them. The append-intent marker makes the check free on
+      // the clean path: it exists on entry only if a previous append died
+      // mid-flight, and only then is the (bucket-pruned) truncation scan run.
+      // With NO watermark yet, everything stored is an orphan of a crashed
+      // FIRST append — drop the series data dir so the replay starts clean.
+      stats.map(_.getString(0)).foreach { sn =>
+        val p = pendingPath(db, m, sn)
+        if (fs(p).exists(p)) {
+          wms.get(sn) match {
+            case Some(r) => truncateAbove(db, m, sn, schema, r.timeLast)
+            case None =>
+              val sdir = seriesDir(db, m, sn)
+              fs(sdir).delete(sdir, true)
+          }
+          fs(p).delete(p, false)
         }
-        fs(p).delete(p, false)
       }
-    }
 
-    def results: Map[String, WriteResult] = stats.map(r =>
-      r.getString(0) -> WriteResult(r.getLong(5), r.getLong(8), r.getLong(9))).toMap
-    val toWrite = stats.filter(_.getLong(5) > 0)
-    if (toWrite.isEmpty) return results // fully-replayed / fully-discarded batch
-
-    toWrite.foreach(r => atomicWrite(pendingPath(db, m, r.getString(0)), """{"version":1}"""))
-    val par = spark.sparkContext.defaultParallelism
-    tagged.filter(keep)
-      .withColumn(BucketCol,
-        expr(s"($TimeCol - pmod($TimeCol, ${bucketWidth}L)) div ${bucketWidth}L"))
-      .select(col(SeriesCol) +: col(BucketCol) +: col(TimeCol) +:
-        schema.fields.map(f => col(f.name)): _*)
-      .repartitionByRange(par, col(SeriesCol), col(BucketCol), col(TimeCol))
-      .sortWithinPartitions(SeriesCol, BucketCol, TimeCol)
-      .write.mode("append").partitionBy(SeriesCol, BucketCol)
-      .parquet(dataDir(db, m).toString)
-    // ONE watermark commit for the whole batch (one delta file however many
-    // series landed), then the intent markers drop
-    wmStore(db, m).update(toWrite.map { r =>
-      val sn = r.getString(0)
-      val (mn, mx) = (r.getLong(6), r.getLong(7))
-      r.getString(0) -> (wms.get(sn) match {
-        case Some(prev) => SeriesRange(prev.timeFirst, math.max(prev.timeLast, mx))
-        case None       => SeriesRange(mn, mx)
-      })
-    }.toMap)
-    toWrite.foreach { r =>
-      val p = pendingPath(db, m, r.getString(0))
-      fs(p).delete(p, false)
+      // a fully-replayed / fully-discarded batch writes nothing
+      val toWrite = stats.filter(_.getLong(5) > 0)
+      if (toWrite.nonEmpty) {
+        // the write job, bracketed by the append-intent markers (removed after
+        // the watermarks advance). A one-series write stages under its own
+        // series directory (partitioned by bucket below it), so different-series
+        // writers never share a `_temporary/` dir — concurrent same-directory
+        // jobs corrupt each other's staging. Readers see the same layout either
+        // way (`series=` is a partition directory under basePath).
+        toWrite.foreach(r =>
+          atomicWrite(pendingPath(db, m, r.getString(0)), """{"version":1}"""))
+        val (target, parts) =
+          if (toWrite.length == 1)
+            (seriesDir(db, m, toWrite.head.getString(0)), Seq(BucketCol))
+          else (dataDir(db, m), Seq(SeriesCol, BucketCol))
+        // Small batches hash-partition on the partition columns: each bucket
+        // lands whole in one task → one sorted file per bucket, and no extra
+        // pass over the data (repartitionByRange samples the batch to compute
+        // range bounds — a whole job the common streaming micro-batch doesn't
+        // need). Huge batches pay that sampling pass so a hot bucket can split
+        // into several disjoint-range sorted files instead of one giant task.
+        // Full parallelism even for small batches: per-bucket FILE CREATION is
+        // the fixed cost (one parquet writer per bucket dir), so buckets must
+        // spread across tasks; empty partitions are ~free.
+        val par = spark.sparkContext.defaultParallelism
+        val keys = (parts :+ TimeCol).map(col)
+        // floor-division bucket id in exact integer arithmetic (`div` truncates
+        // toward zero and double-based floor() loses precision above 2^53 —
+        // time_ns at ns scale exceeds that). pmod is non-negative, so
+        // (t - pmod(t, w)) is exactly divisible and the quotient is floorDiv —
+        // matching Math.floorDiv on every read/truncate/delete path.
+        val rows = tagged.filter(keep)
+          .withColumn(BucketCol,
+            expr(s"($TimeCol - pmod($TimeCol, ${bucketWidth}L)) div ${bucketWidth}L"))
+          .select(keys ++ schema.fields.map(f => col(f.name)): _*)
+        val arranged =
+          if (toWrite.map(_.getLong(5)).sum <= Tsdb.RangeWriteThreshold)
+            rows.repartition(par, parts.map(col): _*)
+          else rows.repartitionByRange(par, keys: _*)
+        // sorted by time within each file: parquet row-group min/max stats get
+        // their pruning power
+        arranged.sortWithinPartitions(keys: _*)
+          .write.mode("append").partitionBy(parts: _*)
+          .parquet(target.toString)
+        // ONE watermark commit for the whole batch (one delta file however many
+        // series landed), then the intent markers drop
+        wmStore(db, m).update(toWrite.map { r =>
+          val sn = r.getString(0)
+          val (mn, mx) = (r.getLong(6), r.getLong(7))
+          sn -> (wms.get(sn) match {
+            case Some(prev) => SeriesRange(prev.timeFirst, math.max(prev.timeLast, mx))
+            case None       => SeriesRange(mn, mx)
+          })
+        }.toMap)
+        toWrite.foreach { r =>
+          val p = pendingPath(db, m, r.getString(0))
+          fs(p).delete(p, false)
+        }
+      }
+      stats.map(r =>
+        r.getString(0) -> WriteResult(r.getLong(5), r.getLong(8), r.getLong(9))).toMap
     }
-    results
   }
 
-  /** Batch form of `verifyOverlap`: one full-outer join on (series, time_ns)
-    * checks EVERY replayed tail at once — series-pruned via an IN filter on
-    * the partition column, bucket-pruned to the overlapping range, and per
-    * series the stored `[ov_min, time_last]` window must be covered exactly
-    * with bitwise-identical field bytes. */
+  /** Per-series `(lo, hi)` bounds as two columns of the row's series, looked
+    * up without a Spark job: the table rides a broadcast variable into a UDF
+    * (a broadcast JOIN of a local relation launches a job in every query
+    * that uses it). NULL for a series the table lacks. The broadcast is
+    * released when `body` returns. */
+  private def withSeriesBounds[A](table: Map[String, (Long, Long)])(
+      body: (Column, Column) => A): A = {
+    val bc = spark.sparkContext.broadcast(table)
+    try {
+      val lo = udf((s: String) => bc.value.get(s).map(_._1))
+      val hi = udf((s: String) => bc.value.get(s).map(_._2))
+      body(lo(col(SeriesCol)), hi(col(SeriesCol)))
+    } finally bc.destroy()
+  }
+
+  /** Bitwise comparison of the replayed tails against storage: one
+    * full-outer join on (series, time_ns) checks EVERY replayed series at
+    * once over its stored `[ov_min, time_last]` window, read from the
+    * admitted bucket directories only. Any row present on one side only, or
+    * any field whose raw bits differ, rejects the write (reference memcmp of
+    * the raw chunk bytes, src/libtsdb/wal.cc:104,116). */
   private def verifyOverlapBatch(db: String, m: String, schema: MeasurementSchema,
                                  batchOverlap: DataFrame,
-                                 ranges: Seq[(String, Long, Long)]): Unit = {
-    import spark.implicits._
-    val names = ranges.map(_._1)
-    val b0 = ranges.map(r => Math.floorDiv(r._2, bucketWidth)).min
-    val b1 = ranges.map(r => Math.floorDiv(r._3, bucketWidth)).max
-    val rdf = broadcast(ranges.toDF(SeriesCol, "_vmin", "_vmax"))
-    val stored = readMeasurement(db, m, schema)
-      .filter(col(SeriesCol).isin(names: _*) && col(BucketCol).between(b0, b1))
-      .join(rdf, SeriesCol)
-      .filter(col(TimeCol).between(col("_vmin"), col("_vmax")))
+                                 ranges: Map[String, (Long, Long)]): Unit = {
     def bits(df: DataFrame, prefix: String): DataFrame =
       df.select(col(SeriesCol) +: col(TimeCol) +:
         schema.fields.map(f => GraftFunctions.bitwiseComparable(col(f.name), f.ftype.spark)
           .as(s"$prefix${f.name}")) :+ lit(true).as(s"${prefix}present"): _*)
-    val joined = bits(stored, "s_")
+    val joined = bits(seriesData(db, m, schema, ranges), "s_")
       .join(bits(batchOverlap, "w_"), Seq(SeriesCol, TimeCol), "full_outer")
     val bad = joined.filter(
         col("s_present").isNull || col("w_present").isNull ||
@@ -461,72 +407,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     if (bad.nonEmpty)
       throw new OverwriteMismatchException(
         s"$db/$m: replayed tail differs from storage — " +
-          bad.map(r => s"${r.getString(0)}: ${r.getLong(1)} points").mkString("; "))
-  }
-
-  /** Bitwise comparison of the overlap region against storage: a full-outer
-    * join on `time_ns` over the (bucket-pruned) stored tail. Any row present
-    * on one side only, or any field whose raw bits differ, rejects the write
-    * (reference memcmp of the raw chunk bytes, src/libtsdb/wal.cc:104,116). */
-  private def verifyOverlap(db: String, m: String, series: String,
-                            schema: MeasurementSchema, overlap: DataFrame,
-                            ovMin: Long, tl: Long, ovN: Long): Unit = {
-    val stored = seriesData(db, m, series, schema, ovMin, tl)
-    def bits(df: DataFrame, prefix: String): DataFrame =
-      df.select(col(TimeCol) +:
-        schema.fields.map(f => GraftFunctions.bitwiseComparable(col(f.name), f.ftype.spark)
-          .as(s"$prefix${f.name}")) :+ lit(true).as(s"${prefix}present"): _*)
-    val joined = bits(stored, "s_").join(bits(overlap, "w_"), Seq(TimeCol), "full_outer")
-    val bad = joined.filter(
-      col("s_present").isNull || col("w_present").isNull ||
-      schema.fields.map(f => !(col(s"s_${f.name}") <=> col(s"w_${f.name}")))
-        .reduceOption(_ || _).getOrElse(lit(false))).count()
-    if (bad > 0)
-      throw new OverwriteMismatchException(
-        s"$db/$m/$series: $bad of $ovN overlapping points differ from storage in [$ovMin,$tl]")
-  }
-
-  /** Physical append: bucket-derived partition, range-partitioned so each
-    * task owns contiguous buckets, rows sorted by time within files (gives
-    * parquet row-group min/max stats their pruning power).
-    *
-    * Each write targets ITS OWN `series=<s>/` directory (partitioned by
-    * bucket below it) rather than partitionBy(series, bucket) on the shared
-    * root: concurrent same-directory jobs share one `_temporary/` staging
-    * dir and corrupt each other, while per-series directories make
-    * DIFFERENT-series writes safely concurrent — the engine contract is
-    * single-writer-per-SERIES, and series are independent
-    * (reference doc/LOCKING.txt:3-8). Readers see the same layout either
-    * way (`series=` is a partition directory under basePath). */
-  private def appendSorted(db: String, m: String, series: String, newPts: DataFrame,
-                           cnt: Long): Long = {
-    // floor-division bucket id in exact integer arithmetic (`div` truncates
-    // toward zero and double-based floor() loses precision above 2^53 —
-    // time_ns at ns scale exceeds that). pmod is non-negative, so
-    // (t - pmod(t, w)) is exactly divisible and the quotient is floorDiv —
-    // matching Math.floorDiv on every read/truncate/delete path.
-    val withBucket = newPts
-      .withColumn(BucketCol,
-        expr(s"($TimeCol - pmod($TimeCol, ${bucketWidth}L)) div ${bucketWidth}L"))
-    // Small batches hash-partition on bucket: each bucket lands whole in one
-    // task → one sorted file per bucket, and no extra pass over the data
-    // (repartitionByRange samples the batch to compute range bounds — a
-    // whole job the common streaming micro-batch doesn't need). Huge batches
-    // pay that sampling pass so a hot bucket can split into several
-    // disjoint-range sorted files instead of one giant task.
-    val par = spark.sparkContext.defaultParallelism
-    val arranged =
-      if (cnt <= Tsdb.RangeWriteThreshold)
-        // full parallelism even for small batches: per-bucket FILE CREATION
-        // is the fixed cost (one parquet writer per bucket dir), so buckets
-        // must spread across tasks; empty partitions are ~free
-        withBucket.repartition(par, col(BucketCol))
-      else withBucket.repartitionByRange(par, col(BucketCol), col(TimeCol))
-    arranged
-      .sortWithinPartitions(BucketCol, TimeCol)
-      .write.mode("append").partitionBy(BucketCol)
-      .parquet(seriesDir(db, m, series).toString)
-    cnt
+          bad.map { r =>
+            val (lo, hi) = ranges(r.getString(0))
+            s"${r.getString(0)}: ${r.getLong(1)} points in [$lo,$hi]"
+          }.mkString("; "))
   }
 
   /** Remove stored rows with `time_ns > tl` (orphans of a crashed append —
@@ -582,8 +466,9 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * (old dir → trash, new dir → live, trash dropped last) and
     * crash-recoverable: a bucket can never be lost because its old files
     * are not deleted until its new files are in place — `recoverCompact`
-    * restores any bucket caught mid-swap. Contract: same single writer per
-    * series as writePoints (no append may run concurrently).
+    * restores any bucket caught mid-swap. Contract: a one-series writer
+    * (see the class doc) — no append to THIS series may run concurrently;
+    * writers of other series may.
     *
     * @return number of buckets rewritten */
   def compact(db: String, m: String, series: String): Long = {
@@ -661,7 +546,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     if (t < wm.timeFirst) return // nothing to delete
-    val surviving = seriesData(db, m, series, schema, t + 1, wm.timeLast)
+    val surviving = seriesData(db, m, schema, Map(series -> (t + 1, wm.timeLast)))
       .agg(min(TimeCol)).head()
     val newFirst = if (surviving.isNullAt(0)) t + 1 else surviving.getLong(0)
     wmStore(db, m).update(Map(series -> SeriesRange(newFirst, wm.timeLast)))
@@ -747,45 +632,60 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   // ---------------------------------------------------------------- read
 
-  /** One series' stored points in `[t0, t1]`, bucket-pruned, NOT watermark
-    * clamped (internal: overlap verify + delete need raw storage). */
-  private def seriesData(db: String, m: String, series: String,
-                         schema: MeasurementSchema, t0: Long, t1: Long): DataFrame = {
-    val (b0, b1) = (Math.floorDiv(t0, bucketWidth), Math.floorDiv(t1, bucketWidth))
+  /** Stored points of each asked series in its own `[t0, t1]`,
+    * bucket-pruned, NOT watermark clamped (internal: overlap verify, delete
+    * and the one-series reads need raw storage). */
+  private def seriesData(db: String, m: String, schema: MeasurementSchema,
+                         ranges: Map[String, (Long, Long)]): DataFrame = {
+    def buckets(r: (Long, Long)) =
+      (Math.floorDiv(r._1, bucketWidth), Math.floorDiv(r._2, bucketWidth))
     // Open ONLY the admitted bucket directories, like the reference's
     // per-series chunk index (src/libtsdb/index read path): a whole-tree
     // spark.read.parquet(dir) pays partition DISCOVERY over every
     // series=/bucket= directory of the measurement — at 10× the horizon
     // that listing alone cost more than the pruned scan (ScaleBench caught
-    // engine_count at 23× wall for 10× data). Listing the ONE series dir
+    // engine_count at 23× wall for 10× data). Listing each asked series dir
     // bounds discovery at that series' bucket count, and the explicit leaf
-    // paths bound it at the admitted buckets.
+    // paths bound it at the admitted buckets (Spark still lists more than 32
+    // paths with a job of its own, so a read spanning that many buckets pays
+    // one).
     val dir = dataDir(db, m)
-    val sdir = seriesDir(db, m, series)
     val fsys = fs(dir)
     val bpfx = s"$BucketCol="
-    val paths =
-      if (!fsys.exists(sdir)) Array.empty[String]
-      else fsys.listStatus(sdir).flatMap { st =>
+    val paths = ranges.toSeq.flatMap { case (series, r) =>
+      val (b0, b1) = buckets(r)
+      val sdir = seriesDir(db, m, series)
+      if (!fsys.exists(sdir)) Nil
+      else fsys.listStatus(sdir).toSeq.flatMap { st =>
         val n = st.getPath.getName
         if (!n.startsWith(bpfx)) None
         else scala.util.Try(n.substring(bpfx.length).toLong).toOption
           .filter(b => b >= b0 && b <= b1)
           .map(_ => st.getPath.toString)
       }
+    }
     val raw =
       if (paths.isEmpty)
         spark.createDataFrame(java.util.Collections.emptyList[Row](),
           readStructOf(schema))
       else
         spark.read.option("basePath", dir.toString).schema(readStructOf(schema))
-          .parquet(paths.toIndexedSeq: _*)
-    // same predicate as the whole-tree form: series/bucket are redundant
-    // with the path selection but keep the audited PartitionFilters shape
-    // (TsdbEngineSpec pins them) and guard against a stray path
-    raw.filter(col(SeriesCol) === series &&
-               col(BucketCol).between(b0, b1) &&
-               col(TimeCol).between(t0, t1))
+          .parquet(paths: _*)
+    // constant bounds over all asked series: series/bucket are redundant with
+    // the path selection but keep the audited PartitionFilters shape
+    // (TsdbEngineSpec pins them) and guard against a stray path; the time
+    // bounds reach the parquet reader. With one series they are exact.
+    val (t0, t1) = (ranges.values.map(_._1).min, ranges.values.map(_._2).max)
+    val (b0, b1) = buckets((t0, t1))
+    val bounded = raw.filter(col(SeriesCol).isin(ranges.keys.toSeq: _*) &&
+                             col(BucketCol).between(b0, b1) &&
+                             col(TimeCol).between(t0, t1))
+    if (ranges.size == 1) bounded
+    else { // each series' own range: a lookup over the asked-for map
+      val lo = udf((s: String) => ranges.get(s).map(_._1))
+      val hi = udf((s: String) => ranges.get(s).map(_._2))
+      bounded.filter(col(TimeCol).between(lo(col(SeriesCol)), hi(col(SeriesCol))))
+    }
   }
 
   /** Visible points of EVERY series in `[t0, t1]` — the multi-series
@@ -883,7 +783,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
     if (c0 > c1) return readMeasurement(db, m, schema).limit(0)
-    seriesData(db, m, series, schema, c0, c1)
+    seriesData(db, m, schema, Map(series -> (c0, c1)))
   }
 
   /** SELECT fields FROM db/m/series WHERE t0 <= time <= t1 [LIMIT n | LAST n]
@@ -1262,7 +1162,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
     if (c0 > c1) return proj(readMeasurement(db, m, schema).limit(0))
-    val base = seriesData(db, m, series, schema, c0, c1)
+    val base = seriesData(db, m, schema, Map(series -> (c0, c1)))
     val ip = vindexDir(db, m, field)
     if (!fs(ip).exists(ip)) return proj(base)
     val (b0, b1) = (Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth))
@@ -1398,62 +1298,12 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def downsample(db: String, m: String, series: String, field: String,
                  t0: Long, t1: Long, windowWidth: Long): String = {
     val rollup = Rollups.name(m, field, windowWidth)
-    migrateLegacyRollup(db, m, field, windowWidth)
     createMeasurement(db, rollup, Rollups.Schema) // idempotent iff same schema
     val agg = sumWindows(db, m, series, field, t0, t1, windowWidth)
       .select(col("window_start").as(TimeCol),
         col("sum_value"), col("min_value"), col("max_value"), col("n"))
     writePoints(db, rollup, series, agg)
     rollup
-  }
-
-  /** One-time upgrade of a rollup measurement written under the pre-field
-    * naming `<m>__rollup_<w>` (before the field joined the identity —
-    * two fields' rollups collided on identical timestamps). The legacy name
-    * does not record WHICH field produced it, so the rename happens only
-    * when it is unambiguous: the parent schema has exactly one field and it
-    * is the one being downsampled. Otherwise this fails LOUDLY — silently
-    * creating a parallel measurement would leave readers of the legacy name
-    * on stale data (the watermark-migration counterpart for rollups). */
-  private def migrateLegacyRollup(db: String, m: String, field: String,
-                                  windowWidth: Long): Unit = {
-    val legacyName = s"${m}__rollup_$windowWidth"
-    val legacy = measPath(db, legacyName)
-    if (!fs(legacy).exists(legacy)) return
-    val parentFields = getSchema(db, m).fields.map(_.name)
-    if (parentFields == Seq(field)) {
-      val target = measPath(db, Rollups.name(m, field, windowWidth))
-      if (fs(target).exists(target))
-        throw new MeasurementExistsException(db, legacyName,
-          s"both legacy '$legacyName' and migrated '${target.getName}' exist; " +
-          "remove one manually")
-      // Hadoop rename reports most failures by RETURNING false, not
-      // throwing — proceeding would create exactly the silent parallel
-      // measurement this method exists to prevent
-      require(fs(legacy).rename(legacy, target),
-        s"migrating legacy rollup '$legacyName' -> '${target.getName}' failed")
-      wmStores.remove((db, legacyName))
-      wmStores.remove((db, target.getName))
-    } else {
-      // the ambiguity is WHICH field the legacy root belonged to — it can
-      // only affect a field still waiting for migration. A field whose
-      // correctly-named rollup already exists is unaffected (downsample
-      // recomputes its windows from the parent either way), so it may
-      // proceed; only fields without a migrated rollup stay blocked.
-      // Trade-off, consciously taken: if the legacy root actually belonged
-      // to THIS field and the parent raw data has since been retained
-      // away, the legacy root's historical windows stay stranded under the
-      // legacy name — recoverable any time by the same manual rename the
-      // error below prescribes. The alternative (blocking every field
-      // forever) was judged worse for the common case.
-      val target = measPath(db, Rollups.name(m, field, windowWidth))
-      if (fs(target).exists(target)) return
-      throw new MeasurementExistsException(db, legacyName,
-        s"legacy pre-field rollup '$legacyName' exists and measurement '$m' has " +
-        s"fields ${parentFields.mkString(",")} — cannot infer its source field; " +
-        s"rename it to '${m}__rollup_<field>_$windowWidth' (its actual source " +
-        "field) before downsampling")
-    }
   }
 
   // ---------------------------------------------------------------- paths/io
@@ -1488,33 +1338,8 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   private val wmStores =
     scala.collection.concurrent.TrieMap.empty[(String, String), WatermarkStore]
   private def wmStore(db: String, m: String): WatermarkStore =
-    wmStores.getOrElseUpdate((db, m), {
-      val store = new WatermarkStore(new Path(measPath(db, m), "_wm"), hconf)
-      migrateLegacyWatermarks(db, m, store)
-      store
-    })
-
-  /** One-time upgrade of a root written by the earlier per-series layout
-    * (`_meta/<series>.json`, one object per series): fold every legacy
-    * watermark into the table, then remove the files. Without this, opening
-    * an old root would silently show EMPTY measurements — and a subsequent
-    * append would duplicate stored points under a fresh watermark. Table
-    * entries win when both exist (the table is the newer store). */
-  private def migrateLegacyWatermarks(db: String, m: String,
-                                      store: WatermarkStore): Unit = {
-    val md = metaDir(db, m)
-    val f = fs(md)
-    if (!f.exists(md)) return
-    val legacy = f.listStatus(md).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(".json") && !p.getName.startsWith("."))
-    if (legacy.isEmpty) return
-    val entries = legacy.map { p =>
-      p.getName.stripSuffix(".json") -> SeriesRange.fromJson(readString(p))
-    }.toMap
-    val existing = store.load()
-    store.update(entries.filter { case (sn, _) => !existing.contains(sn) })
-    legacy.foreach(p => f.delete(p, false))
-  }
+    wmStores.getOrElseUpdate((db, m),
+      new WatermarkStore(new Path(measPath(db, m), "_wm"), hconf))
 
   private def validName(s: String, what: String): Unit =
     if (s == null || !s.matches("[A-Za-z0-9_.-]{1,123}") || s.startsWith("_") ||
@@ -1570,8 +1395,10 @@ object Tsdb {
   /** Constructor sentinel: adopt the persisted width (or the default when
     * creating a new root) rather than requesting a specific one. */
   val UseExistingWidth: Long = Long.MinValue
-  /** Batch size above which the append pays repartitionByRange's sampling
-    * pass to split hot buckets across tasks; below it, hash-on-bucket. */
+  /** New-point count of a write batch above which the append pays
+    * repartitionByRange's sampling pass to split hot buckets across tasks;
+    * at or below it, hash on the partition columns (bucket, or series and
+    * bucket). */
   val RangeWriteThreshold: Long = 32L * 1000 * 1000
   /** Hidden staging dirs of `compact` (leading dot: invisible to Spark's
     * file index, so readers never see half-written compaction output). */

@@ -671,7 +671,7 @@ object DedupOps {
     * groups expand through one equi-join (Hamming 0 by definition), verified
     * cross-fingerprint pairs through two joins sized by the output. (A 10×
     * scale run with adversarially duplicated fingerprints went 247× before
-    * this contraction, linear after — see LshDiag for the measurement.) */
+    * this contraction, linear after.) */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    bits: Int = 30, maxHamming: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)

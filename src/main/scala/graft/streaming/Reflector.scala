@@ -69,7 +69,9 @@ final class FaultInjectedRemote(underlying: ReflectorRemote) extends ReflectorRe
   * `writeBatch` (fixed job count whatever the series count) and cuts the
   * local watermarks in ONE `deleteUpToBatch` survivor pass — the reference
   * flushes per series because it is single-node (reflector.cc:308-327).
-  * Contract: `flush()` is the exclusive writer of the spool measurement
+  * Contract: `flush()` writes many series at once, so under the engine's
+  * concurrency contract (a multi-series batch is the measurement's only
+  * writer, see `Tsdb`) it is the exclusive writer of the spool measurement
   * while it runs (the reference's series_total_lock, reflector.cc:312);
   * route concurrent `writePoints` calls through the same Reflector instance
   * or pause them across a flush.

@@ -11,19 +11,19 @@ import graft.engine.Tsdb
   *
   *  - the micro-batch checkpoint IS the WAL: a crash mid-batch replays that
   *    batch on restart (at-least-once delivery);
-  *  - `Tsdb.writePoints`' bitwise idempotent tail-overwrite (reference
+  *  - `Tsdb.writeBatch`'s bitwise idempotent tail-overwrite (reference
   *    wal.cc:87-246) turns the replay into a verified no-op, so storage is
   *    exactly-once without any sink-side transaction log;
   *  - a replayed batch whose bytes DIFFER from what was committed fails the
   *    write — the same corruption guard the reference's memcmp gives.
   *
-  * Scale posture: each micro-batch commits through `Tsdb.writeBatch` — ONE
-  * stats job, one distributed bitwise verify (only when a replayed tail
-  * exists), one `partitionBy(series, bucket)` write and one watermark delta,
-  * whatever the series count. The r1-r5 design dispatched `writePoints` per
-  * series (O(series) jobs per micro-batch — fine at 5 series, 10⁴ series →
-  * ~10⁴ job launches per batch); the batch path keeps per-series semantics
-  * while the job count stays constant.
+  * Scale posture: each micro-batch commits through ONE `Tsdb.writeBatch`,
+  * whose job count is fixed whatever the series count. A per-series
+  * `writePoints` loop would launch O(series) jobs per micro-batch (fine at
+  * 5 series, ~10⁴ job launches per batch at 10⁴ series); the batch keeps
+  * per-series semantics while the job count stays constant. A micro-batch
+  * holding several series makes the sink the measurement's only writer
+  * (the engine's concurrency contract, see `Tsdb`).
   */
 object StreamingIngest {
 

@@ -254,59 +254,6 @@ class TsdbEngineSpec extends SparkTestBase {
     assert(q == 5.5)
   }
 
-  test("legacy pre-field rollup migrates when unambiguous, fails loudly otherwise") {
-    val root = tmpDir("tsdb-legacy-")
-    val conf = new org.apache.hadoop.conf.Configuration()
-    def rename(from: String, to: String): Unit = {
-      val f = new org.apache.hadoop.fs.Path(root, from)
-      f.getFileSystem(conf).rename(f, new org.apache.hadoop.fs.Path(root, to))
-    }
-    val t = new Tsdb(spark, root, requestedBucketWidth = 100L)
-    t.createDatabase("db1")
-    // ONE field: the legacy rollup can only have come from it -> auto-rename
-    t.createMeasurement("db1", "solo", MeasurementSchema(Seq(Field("v", FieldType.F64))))
-    t.writePoints("db1", "solo", "s1",
-      Seq((100L, 1.5), (210L, 2.5)).toDF("time_ns", "v"))
-    t.downsample("db1", "solo", "s1", "v", 100L, 299L, 100L)
-    rename("db1/solo__rollup_v_100", "db1/solo__rollup_100") // fake an old root
-    val t2 = new Tsdb(spark, root, requestedBucketWidth = 100L)
-    assert(t2.downsample("db1", "solo", "s1", "v", 100L, 299L, 100L)
-      == "solo__rollup_v_100")
-    assert(t2.listMeasurements("db1").filter(_.startsWith("solo__"))
-      == Seq("solo__rollup_v_100"))
-    val got = t2.select("db1", "solo__rollup_v_100", "s1", Nil, 0L, 1000L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got == Seq((100L, 1.5), (200L, 2.5)))
-    // TWO fields: the source field is unrecoverable -> loud failure, no
-    // silent parallel measurement
-    t2.createMeasurement("db1", "multi", MeasurementSchema(Seq(
-      Field("v", FieldType.F64), Field("g", FieldType.F64))))
-    t2.writePoints("db1", "multi", "s1",
-      Seq((100L, 1.0, 2.0)).toDF("time_ns", "v", "g"))
-    t2.downsample("db1", "multi", "s1", "v", 100L, 199L, 100L)
-    rename("db1/multi__rollup_v_100", "db1/multi__rollup_100")
-    val t3 = new Tsdb(spark, root, requestedBucketWidth = 100L)
-    val e = intercept[MeasurementExistsException](
-      t3.downsample("db1", "multi", "s1", "v", 100L, 199L, 100L))
-    assert(e.getMessage.contains("cannot infer"))
-    // ...but a field whose MIGRATED rollup already exists is unaffected by
-    // the ambiguity (its windows recompute from the parent either way):
-    // downsampling g first (blocked), then after g's rollup exists under
-    // the new naming the legacy root no longer blocks g
-    intercept[MeasurementExistsException](
-      t3.downsample("db1", "multi", "s1", "g", 100L, 199L, 100L))
-    rename("db1/multi__rollup_100", "db1/multi__rollup_keep_100") // park it
-    t3.downsample("db1", "multi", "s1", "g", 100L, 199L, 100L)
-    rename("db1/multi__rollup_keep_100", "db1/multi__rollup_100") // back
-    val t4 = new Tsdb(spark, root, requestedBucketWidth = 100L)
-    // g's migrated rollup exists -> proceeds despite the legacy root;
-    // v still has no migrated rollup -> still blocked
-    assert(t4.downsample("db1", "multi", "s1", "g", 100L, 199L, 100L)
-      == "multi__rollup_g_100")
-    intercept[MeasurementExistsException](
-      t4.downsample("db1", "multi", "s1", "v", 100L, 199L, 100L))
-  }
-
   test("listActiveSeries counts visible points per series") {
     val t = mkTsdb()
     freshSeries(t, baseRows: _*)
@@ -794,36 +741,6 @@ class TsdbEngineSpec extends SparkTestBase {
     intercept[InvalidSchemaException](
       t.selectValueRange("db1", "m1", "s1", "nope", 0.0, 1.0, 0L, 1000L))
     intercept[InvalidSchemaException](t.buildValueIndex("db1", "m1", "nope"))
-  }
-
-  test("legacy per-series watermark files migrate into the table on open") {
-    val t = mkTsdb()
-    freshSeries(t, baseRows: _*)
-    // rewrite the root into the r1-r5 layout: per-series _meta/<s>.json,
-    // no _wm/ table
-    val root = java.nio.file.Paths.get(t.rootDir)
-    val wm = t.seriesRange("db1", "m1", "s1").get
-    def rmAll(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
-    rmAll(root.resolve("db1/m1/_wm"))
-    java.nio.file.Files.writeString(
-      root.resolve("db1/m1/_meta/s1.json"), wm.toJson)
-    // a FRESH Tsdb (no cached store) must see the data, not an empty
-    // measurement — and a re-append must not duplicate stored points
-    val t2 = new Tsdb(spark, t.rootDir)
-    assert(t2.listSeries("db1", "m1") == Seq("s1"))
-    assert(t2.seriesRange("db1", "m1", "s1").contains(wm))
-    val res = t2.writePoints("db1", "m1", "s1",
-      pts((420L, Some(7L), Some(7.5), Some(7.0f)))) // replay of the tail
-    assert(res.written == 0 && res.overwriteVerified == 1)
-    assert(t2.select("db1", "m1", "s1", Nil, 0L, 1000L).count() == baseRows.size)
-    // the legacy file is gone; the table owns the watermark now
-    assert(!java.nio.file.Files.exists(root.resolve("db1/m1/_meta/s1.json")))
   }
 
   test("watermark table merges concurrent same-version snapshots and deltas") {

@@ -5,6 +5,8 @@ given `bench:<query>` description — including jobs from other threads
 Shows inter-job idle (driver-only) segments of the merged job intervals.
 
 Usage: timeline_eventlog.py <eventlog file or dir> <query> [pad_ms]
+
+pad_ms: idle gaps longer than this many ms are listed (default 100).
 """
 import json, sys, os
 from collections import defaultdict
@@ -23,7 +25,12 @@ def iter_events(path):
 
 
 def main():
+    if len(sys.argv) < 3:
+        print(next(l for l in __doc__.splitlines() if l.startswith("Usage:")),
+              file=sys.stderr)
+        sys.exit(2)
     path, q = sys.argv[1], sys.argv[2]
+    pad_ms = int(sys.argv[3]) if len(sys.argv) > 3 else 100
     jobs = {}
     for ev in iter_events(path):
         e = ev.get("Event")
@@ -47,7 +54,13 @@ def main():
     w1 = max(j["t1"] for _, j in tagged)
     window = [(jid, j) for jid, j in sorted(jobs.items())
               if j["t1"] and j["t1"] >= w0 and j["t0"] <= w1]
+    # a job with no JobEnd (truncated log) has no interval to merge
+    unfinished = sum(1 for j in jobs.values()
+                     if not j["t1"] and w0 <= j["t0"] <= w1)
     print(f"window {w1-w0:,} ms, {len(window)} jobs (tagged {len(tagged)})")
+    if unfinished:
+        print(f"left out {unfinished} unfinished jobs (no JobEnd) "
+              "that started in the window")
     # merged busy intervals -> idle gaps
     ivs = sorted((j["t0"], j["t1"]) for _, j in window)
     merged = []
@@ -60,7 +73,7 @@ def main():
     print(f"job-busy {busy/1e3:.2f}s  idle-in-window {(w1-w0-busy)/1e3:.2f}s")
     prev_end = None
     for a, b in merged:
-        if prev_end is not None and a - prev_end > 100:
+        if prev_end is not None and a - prev_end > pad_ms:
             print(f"  --- idle {a-prev_end:6d} ms ---")
         prev_end = b
     # per-description aggregate inside the window
