@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
@@ -54,6 +56,12 @@ final case class WriteResult(written: Long, discarded: Long, overwriteVerified: 
   * multi-series batch is the measurement's only writer. Readers always see
   * a consistent snapshot because parquet files are immutable and the
   * watermark swap is atomic (rename).
+  *
+  * Reads: each read lists, on the driver, the directories of the series it
+  * asks for and, under them, only the bucket directories its time range
+  * admits. Spark is handed those leaf files in a pre-filled file index and
+  * lists nothing itself, so a read spanning many buckets launches no
+  * listing job of its own.
   *
   * Metadata scale: watermarks live in ONE log-structured table per
   * measurement ([[WatermarkStore]]): every update — single-series append or
@@ -397,7 +405,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       df.select(col(SeriesCol) +: col(TimeCol) +:
         schema.fields.map(f => GraftFunctions.bitwiseComparable(col(f.name), f.ftype.spark)
           .as(s"$prefix${f.name}")) :+ lit(true).as(s"${prefix}present"): _*)
-    val joined = bits(seriesData(db, m, schema, ranges), "s_")
+    val joined = bits(scan(db, m, schema, ranges), "s_")
       .join(bits(batchOverlap, "w_"), Seq(SeriesCol, TimeCol), "full_outer")
     val bad = joined.filter(
         col("s_present").isNull || col("w_present").isNull ||
@@ -423,26 +431,19 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
                             schema: MeasurementSchema, tl: Long): Unit = {
     val sdir = seriesDir(db, m, series)
     val f = fs(sdir)
-    if (!f.exists(sdir)) return
     val cutBucket = Math.floorDiv(tl, bucketWidth)
-    var boundaryExists = false
-    f.listStatus(sdir).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(s"$BucketCol=")) {
-        val b = name.stripPrefix(s"$BucketCol=").toLong
-        if (b > cutBucket) f.delete(st.getPath, true)
-        else if (b == cutBucket) boundaryExists = true
-      }
-    }
-    if (!boundaryExists) return
-    val bdir = new Path(sdir, s"$BucketCol=$cutBucket")
-    val bdf = spark.read.schema(schema.dataStruct).parquet(bdir.toString)
+    val dirs = bucketDirs(sdir)
+    dirs.foreach { case (b, d) => if (b > cutBucket) f.delete(d, true) }
+    val boundary = dirs.collectFirst { case (b, d) if b == cutBucket => d }
+    if (boundary.isEmpty) return
+    val bdir = boundary.get
+    val bdf = scan(db, m, schema, Seq(bdir -> f.listStatus(bdir)))
     // footer-stats-only job: cheap when the bucket is clean (the usual case)
     val mx = bdf.agg(max(TimeCol)).head()
     if (mx.isNullAt(0) || mx.getLong(0) <= tl) return
     val tmp = new Path(sdir, s".$BucketCol=$cutBucket.truncating")
     f.delete(tmp, true)
-    bdf.filter(col(TimeCol) <= tl)
+    bdf.filter(col(TimeCol) <= tl).select(schema.dataStruct.fieldNames.map(col): _*)
       .repartition(1).sortWithinPartitions(TimeCol)
       .write.mode("overwrite").parquet(tmp.toString)
     f.delete(bdir, true)
@@ -476,23 +477,18 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val sdir = seriesDir(db, m, series)
     val f = fs(sdir)
     recoverCompact(sdir)
-    if (!f.exists(sdir)) return 0L
-    val fragmented = f.listStatus(sdir).toSeq.filter { st =>
-      st.getPath.getName.startsWith(s"$BucketCol=") &&
-        f.listStatus(st.getPath).count(_.getPath.getName.endsWith(".parquet")) > 1
-    }.map(_.getPath.getName.stripPrefix(s"$BucketCol=").toLong)
+    val fragmented = bucketDirs(sdir).map { case (b, d) => (b, d, f.listStatus(d)) }
+      .filter(_._3.count(_.getPath.getName.endsWith(".parquet")) > 1)
     if (fragmented.isEmpty) return 0L
 
     val tmp = new Path(sdir, Tsdb.CompactTmp)
     val trash = new Path(sdir, Tsdb.CompactTrash)
     f.delete(tmp, true)
     f.delete(trash, true)
-    // one distributed rewrite of every fragmented bucket: the bucket IN-list
-    // prunes the scan to exactly those directories
-    spark.read.option("basePath", sdir.toString)
-      .schema(StructType(schema.dataStruct.fields.toSeq :+ StructField(BucketCol, LongType)))
-      .parquet(sdir.toString)
-      .filter(col(BucketCol).isin(fragmented: _*))
+    // one distributed rewrite of every fragmented bucket, read from exactly
+    // the leaf files listed above
+    scan(db, m, schema, fragmented.map { case (_, d, leaves) => d -> leaves })
+      .select(schema.dataStruct.fieldNames.map(col) :+ col(BucketCol): _*)
       .repartitionByRange(col(BucketCol), col(TimeCol))
       .sortWithinPartitions(BucketCol, TimeCol)
       .write.option("compression", "zstd").partitionBy(BucketCol)
@@ -501,11 +497,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     // is live, so a crash anywhere leaves the bucket recoverable
     f.mkdirs(trash)
     val fc = FileContext.getFileContext(sdir.toUri, hconf)
-    fragmented.foreach { b =>
-      val live = new Path(sdir, s"$BucketCol=$b")
+    fragmented.foreach { case (b, live, _) =>
       val next = new Path(tmp, s"$BucketCol=$b")
       if (f.exists(next)) { // empty buckets can't exist, but stay defensive
-        fc.rename(live, new Path(trash, s"$BucketCol=$b"), Options.Rename.OVERWRITE)
+        fc.rename(live, new Path(trash, live.getName), Options.Rename.OVERWRITE)
         fc.rename(next, live, Options.Rename.NONE)
       }
     }
@@ -540,37 +535,23 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * writes below it (src/libtsdb/delete.cc:10-162, 82-98). Buckets entirely
     * below the new watermark are physically dropped (partition drop — the
     * reference unlinks orphaned chunk files, delete.cc:119-148); the
-    * first partially-covered bucket is masked by the read-side clamp. */
+    * first partially-covered bucket is masked by the read-side clamp. A
+    * one-series [[deleteUpToBatch]]; `t = Long.MaxValue` is rejected (no
+    * `t+1` exists). */
   def deleteUpTo(db: String, m: String, series: String, t: Long): Unit = {
-    val schema = getSchema(db, m)
-    val wm = seriesRange(db, m, series)
-      .getOrElse(throw new NoSuchSeriesException(db, m, series))
-    if (t < wm.timeFirst) return // nothing to delete
-    val surviving = seriesData(db, m, schema, Map(series -> (t + 1, wm.timeLast)))
-      .agg(min(TimeCol)).head()
-    val newFirst = if (surviving.isNullAt(0)) t + 1 else surviving.getLong(0)
-    wmStore(db, m).update(Map(series -> SeriesRange(newFirst, wm.timeLast)))
-    // drop buckets fully below the watermark
-    val sdir = seriesDir(db, m, series)
-    val f = fs(sdir)
-    if (f.exists(sdir)) {
-      val cutBucket = Math.floorDiv(newFirst, bucketWidth)
-      f.listStatus(sdir).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith(s"$BucketCol=") &&
-            name.stripPrefix(s"$BucketCol=").toLong < cutBucket)
-          f.delete(st.getPath, true)
-      }
-    }
+    getSchema(db, m)
+    if (seriesRange(db, m, series).isEmpty) throw new NoSuchSeriesException(db, m, series)
+    deleteUpToBatch(db, m, Map(series -> t))
   }
 
   /** Retention sweep: `DELETE WHERE time_ns <= t` for EVERY series of the
     * measurement — the policy form of `deleteUpTo` (the reference only has
     * the per-series verb, src/libtsdb/delete.cc:10-162; a fleet applies the
-    * same horizon to thousands of series). One distributed aggregation finds
-    * every affected series' first surviving timestamp (the per-series path
-    * would launch one min() job per series); watermark advances and bucket
-    * drops then run per series on the driver, metadata-scale.
+    * same horizon to thousands of series). One distributed aggregation over
+    * the affected series' buckets at and above the cut finds every first
+    * surviving timestamp (the per-series path would launch one min() job
+    * per series); watermark advances and bucket drops then run per series
+    * on the driver, metadata-scale. `t = Long.MaxValue` is rejected.
     * @return the new `time_first` per affected series. */
   def applyRetention(db: String, m: String, t: Long): Map[String, Long] =
     deleteUpToBatch(db, m,
@@ -578,11 +559,16 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   /** Batched `deleteUpTo` with a PER-SERIES horizon — `applyRetention`'s
     * general form (one shared horizon is the policy case; the reflector
-    * flush cuts each series at its own flushed watermark). One distributed
-    * aggregation finds every affected series' first surviving timestamp;
-    * watermark advances and bucket drops then run per series on the driver,
-    * metadata-scale. @return the new `time_first` per affected series. */
+    * flush cuts each series at its own flushed watermark), and the one
+    * delete path. One distributed aggregation over each affected series'
+    * `(cut, time_last]` finds its first surviving timestamp; watermark
+    * advances and bucket drops then run per series on the driver,
+    * metadata-scale. A cut of `Long.MaxValue` is rejected before any
+    * watermark moves: `cut+1` would wrap to `Long.MinValue`.
+    * @return the new `time_first` per affected series. */
   def deleteUpToBatch(db: String, m: String, cuts: Map[String, Long]): Map[String, Long] = {
+    require(!cuts.values.exists(_ == Long.MaxValue),
+      s"$db/$m: cannot delete up to Long.MaxValue (no time_first above it)")
     val schema = getSchema(db, m)
     val wms = wmStore(db, m).load()
     val affected = cuts.toSeq.flatMap { case (sn, t) =>
@@ -590,188 +576,124 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       wms.get(sn).filter(r => t >= r.timeFirst).map(r => (sn, t, r))
     }
     if (affected.isEmpty) return Map.empty
-    import spark.implicits._
-    val wdf = broadcast(affected.map { case (sn, t, r) => (sn, t, r.timeLast) }
-      .toDF(SeriesCol, "_cut", "_tl"))
-    // survivors can only live in buckets at/above the lowest cut's bucket
-    // AND above the lowest cut itself — both predicates sit on the SCAN
-    // (partition prune + parquet row-group stats); the exact per-series cut
-    // applies after the broadcast join
-    val minCut = affected.map(_._2).min
-    val minBucket = Math.floorDiv(minCut + 1, bucketWidth)
-    val surv = readMeasurement(db, m, schema)
-      .filter(col(BucketCol) >= minBucket && col(TimeCol) > minCut)
-      .join(wdf, SeriesCol)
-      .filter(col(TimeCol) > col("_cut") &&
-              col(TimeCol) <= col("_tl")) // ignore crashed-append orphans
+    // survivors lie in (cut, time_last]: crashed-append orphans above
+    // time_last never count
+    val surv = scan(db, m, schema,
+        affected.map { case (sn, t, r) => sn -> (t + 1, r.timeLast) }.toMap)
       .groupBy(col(SeriesCol)).agg(min(TimeCol).as("mn"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val advanced = affected.map { case (sn, t, r) =>
       // none survive -> delete into the future
-      sn -> (surv.getOrElse(sn, t + 1), r.timeLast)
-    }
+      sn -> SeriesRange(surv.getOrElse(sn, t + 1), r.timeLast)
+    }.toMap
     // ONE watermark commit for every swept series, then the bucket drops
-    wmStore(db, m).update(advanced.map { case (sn, (nf, tl)) =>
-      sn -> SeriesRange(nf, tl)
-    }.toMap)
-    advanced.foreach { case (sn, (newFirst, _)) =>
+    wmStore(db, m).update(advanced)
+    advanced.foreach { case (sn, r) =>
+      val cutBucket = Math.floorDiv(r.timeFirst, bucketWidth)
       val sdir = seriesDir(db, m, sn)
-      val f = fs(sdir)
-      if (f.exists(sdir)) {
-        val cutBucket = Math.floorDiv(newFirst, bucketWidth)
-        f.listStatus(sdir).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith(s"$BucketCol=") &&
-              name.stripPrefix(s"$BucketCol=").toLong < cutBucket)
-            f.delete(st.getPath, true)
-        }
-      }
+      bucketDirs(sdir).foreach { case (b, d) => if (b < cutBucket) fs(sdir).delete(d, true) }
     }
-    advanced.map { case (sn, (nf, _)) => sn -> nf }.toMap
+    advanced.map { case (sn, r) => sn -> r.timeFirst }
   }
 
   // ---------------------------------------------------------------- read
 
-  /** Stored points of each asked series in its own `[t0, t1]`,
-    * bucket-pruned, NOT watermark clamped (internal: overlap verify, delete
-    * and the one-series reads need raw storage). */
-  private def seriesData(db: String, m: String, schema: MeasurementSchema,
-                         ranges: Map[String, (Long, Long)]): DataFrame = {
-    def buckets(r: (Long, Long)) =
-      (Math.floorDiv(r._1, bucketWidth), Math.floorDiv(r._2, bucketWidth))
-    // Open ONLY the admitted bucket directories, like the reference's
-    // per-series chunk index (src/libtsdb/index read path): a whole-tree
-    // spark.read.parquet(dir) pays partition DISCOVERY over every
-    // series=/bucket= directory of the measurement — at 10× the horizon
-    // that listing alone cost more than the pruned scan (ScaleBench caught
-    // engine_count at 23× wall for 10× data). Listing each asked series dir
-    // bounds discovery at that series' bucket count, and the explicit leaf
-    // paths bound it at the admitted buckets (Spark still lists more than 32
-    // paths with a job of its own, so a read spanning that many buckets pays
-    // one).
-    val dir = dataDir(db, m)
-    val fsys = fs(dir)
+  /** The `bucket=<b>` directories of one series directory with their bucket
+    * ids; none when the series has no data directory. The one parser of
+    * bucket directory names. */
+  private def bucketDirs(sdir: Path): Seq[(Long, Path)] = {
     val bpfx = s"$BucketCol="
-    val paths = ranges.toSeq.flatMap { case (series, r) =>
-      val (b0, b1) = buckets(r)
-      val sdir = seriesDir(db, m, series)
-      if (!fsys.exists(sdir)) Nil
-      else fsys.listStatus(sdir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith(bpfx)) None
-        else scala.util.Try(n.substring(bpfx.length).toLong).toOption
-          .filter(b => b >= b0 && b <= b1)
-          .map(_ => st.getPath.toString)
-      }
-    }
-    val raw =
-      if (paths.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          readStructOf(schema))
-      else
-        spark.read.option("basePath", dir.toString).schema(readStructOf(schema))
-          .parquet(paths: _*)
-    // constant bounds over all asked series: series/bucket are redundant with
-    // the path selection but keep the audited PartitionFilters shape
-    // (TsdbEngineSpec pins them) and guard against a stray path; the time
-    // bounds reach the parquet reader. With one series they are exact.
-    val (t0, t1) = (ranges.values.map(_._1).min, ranges.values.map(_._2).max)
-    val (b0, b1) = buckets((t0, t1))
-    val bounded = raw.filter(col(SeriesCol).isin(ranges.keys.toSeq: _*) &&
-                             col(BucketCol).between(b0, b1) &&
-                             col(TimeCol).between(t0, t1))
-    if (ranges.size == 1) bounded
-    else { // each series' own range: a lookup over the asked-for map
-      val lo = udf((s: String) => ranges.get(s).map(_._1))
-      val hi = udf((s: String) => ranges.get(s).map(_._2))
-      bounded.filter(col(TimeCol).between(lo(col(SeriesCol)), hi(col(SeriesCol))))
+    val listed =
+      try fs(sdir).listStatus(sdir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.flatMap { st =>
+      val n = st.getPath.getName
+      if (!st.isDirectory || !n.startsWith(bpfx)) None
+      else n.substring(bpfx.length).toLongOption.map(_ -> st.getPath)
     }
   }
 
-  /** Visible points of EVERY series in `[t0, t1]` — the multi-series
-    * analogue of [[seriesData]]: ONE measurement-dir listing + one bounded
-    * bucket listing per series whose watermark range intersects the ask,
-    * each clamped to that series' own visible range before bucket
-    * admission. This is the reference's per-series chunk-index walk
-    * (src/libtsdb/select_op.cc:50-59) generalized to S series; the
-    * whole-tree `spark.read.parquet(dataDir)` it replaces paid partition
-    * DISCOVERY over every series×bucket directory of the measurement —
-    * ScaleBench held the all-series window face at 5.4× wall for 10× data
-    * on that listing alone. Discovery here is S+1 driver-side listings
-    * bounded by the admitted buckets; the per-row watermark clamp rides the
-    * same broadcast join as [[visible]]. */
-  private def visibleRange(db: String, m: String,
-                           t0: Long, t1: Long): DataFrame = {
-    val schema = getSchema(db, m)
-    def empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), readStructOf(schema))
-    // per-series clamp: series whose visible range misses [t0,t1] never
-    // reach the filesystem at all
-    val clamped = wmStore(db, m).load().flatMap { case (sn, r) =>
-      val c0 = math.max(t0, r.timeFirst); val c1 = math.min(t1, r.timeLast)
-      if (c0 > c1) None else Some(sn -> (c0, c1))
+  /** Stored points under the given bucket directories, NOT watermark
+    * clamped, read from the leaf files the caller already listed: the file
+    * index gets them through a pre-filled status cache, so Spark lists
+    * nothing (past 32 paths its own listing is a job). Names starting with
+    * `_` or `.` are left out, as Spark's listing does. */
+  private def scan(db: String, m: String, schema: MeasurementSchema,
+                   leaves: Seq[(Path, Array[FileStatus])]): DataFrame = {
+    val files = leaves.map { case (d, ls) =>
+      d -> ls.filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+    }.filter(_._2.nonEmpty).toMap
+    if (files.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), readStructOf(schema))
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = files.get(p)
+      override def putLeafFiles(p: Path, ls: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
     }
-    val dir = dataDir(db, m)
-    val fsys = fs(dir)
-    if (clamped.isEmpty || !fsys.exists(dir)) return empty
-    val (spfx, bpfx) = (s"$SeriesCol=", s"$BucketCol=")
-    val paths = fsys.listStatus(dir).iterator.flatMap { st =>
-      val n = st.getPath.getName
-      if (!st.isDirectory || !n.startsWith(spfx)) Iterator.empty
-      else clamped.get(org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.unescapePathName(n.substring(spfx.length)))
-        .iterator.flatMap { case (c0, c1) =>
-          val (b0, b1) =
-            (Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth))
-          fsys.listStatus(st.getPath).iterator.flatMap { bst =>
-            val bn = bst.getPath.getName
-            if (!bn.startsWith(bpfx)) None
-            else scala.util.Try(bn.substring(bpfx.length).toLong).toOption
-              .filter(b => b >= b0 && b <= b1)
-              .map(_ => bst.getPath.toString)
-          }
-        }
-    }.toIndexedSeq
-    if (paths.isEmpty) return empty
-    val raw = spark.read.option("basePath", dir.toString)
-      .schema(readStructOf(schema)).parquet(paths: _*)
-    import spark.implicits._
-    val wdf = clamped.toSeq.map { case (s, (c0, c1)) => (s, c0, c1) }
-      .toDF(SeriesCol, "_c0", "_c1")
-    raw.filter(col(TimeCol).between(t0, t1)) // constant bounds → parquet pushdown
-      .join(broadcast(wdf), SeriesCol)
-      .filter(col(TimeCol) >= col("_c0") && col(TimeCol) <= col("_c1"))
-      .drop("_c0", "_c1")
+    val index = new InMemoryFileIndex(spark, files.keys.toSeq,
+      Map("basePath" -> dataDir(db, m).toString), Some(readStructOf(schema)), listed)
+    // every column nullable, as `spark.read` makes a given schema: the plans
+    // and the files that compaction writes back stay what they were
+    val data = StructType(schema.dataStruct.map(_.copy(nullable = true)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      data, None, new ParquetFileFormat, Map.empty)(spark))
   }
+
+  /** Stored points of each asked series in its own `[t0, t1]`, NOT
+    * watermark clamped: lists each asked series' directory and the bucket
+    * directories its range admits, then [[scan]]s them. Like the
+    * reference's per-series chunk index (select_op.cc:50-59), a read never
+    * discovers the rest of the measurement. Empty ranges are skipped. */
+  private def scan(db: String, m: String, schema: MeasurementSchema,
+                   ranges: Map[String, (Long, Long)]): DataFrame = {
+    def buckets(r: (Long, Long)) =
+      (Math.floorDiv(r._1, bucketWidth), Math.floorDiv(r._2, bucketWidth))
+    val asked = ranges.filter { case (_, (t0, t1)) => t0 <= t1 }
+    val raw = scan(db, m, schema, asked.toSeq.flatMap { case (series, r) =>
+      val (b0, b1) = buckets(r)
+      bucketDirs(seriesDir(db, m, series)).collect { case (b, d) if b >= b0 && b <= b1 => d }
+    }.map(d => d -> fs(d).listStatus(d)))
+    if (asked.isEmpty) return raw
+    // constant bounds over all asked series: the bucket bounds are redundant
+    // with the directory selection but keep the audited PartitionFilters
+    // shape (TsdbEngineSpec pins them); the time bounds reach the parquet
+    // reader. When every series asks the same range they are exact.
+    val (t0, t1) = (asked.values.map(_._1).min, asked.values.map(_._2).max)
+    val (b0, b1) = buckets((t0, t1))
+    val bounds = col(BucketCol).between(b0, b1) && col(TimeCol).between(t0, t1)
+    if (asked.size == 1) raw.filter(col(SeriesCol) === asked.head._1 && bounds)
+    else if (asked.values.toSet.size == 1) raw.filter(bounds)
+    else { // each series' own range: a lookup over the asked-for map, with
+      // no literal series list, so the plan does not grow with the series count
+      val lo = udf((s: String) => asked.get(s).map(_._1))
+      val hi = udf((s: String) => asked.get(s).map(_._2))
+      raw.filter(bounds && col(TimeCol).between(lo(col(SeriesCol)), hi(col(SeriesCol))))
+    }
+  }
+
+  /** Visible points of EVERY series in `[t0, t1]`: each series' range is
+    * clamped to its own watermark on the driver, so series whose visible
+    * range misses the ask never reach the filesystem, and bucket admission
+    * and the parquet pushdown see the clamped bounds. */
+  private def visibleRange(db: String, m: String, t0: Long, t1: Long): DataFrame =
+    scan(db, m, getSchema(db, m), wmStore(db, m).load().map { case (sn, r) =>
+      sn -> (math.max(t0, r.timeFirst), math.min(t1, r.timeLast))
+    })
 
   private def readStructOf(schema: MeasurementSchema): StructType =
     StructType(schema.dataStruct.fields.toSeq :+
       StructField(SeriesCol, StringType) :+ StructField(BucketCol, LongType))
 
-  private def readMeasurement(db: String, m: String, schema: MeasurementSchema): DataFrame = {
-    val dir = dataDir(db, m)
-    if (!fs(dir).exists(dir))
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        readStructOf(schema))
-    else
-      spark.read.option("basePath", dir.toString).schema(readStructOf(schema))
-        .parquet(dir.toString)
-  }
-
-  /** All VISIBLE points of a measurement: per-series clamp to
-    * `[time_first, time_last]` via a broadcast watermark join (reference
-    * read clamp src/libtsdb/select_op.cc:18-19). */
+  /** All VISIBLE points of a measurement: every series clamped to its own
+    * `[time_first, time_last]` (reference read clamp
+    * src/libtsdb/select_op.cc:18-19). Columns: series, time_ns, the fields,
+    * bucket. */
   def visible(db: String, m: String): DataFrame = {
-    val schema = getSchema(db, m)
-    val wms = wmStore(db, m).load()
-    val raw = readMeasurement(db, m, schema)
-    if (wms.isEmpty) return raw.limit(0)
-    import spark.implicits._
-    val wdf = wms.toSeq.map { case (s, r) => (s, r.timeFirst, r.timeLast) }
-      .toDF(SeriesCol, "_tf", "_tl")
-    raw.join(broadcast(wdf), SeriesCol)
-      .filter(col(TimeCol) >= col("_tf") && col(TimeCol) <= col("_tl"))
-      .drop("_tf", "_tl")
+    val df = visibleRange(db, m, Long.MinValue, Long.MaxValue)
+    df.select(col(SeriesCol) +: df.columns.filterNot(_ == SeriesCol).map(col): _*)
   }
 
   /** Visible points of ONE series in `[t0, t1]` — the range is clamped on
@@ -781,9 +703,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val schema = getSchema(db, m)
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
-    val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
-    if (c0 > c1) return readMeasurement(db, m, schema).limit(0)
-    seriesData(db, m, schema, Map(series -> (c0, c1)))
+    scan(db, m, schema, Map(series -> (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))))
   }
 
   /** SELECT fields FROM db/m/series WHERE t0 <= time <= t1 [LIMIT n | LAST n]
@@ -1013,6 +933,11 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   private def vindexDir(db: String, m: String, field: String) =
     new Path(measPath(db, m), s"_vindex/$field")
 
+  /** Every stored point of each watermarked series, whatever its range:
+    * the value index covers raw storage, not only the visible range. */
+  private def storedRanges(wms: Map[String, SeriesRange]): Map[String, (Long, Long)] =
+    wms.map { case (sn, _) => sn -> (Long.MinValue, Long.MaxValue) }
+
   /** Build (or rebuild) the per-(series, bucket) MIN/MAX sidecar for one
     * field — the engine's DATA-SKIPPING index for value predicates. The
     * reference's `index` file binary-searches TIME only
@@ -1050,7 +975,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     }
     val wdf = wms.toSeq.map { case (s, r) => (s, r.timeLast) }
       .toDF(SeriesCol, "tl_at_build")
-    val idx = readMeasurement(db, m, schema)
+    val idx = scan(db, m, schema, storedRanges(wms))
       .groupBy(col(SeriesCol), col(BucketCol))
       .agg(min(col(field)).as("vmin"), max(col(field)).as("vmax"))
       .join(broadcast(wdf), SeriesCol)
@@ -1102,7 +1027,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       .join(staleDf, SeriesCol)
     val keepOld = old.filter(col(BucketCol) < col("_stale_lo"))
       .select(col(SeriesCol), col(BucketCol), col("vmin"), col("vmax"))
-    val base = readMeasurement(db, m, schema)
+    val base = scan(db, m, schema, storedRanges(wms))
     // literal predicates so the scan prunes statically: indexed series
     // from their global minimum stale bucket up (refined per series by the
     // broadcast join), never-indexed series in full
@@ -1161,8 +1086,8 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
-    if (c0 > c1) return proj(readMeasurement(db, m, schema).limit(0))
-    val base = seriesData(db, m, schema, Map(series -> (c0, c1)))
+    val base = scan(db, m, schema, Map(series -> (c0, c1)))
+    if (c0 > c1) return proj(base)
     val ip = vindexDir(db, m, field)
     if (!fs(ip).exists(ip)) return proj(base)
     val (b0, b1) = (Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth))

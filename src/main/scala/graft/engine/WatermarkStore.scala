@@ -55,11 +55,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * never saw it: the straggler is absent from every merged-set, so it
   * still applies, and the next compaction folds it. Delta application uses
   * the same monotone merge, so a straggler applying after a snapshot that
-  * already folded a newer state of its series cannot rewind it. Snapshots
-  * written by pre-header versions of this class lack the merged-set;
-  * readers then fall back to the version filter alone for that directory
-  * (the old ≥3-writer caveat applies until the next compaction rewrites
-  * the snapshot with a header).
+  * already folded a newer state of its series cannot rewind it. A
+  * snapshot without the header is corrupt.
   *
   * All of the above assumes point-in-time-consistent directory LISTINGS
   * (POSIX, HDFS, and strongly-consistent object stores like current S3).
@@ -101,12 +98,9 @@ final class WatermarkStore(dir: Path, hconf: Configuration) {
       * live snapshot's merged-set names it — the straggler case: a writer
       * that listed long ago commits a low-versioned delta after a
       * compaction it was invisible to. `mergedOf` is the union of the live
-      * snapshots' headers, None when any live snapshot predates headers
-      * (then only the version filter is trustworthy). */
-    def liveDeltas(mergedOf: Option[Set[String]]): Seq[(Long, Path)] =
-      deltas.filter { case (v, p) =>
-        v >= snapVersion || mergedOf.exists(m => !m.contains(p.getName))
-      }
+      * snapshots' headers. */
+    def liveDeltas(mergedOf: Set[String]): Seq[(Long, Path)] =
+      deltas.filter { case (v, p) => v >= snapVersion || !mergedOf.contains(p.getName) }
   }
 
   private def list(): Listing = {
@@ -138,9 +132,7 @@ final class WatermarkStore(dir: Path, hconf: Configuration) {
     // IS the latest state, whatever order the snapshots merge in.
     val base = snaps.foldLeft(Map.empty[String, SeriesRange])(
       (acc, s) => mergeMonotone(acc, s._2))
-    // merged-set known only if EVERY live snapshot carries a header
-    val merged = if (snaps.forall(_._1.isDefined))
-      Some(snaps.flatMap(_._1.get).toSet) else None
+    val merged = snaps.flatMap(_._1).toSet
     // deltas stay latest-wins in version order (their entries are authored
     // by the series' single writer, so later versions subsume earlier) —
     // but the monotone merge is used here too: it is identical for ordered
@@ -265,15 +257,14 @@ object WatermarkStore {
     s"""{"merged":[$names]}""" + "\n" + encodeLines(m)
   }
 
-  /** (merged-set if the header is present — absent for pre-header
-    * snapshots — , decoded table). */
-  private[graft] def parseSnapshot(s: String): (Option[Set[String]], Map[String, SeriesRange]) =
+  /** (merged-set, decoded table); a body without the header is corrupt. */
+  private[graft] def parseSnapshot(s: String): (Set[String], Map[String, SeriesRange]) =
     s.linesIterator.toSeq match {
       case MergedRe(names) +: rest =>
         val set = if (names.isEmpty) Set.empty[String]
                   else names.split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSet
-        (Some(set), parseLines(rest.mkString("\n")))
-      case _ => (None, parseLines(s))
+        (set, parseLines(rest.mkString("\n")))
+      case _ => throw new InvalidSchemaException(s"watermark snapshot without header: ${s.take(80)}")
     }
 
   private[graft] def encodeLines(m: Map[String, SeriesRange]): String =

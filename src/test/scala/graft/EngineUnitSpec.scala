@@ -168,15 +168,20 @@ class EngineUnitSpec extends SparkTestBase {
     assert(loadMs < 1000, s"cold load took $loadMs ms")
   }
 
-  test("WatermarkStore snapshot header round-trips; headerless body is legacy") {
+  test("WatermarkStore snapshot header round-trips; headerless body is corrupt") {
     val m = Map("a" -> SeriesRange(1, 2), "b" -> SeriesRange(3, 4))
     val body = WatermarkStore.encodeSnapshot(Seq("delta-x", "snap-y"), m)
     val (merged, table) = WatermarkStore.parseSnapshot(body)
-    assert(merged.contains(Set("delta-x", "snap-y")) && table == m)
-    val (noHdr, legacyTable) = WatermarkStore.parseSnapshot(WatermarkStore.encodeLines(m))
-    assert(noHdr.isEmpty && legacyTable == m)
-    // empty merged list stays distinguishable from legacy
-    assert(WatermarkStore.parseSnapshot(WatermarkStore.encodeSnapshot(Nil, m))
-      ._1.contains(Set.empty[String]))
+    assert(merged == Set("delta-x", "snap-y") && table == m)
+    // an empty merged list is still a header
+    assert(WatermarkStore.parseSnapshot(WatermarkStore.encodeSnapshot(Nil, m)) == (Set.empty, m))
+    // a body of bare table lines has no merged-set to trust: corrupt
+    intercept[InvalidSchemaException](WatermarkStore.parseSnapshot(WatermarkStore.encodeLines(m)))
+    // and a store whose live snapshot lacks the header fails to load
+    val dir = wmDir()
+    val fs = dir.getFileSystem(hconf)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "snap-0000000000000003-0000000a.jsonl"))
+    out.write(WatermarkStore.encodeLines(m).getBytes("UTF-8")); out.close()
+    intercept[InvalidSchemaException](new WatermarkStore(dir, hconf).load())
   }
 }

@@ -192,6 +192,23 @@ class TsdbEngineSpec extends SparkTestBase {
       == Seq(950L))
   }
 
+  test("a delete up to Long.MaxValue is rejected and moves no watermark") {
+    // t+1 would wrap to Long.MinValue and move time_first backwards,
+    // making deleted points visible again
+    val t = new Tsdb(spark, tmpDir("tsdb-test-"), requestedBucketWidth = 1000L)
+    freshSeries(t, (0 until 30).map(i =>
+      (100L * i, Some(i.toLong), Some(i * 0.5), Some(i.toFloat))): _*)
+    t.deleteUpTo("db1", "m1", "s1", 1050L)
+    val range = t.seriesRange("db1", "m1", "s1")
+    assert(range.contains(SeriesRange(1100L, 2900L)))
+    def visibleCount = t.select("db1", "m1", "s1", Nil, 0L, 100000L).count()
+    assert(visibleCount == 19L)
+    intercept[IllegalArgumentException](t.applyRetention("db1", "m1", Long.MaxValue))
+    assert(t.seriesRange("db1", "m1", "s1") == range && visibleCount == 19L)
+    intercept[IllegalArgumentException](t.deleteUpTo("db1", "m1", "s1", Long.MaxValue))
+    assert(t.seriesRange("db1", "m1", "s1") == range && visibleCount == 19L)
+  }
+
   test("facade tare/difference/derivative/rate run over visible engine data") {
     val t = mkTsdb()
     freshSeries(t, baseRows: _*) // v: 100:1.5 150:N 199:3.25 210:-0.0 290:5.5 305:6.5 420:7.5
@@ -752,10 +769,11 @@ class TsdbEngineSpec extends SparkTestBase {
     val wmDir = java.nio.file.Paths.get(t.rootDir, "db1", "m1", "_wm")
     def line(s: String, tf: Long, tl: Long) =
       s"""{"series":"$s","time_first":$tf,"time_last":$tl}""" + "\n"
+    val header = """{"merged":[]}""" + "\n"
     java.nio.file.Files.writeString(wmDir.resolve("snap-0000000000000099-aaaaaaaa.jsonl"),
-      line("s1", 100L, 420L) + line("sA", 1L, 10L))
+      header + line("s1", 100L, 420L) + line("sA", 1L, 10L))
     java.nio.file.Files.writeString(wmDir.resolve("snap-0000000000000099-bbbbbbbb.jsonl"),
-      line("s1", 100L, 420L) + line("sB", 2L, 20L))
+      header + line("s1", 100L, 420L) + line("sB", 2L, 20L))
     java.nio.file.Files.writeString(wmDir.resolve("delta-0000000000000099-cccccccc.jsonl"),
       line("sC", 3L, 30L))
     val t2 = new Tsdb(spark, t.rootDir) // fresh store, no cache
