@@ -275,10 +275,6 @@ object Bench {
     val sf1Qs = sf1Results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val sf1Total = sf1Results.map(_._2).sum
-    // value-index decay observability (VERDICT r10 #4): reads that fell
-    // back to a full scan because the sidecar's stale span overflowed the
-    // IN-list cap — nonzero here means "run refreshValueIndex"
-    val staleFallbacks = graft.engine.Tsdb.valueIndexStaleFallbacks.get()
     // the totals + quality-metrics fields shared by the archived line and
     // the console summary
     val summary = s""""failed":$failed,""" +
@@ -288,7 +284,6 @@ object Bench {
       s""""emb_lsh_cand_ratio_tight":$ratioTight,""" +
       s""""ann_ivf_recall_clustered":$clRecall,""" +
       s""""ivf_list_skew_clustered":$clSkew,""" +
-      s""""vindex_stale_fallbacks":$staleFallbacks,""" +
       s""""winnow_density":$winnowDensity,""" +
       s""""sf1_total":$sf1Total,"sf1_nqueries":${sf1Results.size},""" +
       s""""sf1_failed":$sf1Failed"""

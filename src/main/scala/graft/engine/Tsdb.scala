@@ -74,9 +74,7 @@ final case class WriteResult(written: Long, discarded: Long, overwriteVerified: 
   * single-node analog.
   */
 final class Tsdb(val spark: SparkSession, val rootDir: String,
-                 requestedBucketWidth: Long = Tsdb.UseExistingWidth,
-                 maxPrunedBuckets: Int = Tsdb.DefaultMaxPrunedBuckets,
-                 autoRefreshValueIndex: Boolean = false) {
+                 requestedBucketWidth: Long = Tsdb.UseExistingWidth) {
   import MeasurementSchema.{BucketCol, SeriesCol, TimeCol}
 
   GraftFunctions.register(spark)
@@ -425,30 +423,30 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * invisible to readers because every read clamps to the watermark, but
     * they would collide with the re-append on replay). Whole buckets above
     * `tl` are dropped; a partially-affected boundary bucket is rewritten
-    * truncated (reference `replace_with_truncated`, root.cc:179-194). The
-    * procedure is idempotent: a crash mid-recovery just reruns it. */
+    * truncated (reference `replace_with_truncated`, root.cc:179-194)
+    * through `compact`'s per-bucket swap, so the bucket's committed points
+    * at or below `tl` survive a crash at any step. The procedure is
+    * idempotent: the intent marker outlives it, so a crash mid-recovery
+    * reruns it, first restoring a bucket caught mid-swap. */
   private def truncateAbove(db: String, m: String, series: String,
                             schema: MeasurementSchema, tl: Long): Unit = {
     val sdir = seriesDir(db, m, series)
     val f = fs(sdir)
+    recoverCompact(sdir)
     val cutBucket = Math.floorDiv(tl, bucketWidth)
     val dirs = bucketDirs(sdir)
     dirs.foreach { case (b, d) => if (b > cutBucket) f.delete(d, true) }
-    val boundary = dirs.collectFirst { case (b, d) if b == cutBucket => d }
+    val boundary = dirs.filter(_._1 == cutBucket)
     if (boundary.isEmpty) return
-    val bdir = boundary.get
-    val bdf = scan(db, m, schema, Seq(bdir -> f.listStatus(bdir)))
+    val bdf = scan(db, m, schema, boundary.map { case (_, d) => d -> f.listStatus(d) })
     // footer-stats-only job: cheap when the bucket is clean (the usual case)
     val mx = bdf.agg(max(TimeCol)).head()
     if (mx.isNullAt(0) || mx.getLong(0) <= tl) return
-    val tmp = new Path(sdir, s".$BucketCol=$cutBucket.truncating")
-    f.delete(tmp, true)
-    bdf.filter(col(TimeCol) <= tl).select(schema.dataStruct.fieldNames.map(col): _*)
-      .repartition(1).sortWithinPartitions(TimeCol)
-      .write.mode("overwrite").parquet(tmp.toString)
-    f.delete(bdir, true)
-    val fc = FileContext.getFileContext(bdir.toUri, hconf)
-    fc.rename(tmp, bdir, Options.Rename.OVERWRITE)
+    swapBuckets(sdir, boundary) { tmp =>
+      bdf.filter(col(TimeCol) <= tl).select(schema.dataStruct.fieldNames.map(col): _*)
+        .repartition(1).sortWithinPartitions(TimeCol)
+        .write.parquet(new Path(tmp, s"$BucketCol=$cutBucket").toString)
+    }
   }
 
   // ---------------------------------------------------------------- compact
@@ -463,13 +461,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     *
     * One distributed job rewrites ALL fragmented buckets (bucket-pruned
     * read, range-partitioned by (bucket, time) so hot buckets split into
-    * several disjoint-range sorted files); the swap is per-bucket atomic
-    * (old dir → trash, new dir → live, trash dropped last) and
-    * crash-recoverable: a bucket can never be lost because its old files
-    * are not deleted until its new files are in place — `recoverCompact`
-    * restores any bucket caught mid-swap. Contract: a one-series writer
-    * (see the class doc) — no append to THIS series may run concurrently;
-    * writers of other series may.
+    * several disjoint-range sorted files), then [[swapBuckets]] puts the
+    * new directories in place. Contract: a one-series writer (see the class
+    * doc) — no append to THIS series may run concurrently; writers of other
+    * series may.
     *
     * @return number of buckets rewritten */
   def compact(db: String, m: String, series: String): Long = {
@@ -480,24 +475,35 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     val fragmented = bucketDirs(sdir).map { case (b, d) => (b, d, f.listStatus(d)) }
       .filter(_._3.count(_.getPath.getName.endsWith(".parquet")) > 1)
     if (fragmented.isEmpty) return 0L
+    // one distributed rewrite of every fragmented bucket, read from exactly
+    // the leaf files listed above
+    swapBuckets(sdir, fragmented.map { case (b, d, _) => b -> d }) { tmp =>
+      scan(db, m, schema, fragmented.map { case (_, d, leaves) => d -> leaves })
+        .select(schema.dataStruct.fieldNames.map(col) :+ col(BucketCol): _*)
+        .repartitionByRange(col(BucketCol), col(TimeCol))
+        .sortWithinPartitions(BucketCol, TimeCol)
+        .write.option("compression", "zstd").partitionBy(BucketCol)
+        .parquet(tmp.toString)
+    }
+    fragmented.size.toLong
+  }
 
+  /** Replace bucket directories of one series with rewritten copies:
+    * `write` puts each new copy under `<tmp>/bucket=<b>`, then each bucket
+    * swaps in on its own (old dir → trash, new dir → live, trash dropped
+    * last). A bucket can never be lost because its old files are not
+    * deleted until its new files are in place — `recoverCompact` restores
+    * any bucket caught mid-swap. */
+  private def swapBuckets(sdir: Path, buckets: Seq[(Long, Path)])(write: Path => Unit): Unit = {
+    val f = fs(sdir)
     val tmp = new Path(sdir, Tsdb.CompactTmp)
     val trash = new Path(sdir, Tsdb.CompactTrash)
     f.delete(tmp, true)
     f.delete(trash, true)
-    // one distributed rewrite of every fragmented bucket, read from exactly
-    // the leaf files listed above
-    scan(db, m, schema, fragmented.map { case (_, d, leaves) => d -> leaves })
-      .select(schema.dataStruct.fieldNames.map(col) :+ col(BucketCol): _*)
-      .repartitionByRange(col(BucketCol), col(TimeCol))
-      .sortWithinPartitions(BucketCol, TimeCol)
-      .write.option("compression", "zstd").partitionBy(BucketCol)
-      .parquet(tmp.toString)
-    // per-bucket atomic swap; old files survive in trash until the new dir
-    // is live, so a crash anywhere leaves the bucket recoverable
+    write(tmp)
     f.mkdirs(trash)
     val fc = FileContext.getFileContext(sdir.toUri, hconf)
-    fragmented.foreach { case (b, live, _) =>
+    buckets.foreach { case (b, live) =>
       val next = new Path(tmp, s"$BucketCol=$b")
       if (f.exists(next)) { // empty buckets can't exist, but stay defensive
         fc.rename(live, new Path(trash, live.getName), Options.Rename.OVERWRITE)
@@ -506,13 +512,13 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     }
     f.delete(trash, true)
     f.delete(tmp, true)
-    fragmented.size.toLong
   }
 
-  /** Crash recovery for `compact`: any bucket moved to trash whose live dir
-    * never appeared is restored (the compacted data was equal by
-    * construction, so restoring the original files is always correct);
-    * leftover tmp/trash dirs are then dropped. Idempotent. */
+  /** Crash recovery for [[swapBuckets]]: any bucket moved to trash whose
+    * live dir never appeared is restored (compacted data was equal by
+    * construction, and a truncation reruns from its intent marker, so
+    * restoring the original files is always correct); leftover tmp/trash
+    * dirs are then dropped. Idempotent. */
   private def recoverCompact(sdir: Path): Unit = {
     val f = fs(sdir)
     val trash = new Path(sdir, Tsdb.CompactTrash)
@@ -576,10 +582,13 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       wms.get(sn).filter(r => t >= r.timeFirst).map(r => (sn, t, r))
     }
     if (affected.isEmpty) return Map.empty
+    // each series directory is listed once: for the survivor scan and for
+    // the bucket drops below
+    val listed = affected.map { case (sn, _, _) => sn -> bucketDirs(seriesDir(db, m, sn)) }.toMap
     // survivors lie in (cut, time_last]: crashed-append orphans above
     // time_last never count
     val surv = scan(db, m, schema,
-        affected.map { case (sn, t, r) => sn -> (t + 1, r.timeLast) }.toMap)
+        affected.map { case (sn, t, r) => sn -> (t + 1, r.timeLast) }.toMap, listed)
       .groupBy(col(SeriesCol)).agg(min(TimeCol).as("mn"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val advanced = affected.map { case (sn, t, r) =>
@@ -590,8 +599,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     wmStore(db, m).update(advanced)
     advanced.foreach { case (sn, r) =>
       val cutBucket = Math.floorDiv(r.timeFirst, bucketWidth)
-      val sdir = seriesDir(db, m, sn)
-      bucketDirs(sdir).foreach { case (b, d) => if (b < cutBucket) fs(sdir).delete(d, true) }
+      listed(sn).foreach { case (b, d) => if (b < cutBucket) fs(d).delete(d, true) }
     }
     advanced.map { case (sn, r) => sn -> r.timeFirst }
   }
@@ -648,13 +656,20 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * reference's per-series chunk index (select_op.cc:50-59), a read never
     * discovers the rest of the measurement. Empty ranges are skipped. */
   private def scan(db: String, m: String, schema: MeasurementSchema,
-                   ranges: Map[String, (Long, Long)]): DataFrame = {
+                   ranges: Map[String, (Long, Long)]): DataFrame =
+    scan(db, m, schema, ranges, sn => bucketDirs(seriesDir(db, m, sn)))
+
+  /** [[scan]] of each asked series' range over the bucket directories
+    * `listed` gives for it (a listing the caller made, or one it narrowed). */
+  private def scan(db: String, m: String, schema: MeasurementSchema,
+                   ranges: Map[String, (Long, Long)],
+                   listed: String => Seq[(Long, Path)]): DataFrame = {
     def buckets(r: (Long, Long)) =
       (Math.floorDiv(r._1, bucketWidth), Math.floorDiv(r._2, bucketWidth))
     val asked = ranges.filter { case (_, (t0, t1)) => t0 <= t1 }
     val raw = scan(db, m, schema, asked.toSeq.flatMap { case (series, r) =>
       val (b0, b1) = buckets(r)
-      bucketDirs(seriesDir(db, m, series)).collect { case (b, d) if b >= b0 && b <= b1 => d }
+      listed(series).collect { case (b, d) if b >= b0 && b <= b1 => d }
     }.map(d => d -> fs(d).listStatus(d)))
     if (asked.isEmpty) return raw
     // constant bounds over all asked series: the bucket bounds are redundant
@@ -797,24 +812,24 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * maxDataPoints` → raw points; else per-window decimal-2 means over
     * `ceil(span / maxDataPoints)`-wide absolute-aligned windows (non-empty
     * windows — the renderer interpolates gaps). The decision is one
-    * O(index-scale) count, exactly the reference's npoints check. Unified
-    * output: (time_ns, v, n, zoom_mode) with n = points behind each row. */
+    * O(index-scale) count over the same read as the data, exactly the
+    * reference's npoints check. Unified output: (time_ns, v, n, zoom_mode)
+    * with n = points behind each row. */
   def zoom(db: String, m: String, series: String, field: String,
            t0: Long, t1: Long, maxDataPoints: Int): DataFrame = {
     require(maxDataPoints > 0, "maxDataPoints must be positive")
     val schema = getSchema(db, m)
     if (!schema.fields.exists(_.name == field))
       throw new InvalidSchemaException(s"unknown field: $field")
-    val np = countPoints(db, m, series, t0, t1)
-      .select("npoints").head().getLong(0)
     val base = visibleSeries(db, m, series, t0, t1)
+    val np = TimeSeriesOps.countPoints(base, TimeCol, t0, t1)
+      .select("npoints").head().getLong(0)
     if (np <= maxDataPoints)
       base.select(col(TimeCol), col(field).cast("double").as("v"),
         when(col(field).isNotNull, 1L).otherwise(0L).as("n"),
         lit("raw").as("zoom_mode"))
     else {
-      val span = t1 - t0 + 1
-      val w = (span + maxDataPoints - 1) / maxDataPoints
+      val w = zoomWidth(t0, t1, maxDataPoints)
       base.filter(col(field).isNotNull)
         .groupBy((col(TimeCol) - pmod(col(TimeCol), lit(w))).as(TimeCol))
         .agg((TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("v"),
@@ -823,69 +838,55 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     }
   }
 
+  /** Mean-window width of a zoom over `[t0, t1]`: `ceil(span /
+    * maxDataPoints)`, computed without overflow (the span of all of time is
+    * 2^64) and clamped to `[1, Long.MaxValue]`. */
+  private def zoomWidth(t0: Long, t1: Long, maxDataPoints: Int): Long =
+    ((BigInt(t1) - t0 + maxDataPoints) / maxDataPoints)
+      .max(1).min(Long.MaxValue).toLong
+
   /** Grafana "All"-series ZOOM dispatch — the reference datasource's
     * per-series loop (datasource.go:209-221 fans out one count + one
     * select/mean round trip per series) collapsed into TWO jobs total:
-    * a count pre-pass (one aggregate-only scan, shuffles S per-series
-    * counts — column-pruned to series + time at the parquet reader) whose
-    * result drives the per-series raw-vs-mean decision exactly like
-    * [[zoom]]'s npoints check, then ONE data scan + ONE shuffle where the
-    * grouping key is conditional: raw series group by their own timestamp
-    * (groups of ONE row — the validated append path enforces strictly
-    * increasing timestamps per series, reference doc/README.txt:20-29, so
-    * a (series, ts) group can never hold two points and the aggregate
-    * returns each point verbatim), dense series by the absolute-aligned
-    * window. Per-series semantics are identical to S
-    * independent [[zoom]] calls: raw rows keep NULL field values (n = 0),
-    * mean windows are non-empty decimal-2 means. Output: (series,
-    * time_ns, v, n, zoom_mode). */
+    * a count pre-pass (one aggregate-only scan — column-pruned to series +
+    * time at the parquet reader) collects one count per series, the scale
+    * of the watermark table, and drives the per-series raw-vs-mean
+    * decision exactly like [[zoom]]'s npoints check; then ONE data scan +
+    * ONE shuffle where the grouping key is conditional: raw series group by
+    * their own timestamp (groups of ONE row — the validated append path
+    * enforces strictly increasing timestamps per series, reference
+    * doc/README.txt:20-29, so a (series, ts) group can never hold two
+    * points and the aggregate returns each point verbatim), dense series by
+    * the absolute-aligned window. The decision is a lookup over the
+    * collected set, like [[scan]]'s per-series ranges, so the plan carries
+    * no series literal however many series there are. Per-series
+    * semantics are identical to S independent [[zoom]] calls: raw rows
+    * keep NULL field values (n = 0), mean windows are non-empty decimal-2
+    * means. Output: (series, time_ns, v, n, zoom_mode). */
   def zoomAll(db: String, m: String, field: String,
-              t0: Long, t1: Long, maxDataPoints: Int,
-              inListMax: Int = Tsdb.ZoomAllInListMax): DataFrame = {
+              t0: Long, t1: Long, maxDataPoints: Int): DataFrame = {
     require(maxDataPoints > 0, "maxDataPoints must be positive")
-    require(inListMax >= 0, "inListMax must be non-negative")
     val schema = getSchema(db, m)
     if (!schema.fields.exists(_.name == field))
       throw new InvalidSchemaException(s"unknown field: $field")
     val base = visibleRange(db, m, t0, t1)
-    val span = t1 - t0 + 1
-    val w = (span + maxDataPoints - 1) / maxDataPoints
-    // decision pre-pass: per-series point counts (aggregate-only job). At
-    // dashboard scale the raw-side series list collects into a literal
-    // In-list predicate — the data job stays ONE scan + ONE exchange with
-    // no join. Past `inListMax` raw series the literal list would bloat
-    // the plan/codegen linearly in S, so the decision ships as a
-    // BROADCAST join on the pre-pass output instead: same two-job shape,
-    // plan size independent of series cardinality. limit(inListMax+1)
-    // picks the regime without a separate count job — getting back fewer
-    // rows than the cap+1 means the list is complete.
-    val counts = base.groupBy(col(SeriesCol)).count()
-    val rawProbe = counts.filter(col("count") <= maxDataPoints)
-      .select(col(SeriesCol)).limit(inListMax + 1).collect()
-    def result(src: DataFrame, isRaw: Column, extraKeys: Seq[Column]): DataFrame =
-      src
-        .filter(isRaw || col(field).isNotNull) // mean side drops nulls pre-shuffle
-        .groupBy(col(SeriesCol) +: extraKeys :+
-          when(isRaw, col(TimeCol))
-            .otherwise(col(TimeCol) - pmod(col(TimeCol), lit(w))).as(TimeCol): _*)
-        .agg(first(col(field)).as("raw_v"),
-          (TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("mean_v"),
-          count(col(field)).as("n"))
-        .select(col(SeriesCol), col(TimeCol),
-          when(isRaw, col("raw_v").cast("double")).otherwise(col("mean_v")).as("v"),
-          col("n"),
-          when(isRaw, "raw").otherwise("mean").as("zoom_mode"))
-    if (rawProbe.length <= inListMax) {
-      val rawSeries = rawProbe.map(_.getString(0)).toSeq
-      result(base, col(SeriesCol).isin(rawSeries: _*), Seq.empty)
-    } else {
-      val flags = counts
-        .select(col(SeriesCol), (col("count") <= maxDataPoints).as("is_raw"))
-      // is_raw is functionally dependent on the series, so adding it to
-      // the grouping keys is free and makes it usable post-aggregate
-      result(base.join(broadcast(flags), Seq(SeriesCol)),
-        col("is_raw"), Seq(col("is_raw")))
-    }
+    val w = zoomWidth(t0, t1, maxDataPoints)
+    val rawSeries = base.groupBy(col(SeriesCol)).count()
+      .filter(col("count") <= maxDataPoints).select(col(SeriesCol))
+      .collect().map(_.getString(0)).toSet
+    val isRaw = udf((s: String) => rawSeries(s)).apply(col(SeriesCol))
+    base
+      .filter(isRaw || col(field).isNotNull) // mean side drops nulls pre-shuffle
+      .groupBy(col(SeriesCol),
+        when(isRaw, col(TimeCol))
+          .otherwise(col(TimeCol) - pmod(col(TimeCol), lit(w))).as(TimeCol))
+      .agg(first(col(field)).as("raw_v"),
+        (TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("mean_v"),
+        count(col(field)).as("n"))
+      .select(col(SeriesCol), col(TimeCol),
+        when(isRaw, col("raw_v").cast("double")).otherwise(col("mean_v")).as("v"),
+        col("n"),
+        when(isRaw, "raw").otherwise("mean").as("zoom_mode"))
   }
 
   /** Windowed MIN/MAX zoom (reference grafana datasource.go:384-430). */
@@ -946,8 +947,8 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * files to find that out — at 100 TB (millions of bucket dirs) the
     * listing/footer I/O is the cost, not the decode. This sidecar is one
     * aggregation job over the measurement producing bucket-count-scale
-    * rows, so a selective value band later turns into a bucket IN-list and
-    * prunes at the DIRECTORY level, before any file is opened.
+    * rows, so a selective value band later drops bucket directories from
+    * the read's listing, before any file is opened.
     *
     * Staleness contract (what keeps every read correct under ANY index
     * age): each row carries the series' `time_last` AT BUILD TIME. Appends
@@ -956,10 +957,12 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * only buckets at/above `floorDiv(tl_at_build, bucketWidth)` can gain
     * data after the build. A value-pruned read therefore ALWAYS scans
     * those buckets regardless of their indexed min/max and only prunes
-    * among strictly-older, immutable ones. Delete-from-front leaves index
-    * rows for dropped buckets (they prune to empty dirs at scan time);
-    * `compact` rewrites layout, never values. Same single-writer contract
-    * as every other maintenance op (doc/LOCKING.txt).
+    * among strictly-older, immutable ones, however old the index is: an
+    * old index prunes fewer buckets, never wrong ones. Delete-from-front
+    * leaves index rows for dropped buckets (the read's listing no longer
+    * holds them); `compact` rewrites layout, never values. Same
+    * single-writer contract as every other maintenance op
+    * (doc/LOCKING.txt).
     *
     * @return number of (series, bucket) entries indexed */
   def buildValueIndex(db: String, m: String, field: String): Long = {
@@ -987,13 +990,12 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   /** INCREMENTAL maintenance of the value sidecar — the decay-prevention
     * path [[buildValueIndex]]'s staleness contract needs: appends past the
-    * recorded watermark widen the always-scanned span until it overflows
-    * [[MaxPrunedBuckets]] and pruning silently degrades to full scans
-    * (observable via [[Tsdb.valueIndexStaleFallbacks]]). This refresh
-    * re-aggregates ONLY buckets at/above each series' build watermark
-    * (plus series the index has never seen), keeps the immutable rows
-    * as-is, and advances `tl_at_build` — per-refresh cost scales with the
-    * data appended since the last build, never the measurement (the
+    * recorded watermark widen the always-scanned span, so an old index
+    * prunes less and less of a read. This refresh re-aggregates ONLY
+    * buckets at/above each series' build watermark (plus series the index
+    * has never seen), keeps the immutable rows as-is, and advances
+    * `tl_at_build` — per-refresh cost scales with the data appended since
+    * the last build, never the measurement (the
     * reference maintains its time index on every commit,
     * src/libtsdb/write.cc:36-447; a value index earns the same treatment).
     * Swap is delete+rename of the one-file sidecar: a crash between leaves
@@ -1056,80 +1058,46 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     n
   }
 
-  /** Bucket IN-list cap for value-pruned reads: past this the IN-expression
-    * itself is the overhead and a bucket-range scan with the pushed value
-    * filter is the better plan (constructor-tunable; see
-    * [[Tsdb.DefaultMaxPrunedBuckets]]). */
-  private val MaxPrunedBuckets = maxPrunedBuckets
-
   /** SELECT `(time_ns, field)` of one series in `[t0, t1]` with
-    * `field ∈ [vLo, vHi]` — value-pruned to the buckets the min-max index
-    * admits (see [[buildValueIndex]]). Without an index (or when the
-    * IN-list would exceed [[MaxPrunedBuckets]]) this is the plain
-    * bucket-range scan with the value filter pushed to parquet: identical
-    * rows, no directory-level skipping. NULL field values never match the
-    * band (SQL BETWEEN semantics), so an all-NULL bucket prunes too. */
+    * `field ∈ [vLo, vHi]` — value-pruned by directory: of the bucket
+    * directories the range admits, the read drops each one the min-max
+    * index (see [[buildValueIndex]]) proves cannot match, and [[scan]]s the
+    * rest with the value filter pushed to parquet. A bucket is dropped only
+    * if it has an index row, lies strictly below the bucket of its build
+    * watermark (immutable since the build), and its `[vmin, vmax]` misses
+    * the band or it holds only NULLs (NULL never matches SQL BETWEEN).
+    * Without an index, or for a series newer than the build, nothing is
+    * dropped: the plain filtered scan, identical rows. */
   def selectValueRange(db: String, m: String, series: String, field: String,
-                       vLo: Double, vHi: Double, t0: Long, t1: Long): DataFrame =
-    selectValueRangeImpl(db, m, series, field, vLo, vHi, t0, t1,
-      canAutoRefresh = autoRefreshValueIndex)
-
-  private def selectValueRangeImpl(db: String, m: String, series: String,
-                                   field: String, vLo: Double, vHi: Double,
-                                   t0: Long, t1: Long,
-                                   canAutoRefresh: Boolean): DataFrame = {
+                       vLo: Double, vHi: Double, t0: Long, t1: Long): DataFrame = {
     val schema = getSchema(db, m)
     if (!schema.fields.exists(_.name == field))
       throw new InvalidSchemaException(s"unknown field: $field")
-    val band = col(field).between(vLo, vHi)
-    def proj(df: DataFrame): DataFrame = df.filter(band).select(TimeCol, field)
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
-    val base = scan(db, m, schema, Map(series -> (c0, c1)))
-    if (c0 > c1) return proj(base)
     val ip = vindexDir(db, m, field)
-    if (!fs(ip).exists(ip)) return proj(base)
-    val (b0, b1) = (Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth))
-    // driver-side lookup is index-row-scale for ONE series' bucket range —
-    // the same order as the planner's own partition listing
-    val rows = spark.read.parquet(ip.toString)
-      .filter(col(SeriesCol) === series && col(BucketCol).between(b0, b1))
-      .select(col(BucketCol), col("vmin").cast("double"),
-        col("vmax").cast("double"), col("tl_at_build"))
-      .collect()
-    if (rows.isEmpty) return proj(base) // series newer than the index build
-    val staleLo = Math.floorDiv(rows.head.getLong(3), bucketWidth)
-    // an ancient index admits every post-build bucket unconditionally; once
-    // that span alone overflows the IN-list cap, pruning cannot win — fall
-    // back before materializing the range. OBSERVABLE, not silent: the
-    // counter feeds the bench JSON, and refreshValueIndex is the cheap
-    // restore path (it re-aggregates only post-watermark buckets).
-    if (b1 - math.max(b0, staleLo) >= MaxPrunedBuckets) {
-      Tsdb.valueIndexStaleFallbacks.incrementAndGet()
-      // AUTO-HEAL (opt-in): the reference maintains its time index on
-      // every commit (src/libtsdb/write.cc:36-447); here the read that
-      // detects decay pays the (incremental, appended-data-scale) refresh
-      // once and retries — later reads find a fresh index. One retry only.
-      if (canAutoRefresh) {
-        refreshValueIndex(db, m, field)
-        return selectValueRangeImpl(db, m, series, field, vLo, vHi, t0, t1,
-          canAutoRefresh = false)
+    val dropped: Set[Long] =
+      if (c0 > c1 || !fs(ip).exists(ip)) Set.empty
+      else {
+        // driver-side lookup is index-row-scale for ONE series' bucket
+        // range — the same order as the read's own bucket listing
+        val rows = spark.read.parquet(ip.toString)
+          .filter(col(SeriesCol) === series && col(BucketCol)
+            .between(Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth)))
+          .select(col(BucketCol), col("vmin").cast("double"),
+            col("vmax").cast("double"), col("tl_at_build"))
+          .collect()
+        // the double casts above round ≤1 ulp, so widen by one ulp each way
+        // rather than ever dropping a boundary bucket
+        rows.filter { r =>
+          r.getLong(0) < Math.floorDiv(r.getLong(3), bucketWidth) && (r.isNullAt(1) ||
+            Math.nextUp(r.getDouble(2)) < vLo || Math.nextDown(r.getDouble(1)) > vHi)
+        }.map(_.getLong(0)).toSet
       }
-      return proj(base)
-    }
-    // indexed, immutable buckets whose [vmin, vmax] intersects the band —
-    // the double casts above round ≤1 ulp, so widen by one ulp each way
-    // rather than ever excluding a boundary bucket
-    val matched = rows.iterator.filter { r =>
-      r.getLong(0) < staleLo && !r.isNullAt(1) &&
-        Math.nextUp(r.getDouble(2)) >= vLo && Math.nextDown(r.getDouble(1)) <= vHi
-    }.map(_.getLong(0)).toSeq
-    // every bucket the build could not have fully seen is always scanned
-    val fresh = math.max(b0, staleLo) to b1
-    val keep = (matched ++ fresh).distinct.sorted
-    if (keep.size > MaxPrunedBuckets || keep.size.toLong == b1 - b0 + 1) proj(base)
-    else proj(base.filter(col(BucketCol).isin(keep: _*)))
+    scan(db, m, schema, Map(series -> (c0, c1)),
+        sn => bucketDirs(seriesDir(db, m, sn)).filterNot { case (b, _) => dropped(b) })
+      .filter(col(field).between(vLo, vHi)).select(TimeCol, field)
   }
 
   /** §2.3 client-side transforms (reference grafana datasource.go:257-268)
@@ -1312,11 +1280,6 @@ object Tsdb {
     * `chunk_size`, src/libtsdb/constants.h:9). */
   val DefaultBucketWidth: Long = 3600L * 1000000000L
 
-  /** zoomAll's regime switch: up to this many RAW-side series, the
-    * dispatch decision is a literal In-list (no join in the data job);
-    * beyond it, a broadcast semi-join on the count pre-pass output, so
-    * plan/codegen size never grows with series cardinality. */
-  val ZoomAllInListMax: Int = 1000
   /** Constructor sentinel: adopt the persisted width (or the default when
     * creating a new root) rather than requesting a specific one. */
   val UseExistingWidth: Long = Long.MinValue
@@ -1325,18 +1288,8 @@ object Tsdb {
     * at or below it, hash on the partition columns (bucket, or series and
     * bucket). */
   val RangeWriteThreshold: Long = 32L * 1000 * 1000
-  /** Hidden staging dirs of `compact` (leading dot: invisible to Spark's
-    * file index, so readers never see half-written compaction output). */
+  /** Hidden staging dirs of `swapBuckets` (leading dot: invisible to
+    * Spark's file index, so readers never see half-written output). */
   private[engine] val CompactTmp = ".compacting"
   private[engine] val CompactTrash = ".compact-trash"
-  /** Default bucket IN-list cap for value-pruned reads (constructor
-    * override exists mainly so specs can exercise the stale-span fallback
-    * without writing thousands of buckets). */
-  val DefaultMaxPrunedBuckets = 4096
-  /** Process-wide count of value-pruned reads that fell back to a full
-    * scan because the index's stale span overflowed the IN-list cap — the
-    * "this index has decayed, run refreshValueIndex" signal (emitted into
-    * the bench JSON; a silent decay at 100× append volume would otherwise
-    * read as a plan regression). */
-  val valueIndexStaleFallbacks = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -617,8 +617,8 @@ object EngineQueries {
 
     // EXTENSION: value-predicate DATA SKIPPING through the engine layout —
     // buildValueIndex writes the per-(series, bucket) min-max sidecar, then
-    // selectValueRange turns the value band into a bucket IN-list and
-    // prunes at the DIRECTORY level before any file opens (the reference's
+    // selectValueRange drops the bucket directories the band cannot match
+    // from its listing, before any file opens (the reference's
     // `index` file binary-searches time only, select_op.cc:50-59; parquet
     // footers prune row groups but still cost a listing + footer read per
     // file — at 100 TB the listing IS the query). Stale-index safety (every

@@ -33,7 +33,15 @@ import java.util.concurrent.atomic.AtomicInteger
   * over the whole measurement tree): `zoom` 4, `countPoints` 2, `zoomAll`
   * 7, `sumWindowsAll` 4, `applyRetention` 4, a one-series `deleteUpTo` 2,
   * `compact` of one series 3. Through `scan`: 4, 2, 4, 2, 2, 2 and 3;
-  * those are the budgets. */
+  * those are the budgets. A value-pruned `selectValueRange` (index lookup
+  * plus the pruned read) launches 3.
+  *
+  * FS calls: driver-side `listStatus` calls, counted by [[CountingFs]] on
+  * the same fixture. Counted while ops still listed some directories
+  * twice: `zoom` 8 (its count pre-pass and its data read each listed the
+  * series and its buckets) and a 40-series `applyRetention` 163 (each
+  * series directory listed again for the bucket drops). Listing each
+  * directory once: 4 and 123; those are the budgets. */
 class JobBudgetSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -70,8 +78,8 @@ class JobBudgetSpec extends SparkTestBase {
     } finally sc.removeSparkListener(l)
   }
 
-  private def fixture(): Tsdb = {
-    val t = new Tsdb(spark, tmpDir("tsdb-jobs-"), requestedBucketWidth = Hour)
+  private def fixture(root: String = tmpDir("tsdb-jobs-")): Tsdb = {
+    val t = new Tsdb(spark, root, requestedBucketWidth = Hour)
     t.createDatabase("db")
     t.createMeasurement("db", "m", schema)
     t.bulkLoad("db", "m", frame((0 until NSeries).flatMap(sn => rows(sn, 0, 120))))
@@ -139,6 +147,34 @@ class JobBudgetSpec extends SparkTestBase {
     assert(cj <= 2, s"countPoints launched $cj jobs")
     assert(aj <= 4, s"zoomAll launched $aj jobs")
     assert(sj <= 2, s"sumWindowsAll launched $sj jobs")
+  }
+
+  test("reads: a value-pruned selectValueRange on an indexed fixture stays in budget") {
+    val t = fixture()
+    assert(t.buildValueIndex("db", "m", "a") == NSeries * 2L)
+    // s0's field a is 0.25 * i: the band [20, 25] lies in bucket 1 (the
+    // watermark bucket, always scanned), and bucket 0 (a <= 14.75) prunes
+    def pruned() = t.selectValueRange("db", "m", "s0", "a", 20.0, 25.0, 0L, 2 * Hour - 1).collect()
+    pruned() // warm-up
+    val (vj, v) = jobsOf(pruned())
+    assert(v.length == 21)
+    info(s"jobs: selectValueRange $vj")
+    assert(vj <= 3, s"selectValueRange launched $vj jobs")
+  }
+
+  test("FS calls: zoom and a 40-series applyRetention list each directory once") {
+    CountingFs.register(spark)
+    val t = fixture(CountingFs.path(tmpDir("tsdb-fs-")))
+    val (t0, t1) = (0L, 2 * Hour - 1)
+    def zoom(sn: String) = t.zoom("db", "m", sn, "a", t0, t1, maxDataPoints = 100).collect()
+    zoom("s1") // warm-up
+    val (zl, z) = CountingFs.listStatusOf(zoom("s0"))
+    assert(z.map(_.getLong(2)).sum == 120L)
+    val (rl, r) = CountingFs.listStatusOf(t.applyRetention("db", "m", 30 * Step))
+    assert(r.size == NSeries)
+    info(s"driver listStatus calls: zoom $zl, applyRetention $rl")
+    assert(zl <= 4, s"zoom made $zl listStatus calls")
+    assert(rl <= 123, s"applyRetention made $rl listStatus calls")
   }
 
   test("maintenance: applyRetention, a one-series deleteUpTo and compact stay in budget") {

@@ -338,51 +338,48 @@ class TsdbEngineSpec extends SparkTestBase {
     assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
       s"expected one shuffle:\n${all.queryExecution.executedPlan}")
 
-    // HIGH-CARDINALITY regime: past inListMax raw series the decision
-    // ships as a broadcast semi-join instead of a literal In-list, so
-    // plan size never depends on S. Forcing inListMax = 0 exercises the
-    // join path on the same fixture — results must be IDENTICAL and the
-    // executed plan must carry a broadcast join and no In-list of series.
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val bcast = t.zoomAll("db1", "m1", "v", 100L, 219L, maxDataPoints = 5,
-      inListMax = 0)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(1), Option(r.get(2)), r.getLong(3), r.getString(4))
-    assert(bcast.collect().map(key).sortBy(k => (k._1, k._2)).toSeq ==
-           rows.map(key).sortBy(k => (k._1, k._2)).toSeq,
-      "broadcast regime must produce identical rows")
-    val bnodes = flat(bcast.queryExecution.executedPlan)
-    assert(bnodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-      s"expected a broadcast join:\n${bcast.queryExecution.executedPlan}")
-    // structural, not a rendered-string match (a substring check on the
-    // fixture series names silently passes if Spark's In rendering or the
-    // fixture changes — and DID: with one raw series the In optimizes to
-    // EqualTo and never renders a list at all): no literal series
-    // membership test — In, InSet, or EqualTo-vs-literal — anywhere in
-    // the executed plan; the decision must ship as the broadcast join
+    // the raw/mean decision is a lookup over the collected raw set, so the
+    // plan never grows with the series count. Structural, not a
+    // rendered-string match: no literal series membership test — In,
+    // InSet, or EqualTo-vs-literal — anywhere in the executed plan, with
+    // 1 raw series (the optimizer would collapse a one-element In to
+    // EqualTo) and with 2 (a literal In)
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, InSet, Literal}
     val series = graft.engine.MeasurementSchema.SeriesCol
-    def seriesLiteralTests(nodes: Seq[SparkPlan]) =
-      nodes.flatMap(_.expressions).flatMap(_.collect {
+    def seriesLiteralTests(df: DataFrame) = {
+      df.collect()
+      flat(df.queryExecution.executedPlan).flatMap(_.expressions).flatMap(_.collect {
         case e: In if e.value.references.exists(_.name == series) => e
         case e: InSet if e.child.references.exists(_.name == series) => e
         case e @ EqualTo(l, _: Literal)
           if l.references.exists(_.name == series) => e
       })
-    assert(seriesLiteralTests(bnodes).isEmpty,
-      s"broadcast regime must not test series against literals: " +
-        seriesLiteralTests(bnodes).mkString(", "))
-    // the assertion machinery itself must BITE, in both optimizer shapes:
-    // 2 raw series keep a literal In, 1 raw series collapses to EqualTo
-    val in2 = t.zoomAll("db1", "m1", "v", 100L, 219L, maxDataPoints = 1000)
-    in2.collect()
-    assert(seriesLiteralTests(flat(in2.queryExecution.executedPlan))
-      .exists(_.isInstanceOf[In]),
-      "2-raw-series In-list regime must carry a literal In " +
-        "(otherwise the structural check proves nothing)")
-    assert(seriesLiteralTests(flat(all.queryExecution.executedPlan))
-      .exists(_.isInstanceOf[EqualTo]),
-      "1-raw-series In-list regime must carry the collapsed EqualTo")
+    }
+    val raw2 = t.zoomAll("db1", "m1", "v", 100L, 219L, maxDataPoints = 1000)
+    assert(raw2.collect().forall(_.getString(4) == "raw"))
+    for (df <- Seq(all, raw2))
+      assert(seriesLiteralTests(df).isEmpty,
+        s"zoomAll must not test series against literals:\n${df.queryExecution.executedPlan}")
+    // the checker itself must BITE: a one-series select carries
+    // `series = <literal>`
+    assert(seriesLiteralTests(t.select("db1", "m1", "sparse", Seq("v"), 100L, 219L))
+      .exists(_.isInstanceOf[EqualTo]), "the series-literal check proves nothing")
+  }
+
+  test("zoom and zoomAll cover all of time without overflowing the window width") {
+    val t = mkTsdb()
+    t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
+    t.writePoints("db1", "m1", "s1", vpts((0 until 10).map(i => (10L * i, Some(i + 0.5))): _*))
+    for ((t0, t1) <- Seq((Long.MinValue, Long.MaxValue), (0L, Long.MaxValue))) {
+      // 10 points > 2 -> one mean window holds all of them: the width is
+      // at least 2^62, and every point lies in [0, 90]
+      val z = t.zoom("db1", "m1", "s1", "v", t0, t1, maxDataPoints = 2).collect()
+      assert(z.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getString(3))).toSeq ==
+        Seq((0L, 5.0, 10L, "mean")), s"zoom over [$t0, $t1]")
+      val a = t.zoomAll("db1", "m1", "v", t0, t1, maxDataPoints = 2).collect()
+      assert(a.map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3),
+        r.getString(4))).toSeq == Seq(("s1", 0L, 5.0, 10L, "mean")), s"zoomAll over [$t0, $t1]")
+    }
   }
 
   test("u64 fields survive the round trip at full range; mean/minmax facade derive from sum_op") {
@@ -448,6 +445,30 @@ class TsdbEngineSpec extends SparkTestBase {
     t.writePoints("db1", "m1", "s1", pts((470L, Some(1L), Some(1.25), Some(1.0f))))
     val got = t.select("db1", "m1", "s1", Nil, 400L, 1000L).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(420L, 470L)) // 420 survives, one 470
+    assert(got.find(_.getLong(0) == 470L).get.getDouble(2) == 1.25)
+  }
+
+  test("crash inside the truncation swap keeps the boundary bucket's committed points") {
+    val t = mkTsdb()
+    freshSeries(t, baseRows: _*) // last bucket = 4 (time 420)
+    import org.apache.spark.sql.functions.expr
+    pts((470L, Some(9L), Some(9.0), Some(9.0f)))
+      .withColumn("bucket", expr("time_ns div 100L"))
+      .write.mode("append").partitionBy("bucket")
+      .parquet(s"${t.rootDir}/db1/m1/data/series=s1")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending"), "{\"version\":1}")
+    // simulate a crash of the recovering write between "old -> trash" and
+    // "new -> live": bucket 4 (committed 420 plus the orphan 470) sits in
+    // the trash, its truncated copy half-written, and the marker remains
+    val sdir = java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/data/series=s1")
+    java.nio.file.Files.createDirectories(sdir.resolve(".compact-trash"))
+    java.nio.file.Files.move(sdir.resolve("bucket=4"), sdir.resolve(".compact-trash/bucket=4"))
+    java.nio.file.Files.createDirectories(sdir.resolve(".compacting/bucket=4"))
+    // replaying the write restores the bucket, truncates it, then appends
+    t.writePoints("db1", "m1", "s1", pts((470L, Some(1L), Some(1.25), Some(1.0f))))
+    val got = t.select("db1", "m1", "s1", Nil, 400L, 1000L).collect()
+    assert(got.map(_.getLong(0)).toSeq == Seq(420L, 470L))
     assert(got.find(_.getLong(0) == 470L).get.getDouble(2) == 1.25)
   }
 
@@ -612,6 +633,20 @@ class TsdbEngineSpec extends SparkTestBase {
     assert(filesRead(full) == 4L)
   }
 
+  test("value pruning keeps an immutable bucket whose max is NaN") {
+    val t = mkTsdb()
+    t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
+    // Spark's max ranks NaN above every number, so bucket 0 indexes as
+    // [100.0, NaN]; it still holds an in-band point and must be read
+    t.writePoints("db1", "m1", "s1", vpts(
+      (10L, Some(100.0)), (20L, Some(Double.NaN)), (110L, Some(1.0)), (210L, Some(2.0))))
+    assert(t.buildValueIndex("db1", "m1", "v") == 3L) // tl_at_build = 210
+    val df = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 299L)
+    assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((10L, 100.0)))
+    // bucket 0 kept, bucket 1 pruned, watermark bucket 2 scanned
+    assert(filesRead(df) == 2L)
+  }
+
   test("value-pruned reads stay correct when the index is stale") {
     val t = mkTsdb()
     t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
@@ -661,27 +696,22 @@ class TsdbEngineSpec extends SparkTestBase {
     assert(edge.collect().map(_.getString(3)).forall(_ == "mean"))
   }
 
-  test("refreshValueIndex restores pruning after the index decays; fallback is counted") {
-    // cap = 3 pruned buckets so a modest append ages the index past the
-    // IN-list cap without writing thousands of buckets
-    val t = new Tsdb(spark, tmpDir("tsdb-test-"), requestedBucketWidth = 100L,
-      maxPrunedBuckets = 3)
+  test("refreshValueIndex restores pruning after the index decays") {
+    val t = mkTsdb()
     t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
     t.writePoints("db1", "m1", "s1", vpts(
       (10L, Some(1.0)), (110L, Some(100.0)), (210L, Some(3.0))))
     assert(t.buildValueIndex("db1", "m1", "v") == 3L) // tl_at_build = 210
-    // age it: appends spanning buckets 3..7 — stale span (5) > cap (3)
+    // age it: appends spanning buckets 3..7, all past the build watermark
     t.writePoints("db1", "m1", "s1", vpts(
       (310L, Some(4.0)), (410L, Some(100.5)), (510L, Some(5.0)),
       (610L, Some(6.0)), (710L, Some(7.0))))
-    val before = Tsdb.valueIndexStaleFallbacks.get()
     val decayed = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 799L)
-    // correct rows, but via the full-scan fallback — and the decay is
-    // OBSERVABLE, not silent
     assert(decayed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted ==
       Seq((110L, 100.0), (410L, 100.5)))
-    assert(Tsdb.valueIndexStaleFallbacks.get() == before + 1)
-    assert(filesRead(decayed) == 8L) // all 8 in-range bucket dirs
+    // the old index still prunes its immutable out-of-band bucket 0; the
+    // watermark bucket 2 and everything after it are scanned
+    assert(filesRead(decayed) == 7L)
     // refresh: re-aggregates only buckets >= the old watermark bucket (2),
     // keeps immutable rows, advances tl_at_build to 710
     assert(t.refreshValueIndex("db1", "m1", "v") == 8L)
@@ -691,7 +721,6 @@ class TsdbEngineSpec extends SparkTestBase {
     // the executable gate is BACK: matching buckets 1 and 4, plus the new
     // watermark bucket 7's conservative scan = 3 files
     assert(filesRead(pruned) == 3L)
-    assert(Tsdb.valueIndexStaleFallbacks.get() == before + 1) // no new fallback
     // a series the index never saw joins on refresh, full-aggregated
     t.writePoints("db1", "m1", "s2", vpts((10L, Some(70.0)), (120L, Some(1.0))))
     assert(t.refreshValueIndex("db1", "m1", "v") == 10L)
@@ -722,31 +751,6 @@ class TsdbEngineSpec extends SparkTestBase {
     val df = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 999L)
     assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       Seq((410L, 100.5)))
-  }
-
-  test("autoRefreshValueIndex: the read that detects decay heals the index itself") {
-    val root = tmpDir("tsdb-test-")
-    val t = new Tsdb(spark, root, requestedBucketWidth = 100L,
-      maxPrunedBuckets = 3, autoRefreshValueIndex = true)
-    t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
-    t.writePoints("db1", "m1", "s1", vpts(
-      (10L, Some(1.0)), (110L, Some(100.0)), (210L, Some(3.0))))
-    assert(t.buildValueIndex("db1", "m1", "v") == 3L)
-    t.writePoints("db1", "m1", "s1", vpts(
-      (310L, Some(4.0)), (410L, Some(100.5)), (510L, Some(5.0)),
-      (610L, Some(6.0)), (710L, Some(7.0))))
-    val before = Tsdb.valueIndexStaleFallbacks.get()
-    // ONE read: detects the decayed span, pays the incremental refresh,
-    // retries — and comes back PRUNED (3 files: buckets 1, 4, watermark 7)
-    val healed = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 799L)
-    assert(healed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted ==
-      Seq((110L, 100.0), (410L, 100.5)))
-    assert(filesRead(healed) == 3L)
-    assert(Tsdb.valueIndexStaleFallbacks.get() == before + 1) // decay still counted
-    // the NEXT read needs no refresh: index is fresh now
-    val next = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 799L)
-    assert(filesRead(next) == 3L)
-    assert(Tsdb.valueIndexStaleFallbacks.get() == before + 1)
   }
 
   test("selectValueRange without an index is the plain filtered scan; bad field rejects") {
