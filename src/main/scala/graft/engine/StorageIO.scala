@@ -6,9 +6,16 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import java.nio.charset.StandardCharsets
 
 /** Shared small-object IO for the engine's metadata files (schemas,
-  * watermarks, intent markers) — ONE implementation of the atomic
+  * watermarks, intent records) — ONE implementation of the atomic
   * tmp+overwrite-rename contract (reference root.cc:179-194) so a
-  * durability fix can never drift between call sites. */
+  * durability fix can never drift between call sites.
+  *
+  * `atomicWrite` is not cheap. On a local filesystem without native Hadoop
+  * IO it forks one `chmod` (the create's `setPermission`) and about three
+  * `stat`s (the `FileContext` rename's link-status checks). Measured on a
+  * 4-core host: 17-20 ms per call (create ~3.3 ms, rename ~13 ms, against
+  * 0.03 ms for a plain `FileSystem.rename`). Callers batch it — one file
+  * per operation, never one per series. */
 private[engine] object StorageIO {
 
   def readString(p: Path, hconf: Configuration): String = {

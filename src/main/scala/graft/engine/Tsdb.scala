@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ final case class WriteResult(written: Long, discarded: Long, overwriteVerified: 
   * rootDir/_config.json                      bucket width (once, validated on open)
   * rootDir/<db>/<meas>/_schema.json          MeasurementSchema (atomic tmp+rename)
   * rootDir/<db>/<meas>/_wm/                  watermark TABLE (see WatermarkStore)
-  * rootDir/<db>/<meas>/_meta/.<series>.pending  append-intent markers
+  * rootDir/<db>/<meas>/_meta/.append-<uuid>.pending  append-intent records
   * rootDir/<db>/<meas>/data/series=<s>/bucket=<b>/  parquet, sorted by time_ns
   * }}}
   *
@@ -218,9 +219,11 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * aggregation, one bitwise overlap verify (only when a replayed tail
     * exists) and one write; the watermarks commit as one delta. No job is
     * spent on the watermark lookup, nor on range sampling below
-    * `Tsdb.RangeWriteThreshold` new points. A micro-batch of 10⁴ series
-    * costs about what one series does, not 10⁴× (the reference's WAL
-    * serializes per series because it is single-node, wal.cc:248-277).
+    * `Tsdb.RangeWriteThreshold` new points. And a fixed number of metadata
+    * files: one intent record and one watermark delta, whatever the series
+    * count. A micro-batch of 10⁴ series costs about what one series does,
+    * not 10⁴× (the reference's WAL serializes per series because it is
+    * single-node, wal.cc:248-277).
     *
     * Concurrency contract: a one-series batch stages under that series'
     * directory and may run beside writers of other series; a multi-series
@@ -292,36 +295,42 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       }
       // crash recovery (reference write.cc:93-252: time_last-governed tail
       // truncation on open): a crash BETWEEN the data append and the watermark
-      // advance leaves committed rows above time_last; replaying the batch
-      // would duplicate them. The append-intent marker makes the check free on
-      // the clean path: it exists on entry only if a previous append died
-      // mid-flight, and only then is the (bucket-pruned) truncation scan run.
-      // With NO watermark yet, everything stored is an orphan of a crashed
-      // FIRST append — drop the series data dir so the replay starts clean.
-      stats.map(_.getString(0)).foreach { sn =>
-        val p = pendingPath(db, m, sn)
-        if (fs(p).exists(p)) {
+      // advance leaves committed rows above time_last, and the batch's
+      // append-intent record; replaying the batch would duplicate them. One
+      // listing of `_meta` finds leftover records (the clean path finds none
+      // and pays nothing more). Each series of THIS batch that one names is
+      // recovered — its tail truncated (bucket-pruned) above time_last or,
+      // with NO watermark yet (a crashed FIRST append), its data dir dropped
+      // — and struck from the record. Series of other writers stay named:
+      // their writer recovers them.
+      val batch = stats.map(_.getString(0)).toSet
+      val meta = metaDir(db, m)
+      val leftovers = try fs(meta).listStatus(meta).toSeq.map(_.getPath)
+        .filter(_.getName.endsWith(".pending"))
+      catch { case _: java.io.FileNotFoundException => Nil }
+      leftovers.foreach { p =>
+        val (mine, rest) = readIntent(p).partition(batch)
+        mine.foreach { sn =>
           wms.get(sn) match {
             case Some(r) => truncateAbove(db, m, sn, schema, r.timeLast)
-            case None =>
-              val sdir = seriesDir(db, m, sn)
-              fs(sdir).delete(sdir, true)
+            case None    => fs(p).delete(seriesDir(db, m, sn), true)
           }
-          fs(p).delete(p, false)
         }
+        if (mine.nonEmpty) { if (rest.isEmpty) fs(p).delete(p, false) else writeIntent(p, rest) }
       }
 
       // a fully-replayed / fully-discarded batch writes nothing
       val toWrite = stats.filter(_.getLong(5) > 0)
       if (toWrite.nonEmpty) {
-        // the write job, bracketed by the append-intent markers (removed after
-        // the watermarks advance). A one-series write stages under its own
-        // series directory (partitioned by bucket below it), so different-series
-        // writers never share a `_temporary/` dir — concurrent same-directory
-        // jobs corrupt each other's staging. Readers see the same layout either
-        // way (`series=` is a partition directory under basePath).
-        toWrite.foreach(r =>
-          atomicWrite(pendingPath(db, m, r.getString(0)), """{"version":1}"""))
+        // the write job, bracketed by ONE append-intent record naming every
+        // series it writes (removed after the watermarks advance). A
+        // one-series write stages under its own series directory (partitioned
+        // by bucket below it), so different-series writers never share a
+        // `_temporary/` dir — concurrent same-directory jobs corrupt each
+        // other's staging. Readers see the same layout either way (`series=`
+        // is a partition directory under basePath).
+        val intent = new Path(metaDir(db, m), s".append-${java.util.UUID.randomUUID}.pending")
+        writeIntent(intent, toWrite.map(_.getString(0)))
         val (target, parts) =
           if (toWrite.length == 1)
             (seriesDir(db, m, toWrite.head.getString(0)), Seq(BucketCol))
@@ -356,7 +365,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
           .write.mode("append").partitionBy(parts: _*)
           .parquet(target.toString)
         // ONE watermark commit for the whole batch (one delta file however many
-        // series landed), then the intent markers drop
+        // series landed), then the intent record drops
         wmStore(db, m).update(toWrite.map { r =>
           val sn = r.getString(0)
           val (mn, mx) = (r.getLong(6), r.getLong(7))
@@ -365,10 +374,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
             case None       => SeriesRange(mn, mx)
           })
         }.toMap)
-        toWrite.foreach { r =>
-          val p = pendingPath(db, m, r.getString(0))
-          fs(p).delete(p, false)
-        }
+        fs(intent).delete(intent, false)
       }
       stats.map(r =>
         r.getString(0) -> WriteResult(r.getLong(5), r.getLong(8), r.getLong(9))).toMap
@@ -426,7 +432,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * truncated (reference `replace_with_truncated`, root.cc:179-194)
     * through `compact`'s per-bucket swap, so the bucket's committed points
     * at or below `tl` survive a crash at any step. The procedure is
-    * idempotent: the intent marker outlives it, so a crash mid-recovery
+    * idempotent: the intent record outlives it, so a crash mid-recovery
     * reruns it, first restoring a bucket caught mid-swap. */
   private def truncateAbove(db: String, m: String, series: String,
                             schema: MeasurementSchema, tl: Long): Unit = {
@@ -516,7 +522,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   /** Crash recovery for [[swapBuckets]]: any bucket moved to trash whose
     * live dir never appeared is restored (compacted data was equal by
-    * construction, and a truncation reruns from its intent marker, so
+    * construction, and a truncation reruns from its intent record, so
     * restoring the original files is always correct); leftover tmp/trash
     * dirs are then dropped. Idempotent. */
   private def recoverCompact(sdir: Path): Unit = {
@@ -1205,12 +1211,21 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   private def measPath(db: String, m: String) = new Path(dbPath(db), m)
   private def schemaPath(db: String, m: String) = new Path(measPath(db, m), "_schema.json")
   private def metaDir(db: String, m: String) = new Path(measPath(db, m), "_meta")
-  /** Append-intent marker: present iff an append is in flight (or died). */
-  private def pendingPath(db: String, m: String, series: String) =
-    // same Hive escaping as seriesDir: raw keys may hold ':' (a URI scheme
-    // separator Hadoop Path rejects) and '%'/'#' (URI metacharacters)
-    new Path(metaDir(db, m), "." + org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName(series) + ".pending")
+  /** Append-intent record: present iff an append is in flight (or died). It
+    * names the batch's series one a line, Hive-escaped like seriesDir, so a
+    * line never holds a newline, '{' or '"'. */
+  private def writeIntent(p: Path, series: Seq[String]): Unit =
+    atomicWrite(p, series.map(escapePathName(_) + "\n").mkString)
+  /** The series a record names; none if it vanished (its writer finished).
+    * Any other `.pending` file is corrupt and fails the write loudly. */
+  private def readIntent(p: Path): Seq[String] = {
+    def corrupt = new InvalidSchemaException(s"corrupt append-intent record: $p")
+    if (!Tsdb.IntentName.matches(p.getName)) throw corrupt
+    val lines = try readString(p).split("\n").toSeq
+      catch { case _: java.io.FileNotFoundException => return Nil }
+    if (lines.exists(l => l.isEmpty || escapePathName(unescapePathName(l)) != l)) throw corrupt
+    lines.map(unescapePathName)
+  }
   private def dataDir(db: String, m: String) = new Path(measPath(db, m), "data")
 
   /** Canonical on-disk directory for one series' data. The name is
@@ -1223,8 +1238,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * themselves, so pre-existing layouts are untouched. */
   private def seriesDir(db: String, m: String, series: String): Path =
     new Path(dataDir(db, m),
-      s"$SeriesCol=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(series))
+      s"$SeriesCol=" + escapePathName(series))
 
   /** One signature-cached watermark store per measurement (see
     * [[WatermarkStore]] for format, caching and the concurrency contract). */
@@ -1250,13 +1264,12 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
         s.startsWith("_") || s == "." || s == "..")
       throw new InvalidSchemaException(s"invalid series name '$s'")
     // the RAW bound is not enough: Hive escaping expands each special
-    // char to %XX, and "series=" + escaped must stay under the 255-byte
-    // filesystem component limit — fail LOUDLY here instead of an
-    // ENAMETOOLONG mid-write that would leave a pending marker behind.
-    // Measure BYTES, not UTF-16 chars: escapePathName passes >0x7F
+    // char to %XX, and the series data directory "series=" + escaped must
+    // stay under the 255-byte filesystem component limit — fail LOUDLY here
+    // instead of an ENAMETOOLONG from the write job, after the intent record
+    // landed. Measure BYTES, not UTF-16 chars: escapePathName passes >0x7F
     // through, so a 123-char non-ASCII name is up to ~369 bytes on disk.
-    if (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(s).getBytes(java.nio.charset.StandardCharsets.UTF_8).length > 240)
+    if (escapePathName(s).getBytes(StandardCharsets.UTF_8).length > 240)
       throw new InvalidSchemaException(
         s"series name escapes past the filesystem path-component limit: '$s'")
   }
@@ -1292,4 +1305,6 @@ object Tsdb {
     * Spark's file index, so readers never see half-written output). */
   private[engine] val CompactTmp = ".compacting"
   private[engine] val CompactTrash = ".compact-trash"
+  /** File name of an append-intent record under `_meta`. */
+  private val IntentName = """\.append-[0-9a-f-]{36}\.pending""".r
 }

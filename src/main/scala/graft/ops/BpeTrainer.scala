@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *      the fallback when the histogram is too large to collect; the
   *      DEFAULT path finishes training in the driver from the collected
   *      histogram (see [[train]]/[[localTrain]]), which is what makes a
-  *      32k-merge vocabulary trainable — tools/BpeTrainScale records the
-  *      post-histogram merge throughput each time it runs.
+  *      32k-merge vocabulary trainable — the one-off probe
+  *      tools/BpeTrainScale (since deleted) recorded the post-histogram
+  *      merge throughput.
   *
   * Lineage is truncated with `localCheckpoint` each round; without it
   * round k would recompute all k-1 previous merge applications and the

@@ -1,24 +1,44 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 
 import java.net.URI
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The local filesystem under its own scheme, `countfs:///<local path>`,
-  * counting the `listStatus` calls made on the driver (calls from inside a
-  * Spark task are not counted). A root opened under this scheme measures
-  * what an op asks of the store, one call at a time. */
+  * recording the `listStatus`, `create`, `rename` and `delete` calls made
+  * on the driver (calls from inside a Spark task are not recorded). A root
+  * opened under this scheme measures what an op asks of the store, one
+  * call at a time. */
 class CountingFs extends RawLocalFileSystem {
   override def getUri: URI = CountingFs.Uri
   override def getScheme: String = CountingFs.Scheme
 
   override def listStatus(f: Path): Array[FileStatus] = {
-    if (TaskContext.get() == null) CountingFs.driverListStatus.incrementAndGet()
+    CountingFs.record("listStatus", f)
     super.listStatus(f)
+  }
+
+  /** The overload `FileSystem.create(Path, boolean)` reaches. */
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    CountingFs.record("create", f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  /** Also reached by `FileContext.rename`, through [[CountingAbstractFs]]. */
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingFs.record("rename", dst)
+    super.rename(src, dst)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    CountingFs.record("delete", f)
+    super.delete(f, recursive)
   }
 }
 
@@ -29,7 +49,15 @@ class CountingAbstractFs(uri: URI, conf: Configuration)
 object CountingFs {
   val Scheme = "countfs"
   val Uri: URI = URI.create(s"$Scheme:///")
-  val driverListStatus = new AtomicLong()
+
+  /** One driver-side call: the operation and the path it named (the
+    * destination, for a rename). */
+  final case class Call(op: String, path: Path)
+
+  private val driverCalls = new ConcurrentLinkedQueue[Call]()
+
+  private def record(op: String, p: Path): Unit =
+    if (TaskContext.get() == null) driverCalls.add(Call(op, p))
 
   /** Registers the scheme with the session's Hadoop configuration; a
     * `Tsdb` built after this call may be rooted at [[path]]. */
@@ -41,10 +69,17 @@ object CountingFs {
 
   def path(localDir: String): String = s"$Scheme://$localDir"
 
+  /** Driver-side calls made by `body`, in call order. */
+  def callsOf[A](body: => A): (Seq[Call], A) = {
+    driverCalls.clear()
+    val out = body
+    val calls = Iterator.continually(driverCalls.poll()).takeWhile(_ != null).toSeq
+    (calls, out)
+  }
+
   /** Driver-side `listStatus` calls made by `body`. */
   def listStatusOf[A](body: => A): (Long, A) = {
-    val before = driverListStatus.get()
-    val out = body
-    (driverListStatus.get() - before, out)
+    val (calls, out) = callsOf(body)
+    (calls.count(_.op == "listStatus").toLong, out)
   }
 }

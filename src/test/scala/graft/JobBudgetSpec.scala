@@ -41,7 +41,16 @@ import java.util.concurrent.atomic.AtomicInteger
   * twice: `zoom` 8 (its count pre-pass and its data read each listed the
   * series and its buckets) and a 40-series `applyRetention` 163 (each
   * series directory listed again for the bucket drops). Listing each
-  * directory once: 4 and 123; those are the budgets. */
+  * directory once: 4 and 123; those are the budgets.
+  *
+  * Metadata writes: driver-side `create`, `rename` and `delete` calls
+  * outside the data tree, on the same fixture. With one append-intent
+  * marker per series, a 38-series `writeBatch` append made 39 creates, 39
+  * renames and 38 deletes (38 markers and one watermark delta) and 2
+  * `listStatus` calls (`_wm`); its replay made 1 `listStatus` and wrote
+  * nothing. With one intent record per batch: 2 creates, 2 renames and 1
+  * delete, plus one `listStatus` of `_meta` per write (3 and 2); those are
+  * the budgets. */
 class JobBudgetSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -175,6 +184,34 @@ class JobBudgetSpec extends SparkTestBase {
     info(s"driver listStatus calls: zoom $zl, applyRetention $rl")
     assert(zl <= 4, s"zoom made $zl listStatus calls")
     assert(rl <= 123, s"applyRetention made $rl listStatus calls")
+  }
+
+  test("FS calls: a 38-series writeBatch commits a fixed number of metadata files") {
+    CountingFs.register(spark)
+    val t = fixture(CountingFs.path(tmpDir("tsdb-fs-")))
+    t.writeBatch("db", "m", frame(rows(39, 120, 6))) // warm-up
+    val batch = frame((0 until 38).flatMap(sn => rows(sn, 120, 6)))
+    val (ac, res) = CountingFs.callsOf(t.writeBatch("db", "m", batch))
+    assert(res.size == 38 && res.values.forall(_ == WriteResult(6, 0, 0)))
+    val (rc, again) = CountingFs.callsOf(t.writeBatch("db", "m", batch))
+    assert(again.size == 38 && again.values.forall(_ == WriteResult(0, 0, 6)))
+    // calls outside the data tree: the engine's own metadata files (the
+    // test session's v1 committer and `_SUCCESS` marker add their own
+    // driver calls under `data/`)
+    def meta(cs: Seq[CountingFs.Call], op: String) =
+      cs.count(c => c.op == op && !c.path.toString.contains("/m/data/"))
+    val ops = Seq("create", "rename", "delete", "listStatus")
+    val Seq(creates, renames, deletes, lists) = ops.map(meta(ac, _))
+    val Seq(rCreates, rRenames, rDeletes, rLists) = ops.map(meta(rc, _))
+    info(s"metadata calls, append: create $creates, rename $renames, delete $deletes, " +
+      s"listStatus $lists; replay: create $rCreates, rename $rRenames, delete $rDeletes, " +
+      s"listStatus $rLists")
+    assert(creates <= 2, s"38-series append created $creates metadata files")
+    assert(renames <= 2, s"38-series append renamed $renames metadata files")
+    assert(deletes <= 1, s"38-series append deleted $deletes metadata files")
+    assert(lists <= 3, s"38-series append listed $lists metadata directories")
+    assert(rCreates + rRenames + rDeletes == 0, "a pure replay wrote metadata")
+    assert(rLists <= 2, s"a pure replay listed $rLists metadata directories")
   }
 
   test("maintenance: applyRetention, a one-series deleteUpTo and compact stay in budget") {

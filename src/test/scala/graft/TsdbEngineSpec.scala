@@ -25,6 +25,16 @@ class TsdbEngineSpec extends SparkTestBase {
     if (rows.nonEmpty) t.writePoints("db1", "m1", "s1", pts(rows: _*))
   }
 
+  /** What a crashed append leaves in `_meta`: one intent record naming
+    * every series of the batch. @return the record's path. */
+  private def plantIntent(t: Tsdb, series: String*): java.nio.file.Path = {
+    val meta = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta"))
+    java.nio.file.Files.writeString(
+      meta.resolve(s".append-${java.util.UUID.randomUUID}.pending"),
+      series.map(_ + "\n").mkString)
+  }
+
   private val baseRows: Seq[(Long, Option[Long], Option[Double], Option[Float])] = Seq(
     (100L, Some(1L), Some(1.5), Some(1.0f)),
     (150L, Some(2L), None, Some(2.0f)),
@@ -414,9 +424,8 @@ class TsdbEngineSpec extends SparkTestBase {
     stray.withColumn("bucket", expr("time_ns div 100L"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"${t.rootDir}/db1/m1/data/series=s1")
-    // the crashed append left its intent marker behind
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending"), "{\"version\":1}")
+    // the crashed append left its intent record behind
+    plantIntent(t, "s1")
     assert(t.seriesRange("db1", "m1", "s1").contains(SeriesRange(100L, 420L)))
 
     // replaying the crashed batch must first truncate the orphaned tail,
@@ -440,8 +449,7 @@ class TsdbEngineSpec extends SparkTestBase {
       .withColumn("bucket", expr("time_ns div 100L"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"${t.rootDir}/db1/m1/data/series=s1")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending"), "{\"version\":1}")
+    plantIntent(t, "s1")
     t.writePoints("db1", "m1", "s1", pts((470L, Some(1L), Some(1.25), Some(1.0f))))
     val got = t.select("db1", "m1", "s1", Nil, 400L, 1000L).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(420L, 470L)) // 420 survives, one 470
@@ -456,11 +464,10 @@ class TsdbEngineSpec extends SparkTestBase {
       .withColumn("bucket", expr("time_ns div 100L"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"${t.rootDir}/db1/m1/data/series=s1")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending"), "{\"version\":1}")
+    plantIntent(t, "s1")
     // simulate a crash of the recovering write between "old -> trash" and
     // "new -> live": bucket 4 (committed 420 plus the orphan 470) sits in
-    // the trash, its truncated copy half-written, and the marker remains
+    // the trash, its truncated copy half-written, and the record remains
     val sdir = java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/data/series=s1")
     java.nio.file.Files.createDirectories(sdir.resolve(".compact-trash"))
     java.nio.file.Files.move(sdir.resolve("bucket=4"), sdir.resolve(".compact-trash/bucket=4"))
@@ -478,16 +485,13 @@ class TsdbEngineSpec extends SparkTestBase {
     t.createMeasurement("db1", "m1", schema)
     import org.apache.spark.sql.functions.expr
     // simulate: the very first append committed data, then died before the
-    // watermark write — storage has rows, _meta has only the intent marker
+    // watermark write — storage has rows, _meta has only the intent record
     pts((100L, Some(1L), Some(1.5), Some(1.0f)),
         (150L, Some(2L), Some(2.5), Some(2.0f)))
       .withColumn("bucket", expr("time_ns div 100L"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"${t.rootDir}/db1/m1/data/series=s1")
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending"), "{\"version\":1}")
+    plantIntent(t, "s1")
     assert(t.seriesRange("db1", "m1", "s1").isEmpty)
     // the replay must drop the orphaned storage first — one copy of each
     // point, no overlap-verify false positive, watermark covers the batch
@@ -498,6 +502,64 @@ class TsdbEngineSpec extends SparkTestBase {
     val got = t.select("db1", "m1", "s1", Nil, 0L, 1000L).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(100L, 150L))
     assert(t.seriesRange("db1", "m1", "s1").contains(SeriesRange(100L, 150L)))
+  }
+
+  test("a crashed two-series record is recovered one series per writer") {
+    val t = mkTsdb()
+    freshSeries(t, baseRows: _*)
+    t.writePoints("db1", "m1", "s2", pts(baseRows: _*)) // both time_last = 420
+    import org.apache.spark.sql.functions.expr
+    // the crashed batch committed an orphan above time_last for each series
+    Seq("s1", "s2").foreach { sn =>
+      pts((470L, Some(9L), Some(9.0), Some(9.0f)))
+        .withColumn("bucket", expr("time_ns div 100L"))
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"${t.rootDir}/db1/m1/data/series=$sn")
+    }
+    val record = plantIntent(t, "s1", "s2")
+    def stored(sn: String): Seq[Long] =
+      spark.read.parquet(s"${t.rootDir}/db1/m1/data/series=$sn").select("time_ns")
+        .as[Long].collect().toSeq.sorted
+    def visible(sn: String): Seq[Long] =
+      t.select("db1", "m1", sn, Nil, 0L, 1000L).collect().map(_.getLong(0)).toSeq
+
+    // a write of s1 recovers s1 only: the record still names s2, whose
+    // orphan stays on disk and stays invisible
+    t.writePoints("db1", "m1", "s1", pts((480L, Some(1L), Some(1.25), Some(1.0f))))
+    assert(visible("s1") == baseRows.map(_._1) :+ 480L)
+    assert(java.nio.file.Files.readString(record) == "s2\n")
+    assert(stored("s2") == baseRows.map(_._1) :+ 470L)
+    assert(visible("s2") == baseRows.map(_._1))
+    // the next write of s2 truncates its orphan and removes the record
+    t.writePoints("db1", "m1", "s2", pts((490L, Some(1L), Some(1.25), Some(1.0f))))
+    assert(stored("s2") == baseRows.map(_._1) :+ 490L)
+    assert(!java.nio.file.Files.exists(record))
+  }
+
+  test("a leftover record naming only another series survives a write untouched") {
+    val t = mkTsdb()
+    freshSeries(t, baseRows: _*)
+    // the in-flight (or crashed) record of a concurrent one-series writer
+    val record = plantIntent(t, "s2")
+    val before = java.nio.file.Files.getLastModifiedTime(record)
+    t.writePoints("db1", "m1", "s1", pts((470L, Some(1L), Some(1.25), Some(1.0f))))
+    assert(t.seriesRange("db1", "m1", "s1").contains(SeriesRange(100L, 470L)))
+    assert(java.nio.file.Files.readString(record) == "s2\n")
+    assert(java.nio.file.Files.getLastModifiedTime(record) == before)
+  }
+
+  test("a per-series marker of the old form fails the write loudly; nothing lands") {
+    val t = mkTsdb()
+    freshSeries(t, baseRows: _*)
+    val old = java.nio.file.Paths.get(s"${t.rootDir}/db1/m1/_meta/.s1.pending")
+    java.nio.file.Files.createDirectories(old.getParent)
+    java.nio.file.Files.writeString(old, "{\"version\":1}")
+    val e = intercept[InvalidSchemaException] {
+      t.writePoints("db1", "m1", "s1", pts((470L, Some(1L), Some(1.25), Some(1.0f))))
+    }
+    assert(e.getMessage.contains(".s1.pending"), e.getMessage)
+    assert(t.seriesRange("db1", "m1", "s1").contains(SeriesRange(100L, 420L)))
+    assert(spark.read.parquet(s"${t.rootDir}/db1/m1/data/series=s1").count() == baseRows.size)
   }
 
   test("negative timestamps: write buckets match read pruning (floor semantics)") {
@@ -820,10 +882,7 @@ class TsdbEngineSpec extends SparkTestBase {
       .withColumn("bucket", expr("time_ns div 100L"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"${t.rootDir}/db1/m1/data/series=s9")
-    Seq("s1", "s9").foreach { sn =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"${t.rootDir}/db1/m1/_meta/.$sn.pending"), "{\"version\":1}")
-    }
+    plantIntent(t, "s1", "s9")
     // s9 has data but no watermark -> listSeries (meta-based) ignores it
     assert(t.listSeries("db1", "m1") == Seq("s1"))
     // replay the whole bulk batch: s1's orphan is truncated then re-appended
