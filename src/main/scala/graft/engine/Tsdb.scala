@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -940,10 +940,20 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   private def vindexDir(db: String, m: String, field: String) =
     new Path(measPath(db, m), s"_vindex/$field")
 
-  /** Every stored point of each watermarked series, whatever its range:
-    * the value index covers raw storage, not only the visible range. */
-  private def storedRanges(wms: Map[String, SeriesRange]): Map[String, (Long, Long)] =
-    wms.map { case (sn, _) => sn -> (Long.MinValue, Long.MaxValue) }
+  /** The field's value index, read with its known schema (inferring it
+    * would cost a job); none when the field has no index. */
+  private def valueIndex(db: String, m: String, f: Field): Option[DataFrame] = {
+    val ip = vindexDir(db, m, f.name)
+    if (!fs(ip).exists(ip)) None
+    else Some(spark.read.schema(StructType(Seq(
+      StructField(SeriesCol, StringType), StructField(BucketCol, LongType),
+      StructField("vmin", f.ftype.spark), StructField("vmax", f.ftype.spark),
+      StructField("tl_at_build", LongType)))).parquet(ip.toString))
+  }
+
+  private def fieldOf(schema: MeasurementSchema, field: String): Field =
+    schema.fields.find(_.name == field)
+      .getOrElse(throw new InvalidSchemaException(s"unknown field: $field"))
 
   /** Build (or rebuild) the per-(series, bucket) MIN/MAX sidecar for one
     * field — the engine's DATA-SKIPPING index for value predicates. The
@@ -951,117 +961,96 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * (src/libtsdb/select_op.cc:50-59); parquet footers do prune row groups
     * on values, but the planner still has to LIST and OPEN every bucket's
     * files to find that out — at 100 TB (millions of bucket dirs) the
-    * listing/footer I/O is the cost, not the decode. This sidecar is one
-    * aggregation job over the measurement producing bucket-count-scale
-    * rows, so a selective value band later drops bucket directories from
-    * the read's listing, before any file is opened.
+    * listing/footer I/O is the cost, not the decode. The sidecar holds
+    * bucket-count-scale rows, so a selective value band later drops bucket
+    * directories from the read's listing, before any file is opened.
+    * A build is [[refreshValueIndex]] keeping no old rows.
     *
-    * Staleness contract (what keeps every read correct under ANY index
-    * age): each row carries the series' `time_last` AT BUILD TIME. Appends
-    * are strictly monotone past `time_last` — the only other write shape
-    * is the bitwise-identical tail replay, which changes no value — so
-    * only buckets at/above `floorDiv(tl_at_build, bucketWidth)` can gain
-    * data after the build. A value-pruned read therefore ALWAYS scans
-    * those buckets regardless of their indexed min/max and only prunes
-    * among strictly-older, immutable ones, however old the index is: an
-    * old index prunes fewer buckets, never wrong ones. Delete-from-front
-    * leaves index rows for dropped buckets (the read's listing no longer
-    * holds them); `compact` rewrites layout, never values. Same
-    * single-writer contract as every other maintenance op
+    * Staleness: each row carries its series' `time_last` when the row was
+    * written (`tl_at_build`). Appends are strictly monotone past
+    * `time_last` — the only other write shape is the bitwise-identical
+    * tail replay, which changes no value — so only buckets at or above
+    * `floorDiv(tl_at_build, bucketWidth)` can gain data afterwards. A
+    * value-pruned read always scans those buckets whatever their indexed
+    * min/max and prunes only among strictly-older, immutable ones: an old
+    * index prunes fewer buckets, never wrong ones. `compact` rewrites
+    * layout, never values.
+    *
+    * Dead rows: rows of buckets that a delete or retention has removed
+    * prune nothing (a read's listing no longer holds those buckets), and
+    * the next build or refresh drops them, so the sidecar follows the
+    * live buckets.
+    *
+    * Crash safety: the sidecar is written beside the live one and swapped
+    * in by delete + rename, so a failed or crashed write leaves the old
+    * index or none, and a read without an index is the plain (correct)
+    * scan. Same single-writer contract as every other maintenance op
     * (doc/LOCKING.txt).
     *
     * @return number of (series, bucket) entries indexed */
-  def buildValueIndex(db: String, m: String, field: String): Long = {
-    val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
-    import spark.implicits._
-    val wms = wmStore(db, m).load()
-    val out = vindexDir(db, m, field)
-    if (wms.isEmpty) { // nothing to index; an empty dir would confuse reads
-      if (fs(out).exists(out)) fs(out).delete(out, true)
-      return 0L
-    }
-    val wdf = wms.toSeq.map { case (s, r) => (s, r.timeLast) }
-      .toDF(SeriesCol, "tl_at_build")
-    val idx = scan(db, m, schema, storedRanges(wms))
-      .groupBy(col(SeriesCol), col(BucketCol))
-      .agg(min(col(field)).as("vmin"), max(col(field)).as("vmax"))
-      .join(broadcast(wdf), SeriesCol)
-    // bucket-count-scale output: one small file keeps the read-side driver
-    // lookup a single-footer operation
-    idx.coalesce(1).write.mode("overwrite").parquet(out.toString)
-    spark.read.parquet(out.toString).count()
-  }
+  def buildValueIndex(db: String, m: String, field: String): Long =
+    writeValueIndex(db, m, field, keepOld = false)
 
-  /** INCREMENTAL maintenance of the value sidecar — the decay-prevention
-    * path [[buildValueIndex]]'s staleness contract needs: appends past the
-    * recorded watermark widen the always-scanned span, so an old index
-    * prunes less and less of a read. This refresh re-aggregates ONLY
-    * buckets at/above each series' build watermark (plus series the index
-    * has never seen), keeps the immutable rows as-is, and advances
-    * `tl_at_build` — per-refresh cost scales with the data appended since
-    * the last build, never the measurement (the
-    * reference maintains its time index on every commit,
-    * src/libtsdb/write.cc:36-447; a value index earns the same treatment).
-    * Swap is delete+rename of the one-file sidecar: a crash between leaves
-    * no index, and reads without an index are the plain (correct) scan.
+  /** INCREMENTAL maintenance of the value sidecar (see [[buildValueIndex]]
+    * for its contract): appends past `tl_at_build` widen the always-scanned
+    * span, so an old index prunes less and less of a read. A refresh
+    * re-aggregates only each indexed series' buckets at or above its stale
+    * floor, and every bucket of a series the index has never seen, and
+    * keeps the older rows of buckets still stored, so per-refresh cost
+    * scales with the data appended since the last write (the reference
+    * maintains its time index on every commit,
+    * src/libtsdb/write.cc:36-447). Without an index it is a build.
     * @return total (series, bucket) entries after the refresh */
-  def refreshValueIndex(db: String, m: String, field: String): Long = {
+  def refreshValueIndex(db: String, m: String, field: String): Long =
+    writeValueIndex(db, m, field, keepOld = true)
+
+  /** The one sidecar writer: fresh rows from one [[scan]] over each
+    * series' buckets from its stale floor up (all of them without an old
+    * row), the old rows below the floor when `keepOld`, all of them cut at
+    * each series' delete watermark bucket; the floor, the cut and the new
+    * `tl_at_build` are per-series lookups, so the plan carries no series
+    * literal however many series there are. */
+  private def writeValueIndex(db: String, m: String, field: String, keepOld: Boolean): Long = {
     val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
-    val out = vindexDir(db, m, field)
-    if (!fs(out).exists(out)) return buildValueIndex(db, m, field)
-    import spark.implicits._
+    val f = fieldOf(schema, field)
+    val old = if (keepOld) valueIndex(db, m, f) else None
     val wms = wmStore(db, m).load()
-    if (wms.isEmpty) { fs(out).delete(out, true); return 0L }
-    // per-series mutable-bucket floor at the PREVIOUS build: driver-side,
-    // series-count scale (same order as the watermark table itself)
-    val staleLo = spark.read.parquet(out.toString)
-      .groupBy(col(SeriesCol)).agg(min("tl_at_build").as("tl"))
-      .collect().map(r => r.getString(0) ->
-        Math.floorDiv(r.getLong(1), bucketWidth)).toMap
-    // zero-row sidecar (e.g. built right after retention deleted every
-    // bucket): nothing to keep or diff against — rebuild from scratch
-    // instead of tripping over an empty stale map
-    if (staleLo.isEmpty) { fs(out).delete(out, true)
-      return buildValueIndex(db, m, field) }
-    val oldSeries = staleLo.keys.toSeq
-    val minStale = staleLo.values.min
-    val staleDf = broadcast(staleLo.toSeq.toDF(SeriesCol, "_stale_lo"))
-    val old = spark.read.parquet(out.toString)
-      .select(col(SeriesCol), col(BucketCol), col("vmin"), col("vmax"))
-      .join(staleDf, SeriesCol)
-    val keepOld = old.filter(col(BucketCol) < col("_stale_lo"))
-      .select(col(SeriesCol), col(BucketCol), col("vmin"), col("vmax"))
-    val base = scan(db, m, schema, storedRanges(wms))
-    // literal predicates so the scan prunes statically: indexed series
-    // from their global minimum stale bucket up (refined per series by the
-    // broadcast join), never-indexed series in full
-    val freshExisting = base
-      .filter(col(SeriesCol).isin(oldSeries: _*) && col(BucketCol) >= minStale)
-      .join(staleDf, SeriesCol)
-      .filter(col(BucketCol) >= col("_stale_lo"))
-      .select(base.columns.map(col): _*)
-    val freshNew = base.filter(!col(SeriesCol).isin(oldSeries: _*))
-    val fresh = freshExisting.unionByName(freshNew)
+    // each indexed series' stale floor: the bucket of its time_last when
+    // its rows were written
+    val floors = old.fold(Map.empty[String, Long])(_.groupBy(col(SeriesCol))
+      .agg(min("tl_at_build")).collect()
+      .map(r => r.getString(0) -> Math.floorDiv(r.getLong(1), bucketWidth)).toMap)
+    // every stored point, not only the visible range: bucket admission is
+    // the narrowed listing
+    val allOfTime = wms.map { case (sn, _) => sn -> (Long.MinValue, Long.MaxValue) }
+    val fresh = scan(db, m, schema, allOfTime, sn =>
+        bucketDirs(seriesDir(db, m, sn)).filter { case (b, _) => floors.get(sn).forall(b >= _) })
       .groupBy(col(SeriesCol), col(BucketCol))
       .agg(min(col(field)).as("vmin"), max(col(field)).as("vmax"))
-    val wdf = wms.toSeq.map { case (s, r) => (s, r.timeLast) }
-      .toDF(SeriesCol, "tl_at_build")
-    // keepOld (bucket < stale_lo) and fresh (bucket >= stale_lo) are
-    // disjoint by construction; the inner watermark join drops series
-    // deleted since the last build
-    val merged = keepOld.unionByName(fresh).join(broadcast(wdf), SeriesCol)
+    val out = vindexDir(db, m, field)
     val tmp = new Path(measPath(db, m), s"_vindex/.$field.refreshing")
     fs(tmp).delete(tmp, true)
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
+    val written = Observation()
+    withSeriesBounds(wms.map { case (sn, r) =>
+      sn -> (Math.floorDiv(r.timeFirst, bucketWidth), floors.getOrElse(sn, Long.MinValue))
+    }) { (live, floor) =>
+      withSeriesBounds(wms.map { case (sn, r) => sn -> (r.timeLast, r.timeLast) }) { (tl, _) =>
+        // old rows below the floor and fresh rows at or above it are
+        // disjoint; rows below the delete watermark's bucket, or of a
+        // series with no watermark (NULL bounds), drop
+        old.fold(fresh)(_.filter(col(BucketCol) < floor).drop("tl_at_build")
+            .unionByName(fresh))
+          .filter(col(BucketCol) >= live)
+          .withColumn("tl_at_build", tl)
+          .observe(written, count(lit(1)).as("n"))
+          // bucket-count-scale output: one small file keeps the read-side
+          // driver lookup a single-footer operation
+          .coalesce(1).write.parquet(tmp.toString)
+      }
+    }
     fs(out).delete(out, true)
-    FileContext.getFileContext(out.toUri, hconf)
-      .rename(tmp, out, Options.Rename.NONE)
-    n
+    FileContext.getFileContext(out.toUri, hconf).rename(tmp, out, Options.Rename.NONE)
+    written.get("n").asInstanceOf[Long]
   }
 
   /** SELECT `(time_ns, field)` of one series in `[t0, t1]` with
@@ -1077,30 +1066,27 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def selectValueRange(db: String, m: String, series: String, field: String,
                        vLo: Double, vHi: Double, t0: Long, t1: Long): DataFrame = {
     val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
+    val f = fieldOf(schema, field)
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
     val (c0, c1) = (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))
-    val ip = vindexDir(db, m, field)
-    val dropped: Set[Long] =
-      if (c0 > c1 || !fs(ip).exists(ip)) Set.empty
-      else {
-        // driver-side lookup is index-row-scale for ONE series' bucket
-        // range — the same order as the read's own bucket listing
-        val rows = spark.read.parquet(ip.toString)
-          .filter(col(SeriesCol) === series && col(BucketCol)
-            .between(Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth)))
-          .select(col(BucketCol), col("vmin").cast("double"),
-            col("vmax").cast("double"), col("tl_at_build"))
-          .collect()
-        // the double casts above round ≤1 ulp, so widen by one ulp each way
-        // rather than ever dropping a boundary bucket
-        rows.filter { r =>
-          r.getLong(0) < Math.floorDiv(r.getLong(3), bucketWidth) && (r.isNullAt(1) ||
-            Math.nextUp(r.getDouble(2)) < vLo || Math.nextDown(r.getDouble(1)) > vHi)
-        }.map(_.getLong(0)).toSet
-      }
+    val index = if (c0 > c1) None else valueIndex(db, m, f)
+    val dropped: Set[Long] = index.fold(Set.empty[Long]) { idx =>
+      // driver-side lookup is index-row-scale for ONE series' bucket
+      // range — the same order as the read's own bucket listing
+      val rows = idx
+        .filter(col(SeriesCol) === series && col(BucketCol)
+          .between(Math.floorDiv(c0, bucketWidth), Math.floorDiv(c1, bucketWidth)))
+        .select(col(BucketCol), col("vmin").cast("double"),
+          col("vmax").cast("double"), col("tl_at_build"))
+        .collect()
+      // the double casts above round ≤1 ulp, so widen by one ulp each way
+      // rather than ever dropping a boundary bucket
+      rows.filter { r =>
+        r.getLong(0) < Math.floorDiv(r.getLong(3), bucketWidth) && (r.isNullAt(1) ||
+          Math.nextUp(r.getDouble(2)) < vLo || Math.nextDown(r.getDouble(1)) > vHi)
+      }.map(_.getLong(0)).toSet
+    }
     scan(db, m, schema, Map(series -> (c0, c1)),
         sn => bucketDirs(seriesDir(db, m, sn)).filterNot { case (b, _) => dropped(b) })
       .filter(col(field).between(vLo, vHi)).select(TimeCol, field)

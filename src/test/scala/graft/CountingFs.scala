@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
 
 /** The local filesystem under its own scheme, `countfs:///<local path>`,
   * recording the `listStatus`, `create`, `rename` and `delete` calls made
@@ -23,10 +24,12 @@ class CountingFs extends RawLocalFileSystem {
     super.listStatus(f)
   }
 
-  /** The overload `FileSystem.create(Path, boolean)` reaches. */
+  /** The overload `FileSystem.create(Path, boolean)` and parquet's file
+    * writer reach. */
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
                       blockSize: Long, progress: Progressable): FSDataOutputStream = {
     CountingFs.record("create", f)
+    CountingFs.injectFault(f)
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
@@ -58,6 +61,18 @@ object CountingFs {
 
   private def record(op: String, p: Path): Unit =
     if (TaskContext.get() == null) driverCalls.add(Call(op, p))
+
+  private val createFault = new AtomicReference[Path => Boolean]()
+
+  /** Arms a one-shot fault: the next `create` of a path `hit` accepts, on
+    * the driver or in a task, throws an `IOException` (a failed write). */
+  def failNextCreate(hit: Path => Boolean): Unit = createFault.set(hit)
+
+  private def injectFault(p: Path): Unit = {
+    val hit = createFault.get()
+    if (hit != null && hit(p) && createFault.compareAndSet(hit, null))
+      throw new java.io.IOException(s"injected create failure: $p")
+  }
 
   /** Registers the scheme with the session's Hadoop configuration; a
     * `Tsdb` built after this call may be rooted at [[path]]. */

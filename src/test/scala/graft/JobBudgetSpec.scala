@@ -34,7 +34,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * 7, `sumWindowsAll` 4, `applyRetention` 4, a one-series `deleteUpTo` 2,
   * `compact` of one series 3. Through `scan`: 4, 2, 4, 2, 2, 2 and 3;
   * those are the budgets. A value-pruned `selectValueRange` (index lookup
-  * plus the pruned read) launches 3.
+  * plus the pruned read) launched 3 while the lookup inferred the
+  * sidecar's schema with a job of its own; read with its known schema, 2.
   *
   * FS calls: driver-side `listStatus` calls, counted by [[CountingFs]] on
   * the same fixture. Counted while ops still listed some directories
@@ -50,7 +51,17 @@ import java.util.concurrent.atomic.AtomicInteger
   * `listStatus` calls (`_wm`); its replay made 1 `listStatus` and wrote
   * nothing. With one intent record per batch: 2 creates, 2 renames and 1
   * delete, plus one `listStatus` of `_meta` per write (3 and 2); those are
-  * the budgets. */
+  * the budgets.
+  *
+  * Value index, on the same fixture under [[CountingFs]]. With two sidecar
+  * writers (a build joining a broadcast watermark table, a refresh with
+  * literal series lists and two broadcast joins over a listing of every
+  * stored bucket, each re-reading its output to count it), a
+  * `buildValueIndex` launched 6 jobs and made 124 `listStatus` calls, and
+  * a `refreshValueIndex` after 3 appends to each of 5 series 11 jobs and
+  * 131 calls. The one writer (a refresh's fresh part one `scan` of each
+  * series' buckets from its stale floor up, the row count observed on
+  * the write): 2 and 123, 4 and 89; those are the budgets. */
 class JobBudgetSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -168,7 +179,29 @@ class JobBudgetSpec extends SparkTestBase {
     val (vj, v) = jobsOf(pruned())
     assert(v.length == 21)
     info(s"jobs: selectValueRange $vj")
-    assert(vj <= 3, s"selectValueRange launched $vj jobs")
+    assert(vj <= 2, s"selectValueRange launched $vj jobs")
+  }
+
+  test("value index: a build and a refresh stay in budget; the refresh lists from each floor up") {
+    CountingFs.register(spark)
+    val t = fixture(CountingFs.path(tmpDir("tsdb-fs-")))
+    assert(t.buildValueIndex("db", "m", "b") == NSeries * 2L) // warm-up
+    val (bj, (bl, bn)) = jobsOf(CountingFs.listStatusOf(t.buildValueIndex("db", "m", "a")))
+    assert(bn == NSeries * 2L)
+    // three appends to each of 5 series open their bucket 2
+    for (sn <- 0 until 5; k <- 0 until 3)
+      t.writePoints("db", "m", s"s$sn", points(sn, 120 + 6 * k, 6))
+    val (rj, (rl, rn)) = jobsOf(CountingFs.listStatusOf(t.refreshValueIndex("db", "m", "a")))
+    assert(rn == NSeries * 2L + 5)
+    info(s"value index: build $bj jobs, $bl listStatus; refresh $rj jobs, $rl listStatus")
+    assert(bj <= 2, s"buildValueIndex launched $bj jobs")
+    assert(rj <= 4, s"refreshValueIndex launched $rj jobs")
+    assert(bl <= 123, s"buildValueIndex made $bl listStatus calls")
+    // every series directory, then the buckets at or above each series'
+    // floor (bucket 1; bucket 2 of the 5 appended series), not every
+    // stored bucket; 4 more list the old sidecar and commit the new one
+    val fromFloor = NSeries + NSeries + 5
+    assert(rl <= fromFloor + 4, s"refreshValueIndex made $rl listStatus calls")
   }
 
   test("FS calls: zoom and a 40-series applyRetention list each directory once") {

@@ -2,6 +2,9 @@ package graft
 
 import graft.engine._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Engine semantics: the reference's catalog/write/delete behavior matrix
@@ -302,6 +305,25 @@ class TsdbEngineSpec extends SparkTestBase {
     assert(w == Seq(("s1", 3L), ("s2", 2L)))
   }
 
+  /** Every node of an executed plan, through adaptive plans and their
+    * query stages. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec        => planNodes(s.plan)
+    case other                    => other +: other.children.flatMap(planNodes)
+  }).distinct
+
+  /** Literal series membership tests — In, InSet, or EqualTo against a
+    * literal — anywhere in an executed plan: a plan carrying one grows
+    * with the series count. Structural, not a rendered-string match. */
+  private def seriesLiteralTests(p: SparkPlan): Seq[Expression] =
+    planNodes(p).flatMap(_.expressions).flatMap(_.collect {
+      case e: In if e.value.references.exists(_.name == MeasurementSchema.SeriesCol) => e
+      case e: InSet if e.child.references.exists(_.name == MeasurementSchema.SeriesCol) => e
+      case e @ EqualTo(l, _: Literal)
+        if l.references.exists(_.name == MeasurementSchema.SeriesCol) => e
+    })
+
   test("zoomAll: per-series dispatch equals per-series zoom; one scan + one shuffle") {
     val t = mkTsdb()
     t.createDatabase("db1")
@@ -333,46 +355,30 @@ class TsdbEngineSpec extends SparkTestBase {
     // plan gate: the data job is ONE parquet scan + ONE exchange (the
     // conditional-key aggregate); the count pre-pass already ran at call
     // time. A per-series loop or a second data shuffle regresses this.
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.FileSourceScanExec
-    def flat(p: SparkPlan): Seq[SparkPlan] = (p match {
-      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
-      case s: QueryStageExec        => flat(s.plan)
-      case other                    => other +: other.children.flatMap(flat)
-    }).distinct
-    val nodes = flat(all.queryExecution.executedPlan)
+    val nodes = planNodes(all.queryExecution.executedPlan)
     assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1,
       s"expected one scan:\n${all.queryExecution.executedPlan}")
     assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
       s"expected one shuffle:\n${all.queryExecution.executedPlan}")
 
     // the raw/mean decision is a lookup over the collected raw set, so the
-    // plan never grows with the series count. Structural, not a
-    // rendered-string match: no literal series membership test — In,
-    // InSet, or EqualTo-vs-literal — anywhere in the executed plan, with
+    // plan never grows with the series count: no literal series test with
     // 1 raw series (the optimizer would collapse a one-element In to
     // EqualTo) and with 2 (a literal In)
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, InSet, Literal}
-    val series = graft.engine.MeasurementSchema.SeriesCol
-    def seriesLiteralTests(df: DataFrame) = {
+    def literalTests(df: DataFrame) = {
       df.collect()
-      flat(df.queryExecution.executedPlan).flatMap(_.expressions).flatMap(_.collect {
-        case e: In if e.value.references.exists(_.name == series) => e
-        case e: InSet if e.child.references.exists(_.name == series) => e
-        case e @ EqualTo(l, _: Literal)
-          if l.references.exists(_.name == series) => e
-      })
+      seriesLiteralTests(df.queryExecution.executedPlan)
     }
     val raw2 = t.zoomAll("db1", "m1", "v", 100L, 219L, maxDataPoints = 1000)
     assert(raw2.collect().forall(_.getString(4) == "raw"))
     for (df <- Seq(all, raw2))
-      assert(seriesLiteralTests(df).isEmpty,
+      assert(literalTests(df).isEmpty,
         s"zoomAll must not test series against literals:\n${df.queryExecution.executedPlan}")
     // the checker itself must BITE: a one-series select carries
     // `series = <literal>`
-    assert(seriesLiteralTests(t.select("db1", "m1", "sparse", Seq("v"), 100L, 219L))
+    assert(literalTests(t.select("db1", "m1", "sparse", Seq("v"), 100L, 219L))
       .exists(_.isInstanceOf[EqualTo]), "the series-literal check proves nothing")
   }
 
@@ -789,6 +795,15 @@ class TsdbEngineSpec extends SparkTestBase {
     val s2 = t.selectValueRange("db1", "m1", "s2", "v", 50.0, 150.0, 0L, 799L)
     assert(s2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       Seq((10L, 70.0)))
+    // retention drops buckets 0-2 of s1 (time_first 310) and every bucket
+    // of s2 (delete into the future): the refresh drops their rows, so the
+    // sidecar holds exactly the live buckets 3-7 of s1
+    t.applyRetention("db1", "m1", 250L)
+    assert(t.refreshValueIndex("db1", "m1", "v") == 5L)
+    val live = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 799L)
+    assert(live.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((410L, 100.5)))
+    // matching bucket 4 plus the watermark bucket 7
+    assert(filesRead(live) == 2L)
     // refresh on a root with no index at all == full build
     val t2 = mkTsdb()
     t2.createDatabase("db1"); t2.createMeasurement("db1", "m1", schema)
@@ -799,8 +814,8 @@ class TsdbEngineSpec extends SparkTestBase {
   test("refreshValueIndex on a zero-row sidecar rebuilds instead of crashing") {
     // retention can wipe every bucket while the watermark survives;
     // buildValueIndex then writes a VALID 0-row sidecar. A later refresh
-    // has no per-series stale floor to diff against — it must fall back to
-    // a full rebuild, not throw on an empty min.
+    // finds no per-series stale floor in it: every series counts as never
+    // indexed and is aggregated in full.
     val t = new Tsdb(spark, tmpDir("tsdb-test-"), requestedBucketWidth = 100L)
     t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
     t.writePoints("db1", "m1", "s1", vpts((10L, Some(1.0)), (110L, Some(100.0))))
@@ -813,6 +828,63 @@ class TsdbEngineSpec extends SparkTestBase {
     val df = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 999L)
     assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       Seq((410L, 100.5)))
+  }
+
+  test("a failed buildValueIndex leaves no sidecar that breaks later reads") {
+    CountingFs.register(spark)
+    val t = new Tsdb(spark, CountingFs.path(tmpDir("tsdb-test-")), requestedBucketWidth = 100L)
+    t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
+    t.writePoints("db1", "m1", "s1", vpts(
+      (10L, Some(1.0)), (110L, Some(100.0)), (210L, Some(3.0))))
+    // the sidecar's data file cannot be created: the write job fails
+    CountingFs.failNextCreate(p =>
+      p.toString.contains("/_vindex/") && p.getName.startsWith("part-"))
+    intercept[Exception](t.buildValueIndex("db1", "m1", "v"))
+    val df = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 299L)
+    assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((110L, 100.0)))
+    assert(t.refreshValueIndex("db1", "m1", "v") == 3L)
+    // and the index now prunes bucket 0
+    val pruned = t.selectValueRange("db1", "m1", "s1", "v", 50.0, 150.0, 0L, 299L)
+    assert(pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((110L, 100.0)))
+    assert(filesRead(pruned) == 2L)
+  }
+
+  test("refreshValueIndex tests no series against literals, with 1 and 2 series indexed") {
+    import org.apache.spark.ListenerBridge
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    for (indexed <- 1 to 2) {
+      val t = mkTsdb()
+      t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
+      def write(i: Int, t0: Long) =
+        t.writePoints("db1", "m1", s"s$i", vpts((t0, Some(i.toDouble)), (t0 + 100L, Some(50.0))))
+      (1 to indexed).foreach(write(_, 10L))
+      assert(t.buildValueIndex("db1", "m1", "v") == 2L * indexed)
+      // the indexed series grow; the others are new to the index
+      (1 to indexed).foreach(write(_, 210L))
+      (indexed + 1 to 3).foreach(write(_, 10L))
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      val n = try {
+        val n = t.refreshValueIndex("db1", "m1", "v")
+        ListenerBridge.drain(spark.sparkContext)
+        n
+      } finally spark.listenerManager.unregister(l)
+      // indexed series: buckets 0-3; the others: buckets 0-1
+      assert(n == 4L * indexed + 2L * (3 - indexed))
+      val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+      assert(all.exists(planNodes(_).exists(_.isInstanceOf[DataWritingCommandExec])),
+        s"the sidecar write was not captured:\n${all.mkString("\n")}")
+      for (p <- all)
+        assert(seriesLiteralTests(p).isEmpty,
+          s"refreshValueIndex must not test series against literals ($indexed indexed):\n$p")
+    }
   }
 
   test("selectValueRange without an index is the plain filtered scan; bad field rejects") {
