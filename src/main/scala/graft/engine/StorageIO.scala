@@ -1,21 +1,24 @@
 package graft.engine
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
 
 /** Shared small-object IO for the engine's metadata files (schemas,
   * watermarks, intent records) — ONE implementation of the atomic
-  * tmp+overwrite-rename contract (reference root.cc:179-194) so a
-  * durability fix can never drift between call sites.
+  * tmp+rename contract (reference root.cc:179-194) so a durability fix can
+  * never drift between call sites.
   *
-  * `atomicWrite` is not cheap. On a local filesystem without native Hadoop
-  * IO it forks one `chmod` (the create's `setPermission`) and about three
-  * `stat`s (the `FileContext` rename's link-status checks). Measured on a
-  * 4-core host: 17-20 ms per call (create ~3.3 ms, rename ~13 ms, against
-  * 0.03 ms for a plain `FileSystem.rename`). Callers batch it — one file
-  * per operation, never one per series. */
+  * Every file it writes is new: `_config.json` and `_schema.json` are
+  * written only when absent, and intent records, watermark deltas and
+  * snapshots are uuid-named, never rewritten. So the rename is a plain
+  * `FileSystem.rename` (0.03 ms), not `FileContext.rename(OVERWRITE)`,
+  * whose link-status checks fork about three `stat`s on a local filesystem
+  * without native Hadoop IO (~13 ms). The create still forks one `chmod`
+  * (its `setPermission`, ~3.3 ms, measured on a 4-core host), so callers
+  * batch it — one file per operation, never one per series. */
 private[engine] object StorageIO {
 
   def readString(p: Path, hconf: Configuration): String = {
@@ -23,15 +26,15 @@ private[engine] object StorageIO {
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** tmp + overwrite-rename — readers see either the old or the new content,
-    * never a torn write. */
+  /** tmp + rename — readers see no file or the whole content, never a torn
+    * write. Fails loudly when the rename does not happen (on a store that
+    * will not replace an existing `p`, for one). */
   def atomicWrite(p: Path, content: String, hconf: Configuration): Unit = {
     val f = p.getFileSystem(hconf)
     f.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val fc = FileContext.getFileContext(p.toUri, hconf)
-    fc.rename(tmp, p, Options.Rename.OVERWRITE)
+    if (!f.rename(tmp, p)) throw new IOException(s"could not rename $tmp to $p")
   }
 }

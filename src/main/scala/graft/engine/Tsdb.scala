@@ -301,8 +301,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       // and pays nothing more). Each series of THIS batch that one names is
       // recovered — its tail truncated (bucket-pruned) above time_last or,
       // with NO watermark yet (a crashed FIRST append), its data dir dropped
-      // — and struck from the record. Series of other writers stay named:
-      // their writer recovers them.
+      // — and struck from the record: a fresh record names the rest, then
+      // the old one goes (a crash between the two leaves both, and
+      // recovering a series twice is idempotent). Series of other writers
+      // stay named: their writer recovers them.
       val batch = stats.map(_.getString(0)).toSet
       val meta = metaDir(db, m)
       val leftovers = try fs(meta).listStatus(meta).toSeq.map(_.getPath)
@@ -316,7 +318,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
             case None    => fs(p).delete(seriesDir(db, m, sn), true)
           }
         }
-        if (mine.nonEmpty) { if (rest.isEmpty) fs(p).delete(p, false) else writeIntent(p, rest) }
+        if (mine.nonEmpty) {
+          if (rest.nonEmpty) writeIntent(newIntent(db, m), rest)
+          fs(p).delete(p, false)
+        }
       }
 
       // a fully-replayed / fully-discarded batch writes nothing
@@ -329,7 +334,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
         // `_temporary/` dir — concurrent same-directory jobs corrupt each
         // other's staging. Readers see the same layout either way (`series=`
         // is a partition directory under basePath).
-        val intent = new Path(metaDir(db, m), s".append-${java.util.UUID.randomUUID}.pending")
+        val intent = newIntent(db, m)
         writeIntent(intent, toWrite.map(_.getString(0)))
         val (target, parts) =
           if (toWrite.length == 1)
@@ -720,11 +725,23 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   /** Visible points of ONE series in `[t0, t1]` — the range is clamped on
     * the driver from the watermark, so both bucket pruning and the parquet
     * pushdown see tight constants. */
-  def visibleSeries(db: String, m: String, series: String, t0: Long, t1: Long): DataFrame = {
+  def visibleSeries(db: String, m: String, series: String, t0: Long, t1: Long): DataFrame =
+    seriesFrame(db, m, series, Nil, t0, t1)._2
+
+  /** One series' visible points in `[t0, t1]` (see [[visibleSeries]]) with
+    * the series column set to it, and the fields an op reads (none named =
+    * every field). Each named field is checked first, so an unknown one
+    * fails with [[InvalidSchemaException]] before anything is read or
+    * written. */
+  private def seriesFrame(db: String, m: String, series: String, fields: Seq[String],
+                          t0: Long, t1: Long): (Seq[Field], DataFrame) = {
     val schema = getSchema(db, m)
+    val checked = if (fields.isEmpty) schema.fields else fields.map(fieldOf(schema, _))
     val wm = seriesRange(db, m, series)
       .getOrElse(throw new NoSuchSeriesException(db, m, series))
-    scan(db, m, schema, Map(series -> (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))))
+    (checked, scan(db, m, schema,
+      Map(series -> (math.max(t0, wm.timeFirst), math.min(t1, wm.timeLast))))
+      .withColumn(SeriesCol, lit(series)))
   }
 
   /** SELECT fields FROM db/m/series WHERE t0 <= time <= t1 [LIMIT n | LAST n]
@@ -732,14 +749,8 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def select(db: String, m: String, series: String, fields: Seq[String],
              t0: Long, t1: Long, limit: Option[Int] = None,
              last: Option[Int] = None): DataFrame = {
-    val schema = getSchema(db, m)
-    val proj = TimeCol +: (if (fields.isEmpty) schema.fields.map(_.name) else {
-      val unknown = fields.filterNot(schema.fields.map(_.name).contains)
-      if (unknown.nonEmpty)
-        throw new InvalidSchemaException(s"unknown fields: ${unknown.mkString(",")}")
-      fields
-    })
-    val base = visibleSeries(db, m, series, t0, t1)
+    val (fs, base) = seriesFrame(db, m, series, fields, t0, t1)
+    val proj = TimeCol +: fs.map(_.name)
     last match {
       case Some(k) => TimeSeriesOps.selectLast(base, TimeCol, t0, t1, k, proj)
       case None    => TimeSeriesOps.selectRange(base, TimeCol, t0, t1, proj, limit)
@@ -751,32 +762,35 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def countPoints(db: String, m: String, series: String, t0: Long, t1: Long): DataFrame =
     TimeSeriesOps.countPoints(visibleSeries(db, m, series, t0, t1), TimeCol, t0, t1)
 
-  /** Windowed sum/min/max/count incl. empty windows (reference sum_op). */
+  /** Windowed sum/min/max/count incl. empty windows (reference sum_op) of
+    * one field: [[sumWindowsMulti]] of `field`, its columns named
+    * `window_start, sum_value, min_value, max_value, n`. */
   def sumWindows(db: String, m: String, series: String, field: String,
                  t0: Long, t1: Long, windowWidth: Long): DataFrame =
-    TimeSeriesOps.sumWindows(visibleSeries(db, m, series, t0, t1),
-      TimeCol, field, t0, t1, windowWidth)
+    sumWindowsMulti(db, m, series, Seq(field), t0, t1, windowWidth)
+      .toDF("window_start", "sum_value", "min_value", "max_value", "n")
 
   /** Multi-field windowed aggregation — the reference sum_op's actual
     * signature (field LIST, one pass: src/libtsdb/sum_op.cc:115-183).
     * Empty fields list = all schema fields. The default sum expression is
-    * derived PER FIELD from the measurement schema: integer fields take the
-    * native exact integer sum (a decimal-2 accumulation would come back as
-    * double and lose exactness past 2^53), floats take the order-independent
-    * decimal-2 accumulation, bools count trues. Pass `sumFor` to override. */
+    * the per-type rule [[sumOf]]. Pass `sumFor` to override. */
   def sumWindowsMulti(db: String, m: String, series: String, fields: Seq[String],
                       t0: Long, t1: Long, windowWidth: Long,
                       sumFor: Option[String => Column] = None): DataFrame = {
-    val schema = getSchema(db, m)
-    val fs = if (fields.isEmpty) schema.fields.map(_.name) else fields
-    val byType: String => Column = c =>
-      schema.fields.find(_.name == c).map(_.ftype) match {
-        case Some(FieldType.F64) | Some(FieldType.F32) => TimeSeriesOps.sumExact2(col(c))
-        case Some(FieldType.Bool)                      => sum(col(c).cast("long"))
-        case _                                         => sum(col(c)) // integer/decimal: native exact
-      }
-    TimeSeriesOps.sumWindowsMulti(visibleSeries(db, m, series, t0, t1),
-      TimeCol, fs, t0, t1, windowWidth, sumFor.getOrElse(byType))
+    val (fs, pts) = seriesFrame(db, m, series, fields, t0, t1)
+    val byName = fs.map(f => f.name -> f).toMap
+    TimeSeriesOps.sumWindowsMulti(pts, TimeCol, fs.map(_.name), t0, t1, windowWidth,
+      sumFor.getOrElse(c => sumOf(byName(c))))
+  }
+
+  /** The exact windowed sum of a field, by type: floats take the
+    * order-independent decimal-2 accumulation, integers the native exact
+    * sum (a decimal-2 accumulation overflows past 10^16 and would come back
+    * as double, inexact past 2^53), bools count trues. */
+  private def sumOf(f: Field): Column = f.ftype match {
+    case FieldType.F64 | FieldType.F32 => TimeSeriesOps.sumExact2(col(f.name))
+    case FieldType.Bool                => sum(col(f.name).cast("long"))
+    case _                             => sum(col(f.name))
   }
 
   /** Windowed sum/min/max/count for EVERY series of a measurement in ONE
@@ -789,17 +803,15 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * `sum_op`, src/libtsdb/sum_op.cc:9-10); NON-EMPTY windows only — the
     * empty-window spine is a per-series range concept the single-series
     * faces emit; materializing S×W spine cells here would dwarf the data.
-    * Float sums use the order-independent decimal-2 accumulation. */
+    * Sums follow the per-type rule [[sumOf]]. */
   def sumWindowsAll(db: String, m: String, field: String,
                     t0: Long, t1: Long, windowWidth: Long): DataFrame = {
-    val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
+    val f = fieldOf(getSchema(db, m), field)
     require(windowWidth > 0, "window width must be positive")
     visibleRange(db, m, t0, t1)
       .groupBy(col(SeriesCol),
-        (col(TimeCol) - pmod(col(TimeCol), lit(windowWidth))).as("window_start"))
-      .agg(TimeSeriesOps.sumExact2(col(field)).as("sum_value"),
+        TimeSeriesOps.windowStart(col(TimeCol), windowWidth).as("window_start"))
+      .agg(sumOf(f).as("sum_value"),
         min(col(field)).as("min_value"), max(col(field)).as("max_value"),
         count(col(field)).as("n"))
   }
@@ -808,8 +820,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * (src/tsdbcli2/main.cc:203-238); non-empty windows only. */
   def meanWindows(db: String, m: String, series: String, field: String,
                   t0: Long, t1: Long, windowWidth: Long): DataFrame =
-    TimeSeriesOps.meanWindows(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+    TimeSeriesOps.meanWindows(seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, t0, t1, windowWidth)
 
   /** Grafana-style ZOOM dispatch (reference datasource.go:236-249: the
@@ -824,10 +835,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def zoom(db: String, m: String, series: String, field: String,
            t0: Long, t1: Long, maxDataPoints: Int): DataFrame = {
     require(maxDataPoints > 0, "maxDataPoints must be positive")
-    val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
-    val base = visibleSeries(db, m, series, t0, t1)
+    val base = seriesFrame(db, m, series, Seq(field), t0, t1)._2
     val np = TimeSeriesOps.countPoints(base, TimeCol, t0, t1)
       .select("npoints").head().getLong(0)
     if (np <= maxDataPoints)
@@ -837,7 +845,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     else {
       val w = zoomWidth(t0, t1, maxDataPoints)
       base.filter(col(field).isNotNull)
-        .groupBy((col(TimeCol) - pmod(col(TimeCol), lit(w))).as(TimeCol))
+        .groupBy(TimeSeriesOps.windowStart(col(TimeCol), w).as(TimeCol))
         .agg((TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("v"),
           count(col(field)).as("n"))
         .select(col(TimeCol), col("v"), col("n"), lit("mean").as("zoom_mode"))
@@ -872,9 +880,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def zoomAll(db: String, m: String, field: String,
               t0: Long, t1: Long, maxDataPoints: Int): DataFrame = {
     require(maxDataPoints > 0, "maxDataPoints must be positive")
-    val schema = getSchema(db, m)
-    if (!schema.fields.exists(_.name == field))
-      throw new InvalidSchemaException(s"unknown field: $field")
+    fieldOf(getSchema(db, m), field)
     val base = visibleRange(db, m, t0, t1)
     val w = zoomWidth(t0, t1, maxDataPoints)
     val rawSeries = base.groupBy(col(SeriesCol)).count()
@@ -885,7 +891,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       .filter(isRaw || col(field).isNotNull) // mean side drops nulls pre-shuffle
       .groupBy(col(SeriesCol),
         when(isRaw, col(TimeCol))
-          .otherwise(col(TimeCol) - pmod(col(TimeCol), lit(w))).as(TimeCol))
+          .otherwise(TimeSeriesOps.windowStart(col(TimeCol), w)).as(TimeCol))
       .agg(first(col(field)).as("raw_v"),
         (TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("mean_v"),
         count(col(field)).as("n"))
@@ -898,35 +904,30 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   /** Windowed MIN/MAX zoom (reference grafana datasource.go:384-430). */
   def minMaxWindows(db: String, m: String, series: String, field: String,
                     t0: Long, t1: Long, windowWidth: Long): DataFrame =
-    TimeSeriesOps.minMaxWindows(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+    TimeSeriesOps.minMaxWindows(seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, t0, t1, windowWidth)
 
-  /** Trapezoidal integral (reference integral_op). Partial sums are
-    * computed per STORAGE bucket (the op's bucketing aligns with the
-    * engine's layout, so each task integrates the files it reads);
-    * `valueDecimals` passes through to the op for order-independent exact
-    * accumulation of fixed-precision fields. */
+  /** Trapezoidal integral (reference integral_op) of one field:
+    * [[integrateMulti]] of `field`, its integral named `integral`. */
   def integrate(db: String, m: String, series: String, field: String,
                 t0: Long, t1: Long, unitsPerSecond: Double = 1e9,
                 valueDecimals: Option[Int] = None): DataFrame =
-    TimeSeriesOps.integrate(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
-      SeriesCol, TimeCol, field, t0, t1, unitsPerSecond,
-      bucketWidth = bucketWidth, valueDecimals = valueDecimals)
+    integrateMulti(db, m, series, Seq(field), t0, t1, unitsPerSecond, valueDecimals)
+      .withColumnRenamed(s"integral_$field", "integral")
 
   /** Multi-field trapezoidal integral — integral_op's field-LIST signature
     * (reference src/libtsdb/integral_op.cc:30-88): every requested field in
-    * one timestamp walk. Empty fields list = all schema fields. */
+    * one timestamp walk. Empty fields list = all schema fields. Partial
+    * sums are computed per STORAGE bucket (the op's bucketing aligns with
+    * the engine's layout, so each task integrates the files it reads);
+    * `valueDecimals` passes through to the op for order-independent exact
+    * accumulation of fixed-precision fields. */
   def integrateMulti(db: String, m: String, series: String, fields: Seq[String],
                      t0: Long, t1: Long, unitsPerSecond: Double = 1e9,
                      valueDecimals: Option[Int] = None): DataFrame = {
-    val schema = getSchema(db, m)
-    val fs = if (fields.isEmpty) schema.fields.map(_.name) else fields
-    TimeSeriesOps.integrateMulti(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
-      SeriesCol, TimeCol, fs, t0, t1, unitsPerSecond,
-      bucketWidth = bucketWidth, valueDecimals = valueDecimals)
+    val (fs, pts) = seriesFrame(db, m, series, fields, t0, t1)
+    TimeSeriesOps.integrateMulti(pts, SeriesCol, TimeCol, fs.map(_.name), t0, t1,
+      unitsPerSecond, bucketWidth = bucketWidth, valueDecimals = valueDecimals)
   }
 
   /** LIST ACTIVE SERIES: series with ≥1 visible point in range, with counts
@@ -1099,25 +1100,25 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def tare(db: String, m: String, series: String, field: String,
            t0: Long, t1: Long): DataFrame =
     TimeSeriesOps.tare(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, bucketWidth = bucketWidth)
 
   def difference(db: String, m: String, series: String, field: String,
                  t0: Long, t1: Long): DataFrame =
     TimeSeriesOps.difference(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, bucketWidth = bucketWidth)
 
   def derivative(db: String, m: String, series: String, field: String,
                  t0: Long, t1: Long, unitsPerSecond: Double = 1e9): DataFrame =
     TimeSeriesOps.derivative(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, unitsPerSecond, bucketWidth = bucketWidth)
 
   def rate(db: String, m: String, series: String, field: String,
            t0: Long, t1: Long, unitsPerSecond: Double = 1e9): DataFrame =
     TimeSeriesOps.rate(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, unitsPerSecond, bucketWidth = bucketWidth)
 
   /** Gap filling over the visible range: per-window mean plus LOCF and
@@ -1125,7 +1126,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * TimeSeriesOps.gapFill). */
   def gapFill(db: String, m: String, series: String, field: String,
               t0: Long, t1: Long, windowWidth: Long): DataFrame =
-    TimeSeriesOps.gapFill(visibleSeries(db, m, series, t0, t1),
+    TimeSeriesOps.gapFill(seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       TimeCol, field, t0, t1, windowWidth)
 
   /** Per-series value histogram over the visible range (extension — see
@@ -1133,7 +1134,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def histogram(db: String, m: String, series: String, field: String,
                 t0: Long, t1: Long, binWidth: Double): DataFrame =
     TimeSeriesOps.histogram(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, field, binWidth)
 
   /** Exact per-series quantiles over the visible range (extension — see
@@ -1142,7 +1143,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def quantiles(db: String, m: String, series: String, field: String,
                 t0: Long, t1: Long, qs: Seq[Double]): DataFrame =
     TimeSeriesOps.quantiles(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, field, qs)
 
   /** MAD-based anomaly flags over the visible range (extension — see
@@ -1150,7 +1151,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def anomalies(db: String, m: String, series: String, field: String,
                 t0: Long, t1: Long, k: Double): DataFrame =
     TimeSeriesOps.madOutliers(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, k)
 
   /** Batch sessionization of the visible range (extension — see
@@ -1158,8 +1159,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def sessionize(db: String, m: String, series: String, t0: Long, t1: Long,
                  gapUs: Long): DataFrame =
     TimeSeriesOps.sessionize(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series))
-        .select(SeriesCol, TimeCol),
+      seriesFrame(db, m, series, Nil, t0, t1)._2.select(SeriesCol, TimeCol),
       SeriesCol, TimeCol, gapUs, bucketWidth = bucketWidth)
 
   /** LTTB-style visual downsample of the visible range (extension — see
@@ -1168,7 +1168,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   def lttb(db: String, m: String, series: String, field: String,
            t0: Long, t1: Long, bucketWidth: Long): DataFrame =
     TimeSeriesOps.lttbDownsample(
-      visibleSeries(db, m, series, t0, t1).withColumn(SeriesCol, lit(series)),
+      seriesFrame(db, m, series, Seq(field), t0, t1)._2,
       SeriesCol, TimeCol, field, bucketWidth)
 
   /** Downsample a series into a ROLLUP measurement: the windowed
@@ -1182,11 +1182,13 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * @return the rollup measurement name. */
   def downsample(db: String, m: String, series: String, field: String,
                  t0: Long, t1: Long, windowWidth: Long): String = {
-    val rollup = Rollups.name(m, field, windowWidth)
-    createMeasurement(db, rollup, Rollups.Schema) // idempotent iff same schema
+    // planned first: an unknown field or series fails before the rollup
+    // measurement exists
     val agg = sumWindows(db, m, series, field, t0, t1, windowWidth)
       .select(col("window_start").as(TimeCol),
         col("sum_value"), col("min_value"), col("max_value"), col("n"))
+    val rollup = Rollups.name(m, field, windowWidth)
+    createMeasurement(db, rollup, Rollups.Schema) // idempotent iff same schema
     writePoints(db, rollup, series, agg)
     rollup
   }
@@ -1199,7 +1201,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   private def metaDir(db: String, m: String) = new Path(measPath(db, m), "_meta")
   /** Append-intent record: present iff an append is in flight (or died). It
     * names the batch's series one a line, Hive-escaped like seriesDir, so a
-    * line never holds a newline, '{' or '"'. */
+    * line never holds a newline, '{' or '"'. A record is written once,
+    * under a fresh name, and never rewritten. */
+  private def newIntent(db: String, m: String): Path =
+    new Path(metaDir(db, m), s".append-${java.util.UUID.randomUUID}.pending")
   private def writeIntent(p: Path, series: Seq[String]): Unit =
     atomicWrite(p, series.map(escapePathName(_) + "\n").mkString)
   /** The series a record names; none if it vanished (its writer finished).

@@ -17,8 +17,12 @@ import org.apache.spark.sql.types.DecimalType
   *    the touched partitions and the per-series window functions shuffle
   *    once on `series` (reference series are "embarrassingly parallel",
   *    doc/LOCKING.txt:3-8 — same property holds here: partition-by-series).
-  *  - the window spine is generated distributed (`spark.range`), never on
-  *    the driver.
+  *  - windows: every windowed op keys a point by [[windowStart]] (floor
+  *    alignment, so negative times land in the window that holds them) and
+  *    keeps the points of the COMPLETE windows of `[t0, t1]`, counted in
+  *    exact arithmetic. The ops that emit empty windows share one spine:
+  *    generated distributed (`spark.range`, never a driver loop),
+  *    left-joined to the per-window aggregate, then one global `orderBy`.
   */
 object TimeSeriesOps {
 
@@ -71,73 +75,96 @@ object TimeSeriesOps {
       .groupBy(col(seriesCol).as("series")).agg(count(lit(1)).as("npoints"))
       .orderBy("series")
 
+  /** Start of the `w`-wide window that holds `t`: `t` floored to a multiple
+    * of `w` (reference src/libtsdb/sum_op.cc:9-10 — windows sit on absolute
+    * multiples of window_ns). `pmod` is never negative, so a negative time
+    * rounds down into its own window, not toward zero. The one alignment
+    * rule of every windowed op, here and in the engine. */
+  private[graft] def windowStart(t: Column, w: Long): Column = t - pmod(t, lit(w))
+
+  private def clamp(b: BigInt): Long = b.max(Long.MinValue).min(Long.MaxValue).toLong
+
+  /** The complete windows of `[t0, t1]` that are `width` wide and start on
+    * multiples of `step`: `n` of them from `first`. Exact (BigInt, like the
+    * engine's zoom width), so no bound wraps at the edges of the `Long`
+    * range. */
+  private final class Grid(t0: Long, t1: Long, val step: Long, width: Long) {
+    require(step > 0 && width > 0, "window width must be positive")
+    val first: BigInt = BigInt(t0) + (step - Math.floorMod(t0, step)) % step
+    val n: BigInt = {
+      val lastStart = BigInt(t1) - width + 1
+      if (lastStart < first) 0 else (lastStart - first) / step + 1
+    }
+
+    /** True for a point inside one of the windows. The upper bound is the
+      * last window's last instant, inclusive, so it never wraps. */
+    def covers(ts: Column): Column =
+      if (n == 0) lit(false)
+      else ts.between(clamp(first), clamp(first + (n - 1) * step + width - 1))
+  }
+
   /** First aligned window start: t0 rounded UP to a multiple of `w`
-    * (reference src/libtsdb/sum_op.cc:9-10 — windows sit on absolute
-    * multiples of window_ns). */
-  def firstWindowStart(t0: Long, w: Long): Long = ((t0 + w - 1) / w) * w
+    * (windows on absolute multiples of `w`, see [[windowStart]]), negative
+    * t0 included. Long.MaxValue when no multiple of `w` at or above t0 is a
+    * Long; there is then no window. */
+  def firstWindowStart(t0: Long, w: Long): Long = clamp(new Grid(t0, t0, w, w).first)
 
-  /** Number of COMPLETE windows inside [t0, t1]. */
-  def numWindows(t0: Long, t1: Long, w: Long): Long = {
-    val w0 = firstWindowStart(t0, w)
-    if (t1 - w + 1 < w0) 0L else (t1 - w + 1 - w0) / w + 1
+  /** Number of COMPLETE windows inside [t0, t1], exact over the whole Long
+    * range (capped at Long.MaxValue). */
+  def numWindows(t0: Long, t1: Long, w: Long): Long = clamp(new Grid(t0, t1, w, w).n)
+
+  private val WindowIdx = "_graft_wi"
+
+  /** The spine of the ops that emit EMPTY windows: one row per window of
+    * `grid` with its ordinal (`WindowIdx`), left-joined to `perWindow`'s
+    * rows (one per non-empty window, keyed `window_start`, aggregated from
+    * the points inside the grid); an empty window reads 0 in its `zeros`
+    * columns and NULL in the others. Unordered. */
+  private def onSpine(df: DataFrame, tsCol: String, grid: Grid, zeros: Seq[String])(
+      perWindow: DataFrame => DataFrame): DataFrame = {
+    val nW = clamp(grid.n)
+    // window i starts at (middle window) + (i - nW/2) * step: offsets from
+    // the middle stay inside a Long even when the grid spans all of it
+    val mid = nW / 2
+    val spine = df.sparkSession.range(nW).select(col("id").as(WindowIdx),
+      (lit(clamp(grid.first + BigInt(mid) * grid.step)) + (col("id") - mid) * grid.step)
+        .as("window_start"))
+    val agg = perWindow(df.filter(grid.covers(col(tsCol))))
+    spine.join(agg, Seq("window_start"), "left").select(
+      col("window_start") +: col(WindowIdx) +:
+        agg.columns.filterNot(_ == "window_start").toSeq.map { c =>
+          if (zeros.contains(c)) coalesce(col(c), lit(0).cast(agg.schema(c).dataType)).as(c)
+          else col(c)
+        }: _*)
   }
 
-  /** Op #6 (sum_op, reference src/libtsdb/sum_op.cc:6-281): tumbling windows
-    * aligned to absolute multiples of `w`; per window emits sum / min / max /
-    * non-null count; EMPTY windows inside the range ARE emitted (zero sum,
-    * count 0 — the CLI prints `-`, reference src/tsdbcli2/main.cc:229-235).
-    * Spine generated with spark.range (distributed; never a driver loop).
-    */
+  /** Op #6 (sum_op, reference src/libtsdb/sum_op.cc:6-281) over one field:
+    * [[sumWindowsMulti]] of `valCol` with the decimal-2 sum, its columns
+    * named `window_start, sum_value, min_value, max_value, n`. */
   def sumWindows(df: DataFrame, tsCol: String, valCol: String,
-                 t0: Long, t1: Long, w: Long): DataFrame = {
-    val spark = df.sparkSession
-    val w0 = firstWindowStart(t0, w)
-    val nW = numWindows(t0, t1, w)
-    val spine = spark.range(nW).select((lit(w0) + col("id") * w).as("window_start"))
-    val agg = df
-      .filter(col(tsCol) >= w0 && col(tsCol) < w0 + nW * w)
-      .groupBy(((col(tsCol) - (col(tsCol) % w))).as("window_start"))
-      .agg(sumExact2(col(valCol)).as("sum_value"),
-           min(valCol).as("min_value"),
-           max(valCol).as("max_value"),
-           count(valCol).as("n"))
-    spine.join(agg, Seq("window_start"), "left")
-      .select(col("window_start"),
-              coalesce(col("sum_value"), lit(0.0)).as("sum_value"),
-              col("min_value"), col("max_value"),
-              coalesce(col("n"), lit(0L)).as("n"))
-      .orderBy("window_start")
-  }
+                 t0: Long, t1: Long, w: Long): DataFrame =
+    sumWindowsMulti(df, tsCol, Seq(valCol), t0, t1, w)
+      .toDF("window_start", "sum_value", "min_value", "max_value", "n")
 
-  /** Multi-field sum_op (reference signature parity: `sum_op(…, fields,…)`
-    * aggregates EVERY requested field per window in one pass,
-    * src/libtsdb/sum_op.cc:115-183 — one timestamp scan, per-field
-    * accumulators). Emits `sum_<f>/min_<f>/max_<f>/n_<f>` per field,
-    * empty windows included. `sumFor` picks the exact-sum expression per
-    * field (decimal for fixed-precision doubles, plain for integrals). */
+  /** Op #6 (sum_op, reference src/libtsdb/sum_op.cc:6-281, with its field
+    * list: every requested field in one pass, src/libtsdb/sum_op.cc:115-183
+    * — one timestamp scan, per-field accumulators): tumbling windows on
+    * absolute multiples of `w`; per window and field emits
+    * `sum_<f>/min_<f>/max_<f>/n_<f>` (n = non-null count). EMPTY windows
+    * inside the range ARE emitted (zero sum, count 0 — the CLI prints `-`,
+    * reference src/tsdbcli2/main.cc:229-235). `sumFor` picks the exact-sum
+    * expression per field (decimal for fixed-precision doubles, plain for
+    * integrals). */
   def sumWindowsMulti(df: DataFrame, tsCol: String, valCols: Seq[String],
                       t0: Long, t1: Long, w: Long,
                       sumFor: String => Column = c => sumExact2(col(c))): DataFrame = {
     require(valCols.nonEmpty, "need at least one field")
-    val spark = df.sparkSession
-    val w0 = firstWindowStart(t0, w)
-    val nW = numWindows(t0, t1, w)
-    val spine = spark.range(nW).select((lit(w0) + col("id") * w).as("window_start"))
     val aggs = valCols.flatMap { c => Seq(
       sumFor(c).as(s"sum_$c"), min(c).as(s"min_$c"),
       max(c).as(s"max_$c"), count(col(c)).as(s"n_$c")) }
-    val agg = df
-      .filter(col(tsCol) >= w0 && col(tsCol) < w0 + nW * w)
-      .groupBy(((col(tsCol) - (col(tsCol) % w))).as("window_start"))
-      .agg(aggs.head, aggs.tail: _*)
-    val filled = valCols.flatMap { c => Seq(
-      coalesce(col(s"sum_$c"),
-        lit(0).cast(agg.schema(s"sum_$c").dataType)).as(s"sum_$c"),
-      col(s"min_$c"), col(s"max_$c"),
-      coalesce(col(s"n_$c"), lit(0L)).as(s"n_$c")) }
-    spine.join(agg, Seq("window_start"), "left")
-      .select(col("window_start") +: filled: _*)
-      .orderBy("window_start")
+    onSpine(df, tsCol, new Grid(t0, t1, w, w), valCols.flatMap(c => Seq(s"sum_$c", s"n_$c"))) {
+      _.groupBy(windowStart(col(tsCol), w).as("window_start")).agg(aggs.head, aggs.tail: _*)
+    }.drop(WindowIdx).orderBy("window_start")
   }
 
   /** SLIDING windows (batch; extension — the reference's sum_op is tumbling
@@ -149,30 +176,17 @@ object TimeSeriesOps {
   def slidingWindows(df: DataFrame, tsCol: String, valCol: String,
                      t0: Long, t1: Long, w: Long, slide: Long): DataFrame = {
     require(slide > 0 && w % slide == 0, "w must be a positive multiple of slide")
-    val spark = df.sparkSession
-    val k = w / slide
-    val s0 = firstWindowStart(t0, slide)
-    val nW = if (t1 - w + 1 < s0) 0L else (t1 - w + 1 - s0) / slide + 1
-    val lastStart = s0 + (nW - 1) * slide
-    val spine = spark.range(nW).select((lit(s0) + col("id") * slide).as("window_start"))
-    val aligned = col(tsCol) - (col(tsCol) % slide)
-    val agg = df
-      .filter(col(tsCol) >= s0 && col(tsCol) < lastStart + w)
-      .select(col(tsCol), col(valCol))
-      .withColumn("window_start",
-        explode(sequence(aligned - (k - 1) * slide, aligned, lit(slide))))
-      .filter(col("window_start").between(s0, lastStart))
-      .groupBy("window_start")
-      .agg(sumExact2(col(valCol)).as("sum_value"),
-           min(valCol).as("min_value"),
-           max(valCol).as("max_value"),
-           count(valCol).as("n"))
-    spine.join(agg, Seq("window_start"), "left")
-      .select(col("window_start"),
-              coalesce(col("sum_value"), lit(0.0)).as("sum_value"),
-              col("min_value"), col("max_value"),
-              coalesce(col("n"), lit(0L)).as("n"))
-      .orderBy("window_start")
+    val aligned = windowStart(col(tsCol), slide)
+    onSpine(df, tsCol, new Grid(t0, t1, slide, w), Seq("sum_value", "n")) {
+      // a start off the grid (near its edges) meets no spine row
+      _.select(col(tsCol), col(valCol))
+        .withColumn("window_start", explode(sequence(aligned - (w - slide), aligned, lit(slide))))
+        .groupBy("window_start")
+        .agg(sumExact2(col(valCol)).as("sum_value"),
+             min(valCol).as("min_value"),
+             max(valCol).as("max_value"),
+             count(valCol).as("n"))
+    }.drop(WindowIdx).orderBy("window_start")
   }
 
   /** GAP FILLING (extension — InfluxDB `fill(previous|linear)` / Timescale
@@ -196,18 +210,11 @@ object TimeSeriesOps {
   def gapFill(df: DataFrame, tsCol: String, valCol: String,
               t0: Long, t1: Long, w: Long,
               chunkWindows: Long = 1024L): DataFrame = {
-    val spark = df.sparkSession
-    val w0 = firstWindowStart(t0, w)
-    val nW = numWindows(t0, t1, w)
-    val spine = spark.range(nW).select((lit(w0) + col("id") * w).as("window_start"))
-    val agg = df
-      .filter(col(tsCol) >= w0 && col(tsCol) < w0 + nW * w)
-      .groupBy(((col(tsCol) - (col(tsCol) % w))).as("window_start"))
-      .agg((sumExact2(col(valCol)) / count(valCol)).as("mean_value"),
-           count(valCol).as("n"))
-    val joined = spine.join(agg, Seq("window_start"), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-      .withColumn("_ck", expr(s"((window_start - ${w0}L) div ${w}L) div ${chunkWindows}L"))
+    val joined = onSpine(df, tsCol, new Grid(t0, t1, w, w), Seq("n")) {
+      _.groupBy(windowStart(col(tsCol), w).as("window_start"))
+        .agg((sumExact2(col(valCol)) / count(valCol)).as("mean_value"),
+             count(valCol).as("n"))
+    }.withColumn("_ck", expr(s"$WindowIdx div ${chunkWindows}L"))
     // (mean, window_start) travel as ONE nullable struct so a carried value
     // always keeps its own timestamp (null exactly when the window is empty)
     val obs = when(col("mean_value").isNotNull,
@@ -247,29 +254,24 @@ object TimeSeriesOps {
     * src/tsdbcli2/main.cc:203-238 — sum/count of sum_op output). Non-empty
     * windows only, grouped per series. */
   def meanWindows(df: DataFrame, seriesCol: String, tsCol: String,
-                  valCol: String, t0: Long, t1: Long, w: Long): DataFrame = {
-    val w0 = firstWindowStart(t0, w)
-    val nW = numWindows(t0, t1, w)
-    df.filter(col(tsCol) >= w0 && col(tsCol) < w0 + nW * w)
-      .groupBy(col(seriesCol).as("series"),
-               (col(tsCol) - (col(tsCol) % w)).as("window_start"))
-      .agg((sumExact2(col(valCol)) / count(valCol)).as("mean_value"),
-           count(valCol).as("n"))
-      .orderBy("series", "window_start")
-  }
+                  valCol: String, t0: Long, t1: Long, w: Long): DataFrame =
+    seriesWindows(df, seriesCol, tsCol, t0, t1, w)(
+      (sumExact2(col(valCol)) / count(valCol)).as("mean_value"), count(valCol).as("n"))
 
   /** Op #8 (min/max zoom, reference grafana datasource.go:384-430). */
   def minMaxWindows(df: DataFrame, seriesCol: String, tsCol: String,
-                    valCol: String, t0: Long, t1: Long, w: Long): DataFrame = {
-    val w0 = firstWindowStart(t0, w)
-    val nW = numWindows(t0, t1, w)
-    df.filter(col(tsCol) >= w0 && col(tsCol) < w0 + nW * w)
-      .groupBy(col(seriesCol).as("series"),
-               (col(tsCol) - (col(tsCol) % w)).as("window_start"))
-      .agg(min(valCol).as("min_value"), max(valCol).as("max_value"),
-           count(valCol).as("n"))
+                    valCol: String, t0: Long, t1: Long, w: Long): DataFrame =
+    seriesWindows(df, seriesCol, tsCol, t0, t1, w)(
+      min(valCol).as("min_value"), max(valCol).as("max_value"), count(valCol).as("n"))
+
+  /** `aggs` per (series, window) over the complete windows of [t0, t1]:
+    * non-empty windows only, ordered. */
+  private def seriesWindows(df: DataFrame, seriesCol: String, tsCol: String,
+                            t0: Long, t1: Long, w: Long)(aggs: Column*): DataFrame =
+    df.filter(new Grid(t0, t1, w, w).covers(col(tsCol)))
+      .groupBy(col(seriesCol).as("series"), windowStart(col(tsCol), w).as("window_start"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy("series", "window_start")
-  }
 
   // -------------------------------------------------------------------------
   // Per-series sequential transforms, BUCKET-PARALLEL.
@@ -322,12 +324,27 @@ object TimeSeriesOps {
     }.drop(RN :: B :: cols.flatMap(c => Seq(s"_lag_$c", s"_pl_$c")).toList: _*)
   }
 
-  /** Op #9 (integral_op, reference src/libtsdb/integral_op.cc:5-103):
-    * trapezoidal integral over [t0,t1], dt in SECONDS; any NULL sample
-    * poisons the result to NULL (integral_op.cc:48,84); 0 points -> no row
-    * (reference: NULL); 1 point -> the value itself (integral_op.cc:96-102).
-    * Also emits the actual first/last integrated timestamps so callers can
-    * derive the time-average (reference src/tsdbcli2/main.cc:277-287).
+  /** Op #9 (integral_op, reference src/libtsdb/integral_op.cc:5-103) over
+    * one field: [[integrateMulti]] of `valCol`, its integral named
+    * `integral` (series, npoints, t0_out, t1_out, integral). */
+  def integrate(df: DataFrame, seriesCol: String, tsCol: String,
+                valCol: String, t0: Long, t1: Long,
+                unitsPerSecond: Double, tiebreak: Seq[String] = Nil,
+                bucketWidth: Long = 3600L * 1000000000L,
+                valueDecimals: Option[Int] = None): DataFrame =
+    integrateMulti(df, seriesCol, tsCol, Seq(valCol), t0, t1, unitsPerSecond, tiebreak,
+      bucketWidth, valueDecimals).withColumnRenamed(s"integral_$valCol", "integral")
+
+  /** Op #9 (integral_op, reference src/libtsdb/integral_op.cc:5-103, with
+    * its field list: every requested field in one scan,
+    * src/libtsdb/integral_op.cc:30-88 — shared timestamp walk, per-field
+    * accumulators and per-field NULL-poisoning): trapezoidal integral over
+    * [t0,t1], dt in SECONDS; any NULL sample poisons that field's result to
+    * NULL (integral_op.cc:48,84); 0 points -> no row (reference: NULL);
+    * 1 point -> the value itself (integral_op.cc:96-102). Emits
+    * `integral_<f>` per field plus the shared npoints and the actual
+    * first/last integrated timestamps t0_out/t1_out, so callers can derive
+    * the time-average (reference src/tsdbcli2/main.cc:277-287).
     *
     * The trapezoid sum is ASSOCIATIVE, so it is computed as per-(series,
     * bucket) partial sums plus one boundary term per consecutive bucket pair
@@ -339,80 +356,6 @@ object TimeSeriesOps {
     * use when values carry fixed d-decimal precision). The default (None)
     * keeps full double precision like the reference (integral_op.cc:84-88)
     * — no silent rounding of general inputs. */
-  def integrate(df: DataFrame, seriesCol: String, tsCol: String,
-                valCol: String, t0: Long, t1: Long,
-                unitsPerSecond: Double, tiebreak: Seq[String] = Nil,
-                bucketWidth: Long = 3600L * 1000000000L,
-                valueDecimals: Option[Int] = None): DataFrame = {
-    val vAs: Column => Column = valueDecimals match {
-      case Some(d) => _.cast(DecimalType(18, d))
-      case None    => _.cast("double")
-    }
-    val key = orderKey(tsCol, tiebreak)
-    val base = df.filter(col(tsCol) >= t0 && col(tsCol) <= t1)
-      .select((seriesCol +: tsCol +: valCol +: tiebreak).distinct.map(col): _*)
-      .withColumn(B, expr(s"$tsCol div ${bucketWidth}L"))
-    val wb = Window.partitionBy(seriesCol, B).orderBy((tsCol +: tiebreak).map(col): _*)
-    val withLag = base
-      .withColumn("_prev_v", lag(valCol, 1).over(wb))
-      .withColumn("_prev_t", lag(tsCol, 1).over(wb))
-      .withColumn("_term",
-        (vAs(col(valCol)) + vAs(col("_prev_v"))) * (col(tsCol) - col("_prev_t")))
-    // one row per (series, bucket): partial sum + boundary endpoints
-    val perBucket = withLag.groupBy(col(seriesCol), col(B))
-      .agg(count(lit(1)).as("_n"),
-           min(tsCol).as("_tmin"), max(tsCol).as("_tmax"),
-           max(col(valCol).isNull.cast("int")).as("_any_null"),
-           sum("_term").as("_psum"),
-           min_by(col(valCol), key).as("_first_v"),
-           min_by(col(tsCol), key).as("_first_t"),
-           max_by(col(valCol), key).as("_last_v"),
-           max_by(col(tsCol), key).as("_last_t"),
-           min(valCol).as("_only_v"))
-    val ws = Window.partitionBy(seriesCol).orderBy(B)
-    val withBoundary = perBucket
-      .withColumn("_pl_v", lag("_last_v", 1).over(ws))
-      .withColumn("_pl_t", lag("_last_t", 1).over(ws))
-      .withColumn("_bterm",
-        (vAs(col("_first_v")) + vAs(col("_pl_v"))) * (col("_first_t") - col("_pl_t")))
-    val zero = valueDecimals.fold(lit(0.0))(d => lit(0).cast(DecimalType(18, d)))
-    // decimal path: convert the EXACT decimal sum to a scaled long before
-    // the double division, so both engines perform one identical
-    // int64→double rounding. (A direct decimal→double cast diverges from
-    // DuckDB by 1 ulp once the scaled sum exceeds 2^53: Spark rounds the
-    // rational correctly, DuckDB casts the int128 then divides — two
-    // roundings.) Exact while |sum|·10^d < 2^63 — far beyond the test SFs.
-    def rawIntegral: Column = {
-      val s = coalesce(sum("_psum"), zero) + coalesce(sum("_bterm"), zero)
-      valueDecimals match {
-        case Some(d) =>
-          val scale = math.round(math.pow(10, d)) // integer: decimal stays exact
-          (s * lit(scale)).cast("long").cast("double") /
-            lit(2.0 * unitsPerSecond * scale)
-        case None => s.cast("double") / lit(2.0 * unitsPerSecond)
-      }
-    }
-    withBoundary.groupBy(col(seriesCol).as("series"))
-      .agg(sum("_n").as("npoints"),
-           min("_tmin").as("t0_out"),
-           max("_tmax").as("t1_out"),
-           max("_any_null").as("any_null"),
-           rawIntegral.as("raw_integral"),
-           min("_only_v").as("only_value"))
-      .select(col("series"), col("npoints"),
-              col("t0_out"), col("t1_out"),
-              when(col("any_null") === 1, lit(null))
-                .when(col("npoints") === 1, col("only_value"))
-                .otherwise(col("raw_integral")).as("integral"))
-      .orderBy("series")
-  }
-
-  /** Multi-field trapezoidal integral (reference signature parity:
-    * `integral_op(…, fields,…)` integrates EVERY requested field in one
-    * scan, src/libtsdb/integral_op.cc:30-88 — shared timestamp walk,
-    * per-field accumulators and per-field NULL-poisoning). Same
-    * bucket-parallel partial-sum + boundary-repair shape as `integrate`;
-    * emits `integral_<f>` per field plus the shared npoints/t0_out/t1_out. */
   def integrateMulti(df: DataFrame, seriesCol: String, tsCol: String,
                      valCols: Seq[String], t0: Long, t1: Long,
                      unitsPerSecond: Double, tiebreak: Seq[String] = Nil,
@@ -451,11 +394,17 @@ object TimeSeriesOps {
           (col("_first_t") - col("_pl_t")))
     }
     val zero = valueDecimals.fold(lit(0.0))(d => lit(0).cast(DecimalType(18, d)))
+    // decimal path: convert the EXACT decimal sum to a scaled long before
+    // the double division, so both engines perform one identical
+    // int64→double rounding. (A direct decimal→double cast diverges from
+    // DuckDB by 1 ulp once the scaled sum exceeds 2^53: Spark rounds the
+    // rational correctly, DuckDB casts the int128 then divides — two
+    // roundings.) Exact while |sum|·10^d < 2^63 — far beyond the test SFs.
     def rawIntegral(c: String): Column = {
       val s = coalesce(sum(s"_psum_$c"), zero) + coalesce(sum(s"_bterm_$c"), zero)
       valueDecimals match {
         case Some(d) =>
-          val scale = math.round(math.pow(10, d))
+          val scale = math.round(math.pow(10, d)) // integer: decimal stays exact
           (s * lit(scale)).cast("long").cast("double") /
             lit(2.0 * unitsPerSecond * scale)
         case None => s.cast("double") / lit(2.0 * unitsPerSecond)

@@ -36,6 +36,12 @@ import java.util.concurrent.atomic.AtomicInteger
   * those are the budgets. A value-pruned `selectValueRange` (index lookup
   * plus the pruned read) launched 3 while the lookup inferred the
   * sidecar's schema with a job of its own; read with its known schema, 2.
+  * The one-series window ops over `[0, 2 h)` in 10-minute windows, counted
+  * on the spine kernel (a distributed `spark.range` spine left-joined to
+  * the per-window aggregate, then a global `orderBy`): `sumWindows` 5,
+  * `sumWindowsMulti` of every field 5, `meanWindows` 4, `gapFill` 10 and
+  * `integrate` 3; those are the budgets, and the baseline a spine planned
+  * as a local relation must go below.
   *
   * FS calls: driver-side `listStatus` calls, counted by [[CountingFs]] on
   * the same fixture. Counted while ops still listed some directories
@@ -167,6 +173,37 @@ class JobBudgetSpec extends SparkTestBase {
     assert(cj <= 2, s"countPoints launched $cj jobs")
     assert(aj <= 4, s"zoomAll launched $aj jobs")
     assert(sj <= 2, s"sumWindowsAll launched $sj jobs")
+  }
+
+  test("reads: the one-series window ops stay in budget") {
+    val t = fixture()
+    val (t0, t1, w) = (0L, 2 * Hour - 1, 10 * Step)
+    def sums(sn: String) = t.sumWindows("db", "m", sn, "a", t0, t1, w).collect()
+    def multi(sn: String) = t.sumWindowsMulti("db", "m", sn, Nil, t0, t1, w).collect()
+    def means(sn: String) = t.meanWindows("db", "m", sn, "a", t0, t1, w).collect()
+    def fill(sn: String) = t.gapFill("db", "m", sn, "a", t0, t1, w).collect()
+    def integral(sn: String) = t.integrate("db", "m", sn, "a", t0, t1).collect()
+    // warm-up of every op outside the counted region
+    sums("s1"); multi("s1"); means("s1"); fill("s1"); integral("s1")
+
+    val (sj, s) = jobsOf(sums("s0"))
+    assert(s.length == 12 && s.map(_.getLong(4)).sum == 120L)
+    val (mj, mu) = jobsOf(multi("s0"))
+    assert(mu.length == 12 && mu.map(_.getLong(16)).sum == 120L) // n_d
+    val (ej, e) = jobsOf(means("s0"))
+    assert(e.length == 12 && e.map(_.getLong(3)).sum == 120L)
+    val (gj, g) = jobsOf(fill("s0"))
+    assert(g.length == 12 && g.map(_.getLong(1)).sum == 120L)
+    val (ij, i) = jobsOf(integral("s0"))
+    assert(i.length == 1 && i.head.getLong(1) == 120L)
+
+    info(s"jobs: sumWindows $sj, sumWindowsMulti $mj, meanWindows $ej, gapFill $gj, " +
+      s"integrate $ij")
+    assert(sj <= 5, s"sumWindows launched $sj jobs")
+    assert(mj <= 5, s"sumWindowsMulti launched $mj jobs")
+    assert(ej <= 4, s"meanWindows launched $ej jobs")
+    assert(gj <= 10, s"gapFill launched $gj jobs")
+    assert(ij <= 3, s"integrate launched $ij jobs")
   }
 
   test("reads: a value-pruned selectValueRange on an indexed fixture stays in budget") {

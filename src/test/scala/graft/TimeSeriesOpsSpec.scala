@@ -26,6 +26,13 @@ class TimeSeriesOpsSpec extends SparkTestBase {
     assert(TimeSeriesOps.numWindows(100L, 499L, 100L) == 4L) // [100,200)..[400,500): 400..499 ⊆ range
     assert(TimeSeriesOps.numWindows(100L, 498L, 100L) == 3L) // [400,500) no longer complete
     assert(TimeSeriesOps.numWindows(450L, 460L, 100L) == 0L) // no complete window fits
+    // negative times round up, never toward zero; the Long edges do not wrap
+    assert(TimeSeriesOps.firstWindowStart(-250L, 100L) == -200L)
+    assert(TimeSeriesOps.firstWindowStart(-300L, 100L) == -300L)
+    assert(TimeSeriesOps.numWindows(-300L, -1L, 100L) == 3L)
+    assert(TimeSeriesOps.firstWindowStart(Long.MinValue, 1L << 62) == Long.MinValue)
+    assert(TimeSeriesOps.numWindows(Long.MinValue, Long.MaxValue, 1L << 62) == 4L)
+    assert(TimeSeriesOps.numWindows(Long.MaxValue - 5, Long.MaxValue, 100L) == 0L)
   }
 
   test("sumWindows emits EMPTY windows inside the range with zero sum and count 0") {

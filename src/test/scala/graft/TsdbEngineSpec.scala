@@ -398,6 +398,90 @@ class TsdbEngineSpec extends SparkTestBase {
     }
   }
 
+  test("negative and all-of-time windows: sumWindows, meanWindows and sumWindowsAll agree") {
+    val t = mkTsdb()
+    t.createDatabase("db1"); t.createMeasurement("db1", "m1", schema)
+    t.writePoints("db1", "m1", "s1",
+      vpts((-250L, Some(1.0)), (-150L, Some(2.0)), (-50L, Some(4.0))))
+    def sums(t0: Long, t1: Long, w: Long) =
+      t.sumWindows("db1", "m1", "s1", "v", t0, t1, w).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(4))).toSeq
+    def nonEmpty(t0: Long, t1: Long, w: Long) = {
+      val s = sums(t0, t1, w).filter(_._3 > 0)
+      val m = t.meanWindows("db1", "m1", "s1", "v", t0, t1, w).collect()
+        .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+      val a = t.sumWindowsAll("db1", "m1", "v", t0, t1, w).collect()
+        .map(r => (r.getLong(1), r.getDouble(2), r.getLong(5))).toSeq.sorted
+      assert(m == s.map { case (ws, sum, n) => (ws, sum / n, n) },
+        s"meanWindows over [$t0, $t1] by $w")
+      assert(a == s, s"sumWindowsAll over [$t0, $t1] by $w")
+      s
+    }
+    // each point floors into the window that holds it, none toward zero
+    assert(sums(-300L, -1L, 100L) ==
+      Seq((-300L, 1.0, 1L), (-200L, 2.0, 1L), (-100L, 4.0, 1L)))
+    assert(nonEmpty(-300L, -1L, 100L).size == 3)
+    // all of time in 2^62-wide windows: four windows, no bound wraps
+    val w = 1L << 62
+    assert(sums(Long.MinValue, Long.MaxValue, w) ==
+      Seq((Long.MinValue, 0.0, 0L), (-w, 7.0, 3L), (0L, 0.0, 0L), (w, 0.0, 0L)))
+    assert(nonEmpty(Long.MinValue, Long.MaxValue, w) == Seq((-w, 7.0, 3L)))
+  }
+
+  test("sumWindows sums integer fields exactly and counts bool trues; downsample too") {
+    val t = mkTsdb()
+    t.createDatabase("db1")
+    t.createMeasurement("db1", "mi", MeasurementSchema(Seq(
+      Field("i", FieldType.I64), Field("b", FieldType.Bool))))
+    val big = 20000000000000000L // 2·10^16: past what a decimal(18,2) sum holds
+    t.writePoints("db1", "mi", "s1", Seq((100L, big, true), (150L, big + 1, false),
+      (250L, 5L, true)).toDF("time_ns", "i", "b"))
+    def sums(f: String) = t.sumWindows("db1", "mi", "s1", f, 100L, 299L, 100L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSeq
+    assert(sums("i") == Seq((100L, 2 * big + 1, 2L), (200L, 5L, 1L)))
+    assert(sums("b") == Seq((100L, 1L, 2L), (200L, 1L, 1L)))
+    val rollup = t.downsample("db1", "mi", "s1", "i", 100L, 299L, 100L)
+    assert(t.select("db1", rollup, "s1", Seq("sum_value", "n"), 0L, 1000L).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq ==
+      Seq((100L, (2 * big + 1).toDouble, 2L), (200L, 5.0, 1L)))
+  }
+
+  test("every field-taking op rejects an unknown field with InvalidSchemaException") {
+    val t = mkTsdb()
+    freshSeries(t, baseRows: _*)
+    val (db, m, s, f) = ("db1", "m1", "s1", "nope")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "select" -> (() => t.select(db, m, s, Seq("v", f), 0L, 1000L)),
+      "sumWindows" -> (() => t.sumWindows(db, m, s, f, 0L, 999L, 100L)),
+      "sumWindowsMulti" -> (() => t.sumWindowsMulti(db, m, s, Seq("v", f), 0L, 999L, 100L)),
+      "sumWindowsAll" -> (() => t.sumWindowsAll(db, m, f, 0L, 999L, 100L)),
+      "meanWindows" -> (() => t.meanWindows(db, m, s, f, 0L, 999L, 100L)),
+      "minMaxWindows" -> (() => t.minMaxWindows(db, m, s, f, 0L, 999L, 100L)),
+      "zoom" -> (() => t.zoom(db, m, s, f, 0L, 999L, 2)),
+      "zoomAll" -> (() => t.zoomAll(db, m, f, 0L, 999L, 2)),
+      "integrate" -> (() => t.integrate(db, m, s, f, 0L, 1000L)),
+      "integrateMulti" -> (() => t.integrateMulti(db, m, s, Seq("v", f), 0L, 1000L)),
+      "tare" -> (() => t.tare(db, m, s, f, 0L, 1000L)),
+      "difference" -> (() => t.difference(db, m, s, f, 0L, 1000L)),
+      "derivative" -> (() => t.derivative(db, m, s, f, 0L, 1000L)),
+      "rate" -> (() => t.rate(db, m, s, f, 0L, 1000L)),
+      "gapFill" -> (() => t.gapFill(db, m, s, f, 0L, 999L, 100L)),
+      "histogram" -> (() => t.histogram(db, m, s, f, 0L, 1000L, 1.0)),
+      "quantiles" -> (() => t.quantiles(db, m, s, f, 0L, 1000L, Seq(0.5))),
+      "anomalies" -> (() => t.anomalies(db, m, s, f, 0L, 1000L, 3.0)),
+      "lttb" -> (() => t.lttb(db, m, s, f, 0L, 1000L, 100L)),
+      "selectValueRange" -> (() => t.selectValueRange(db, m, s, f, 0.0, 1.0, 0L, 1000L)),
+      "buildValueIndex" -> (() => t.buildValueIndex(db, m, f)),
+      "refreshValueIndex" -> (() => t.refreshValueIndex(db, m, f)),
+      "downsample" -> (() => t.downsample(db, m, s, f, 0L, 999L, 100L)))
+    for ((name, op) <- ops) {
+      val e = intercept[Exception](op())
+      assert(e.isInstanceOf[InvalidSchemaException], s"$name threw $e")
+    }
+    // the failed downsample created no rollup measurement
+    assert(t.listMeasurements(db) == Seq(m))
+  }
+
   test("u64 fields survive the round trip at full range; mean/minmax facade derive from sum_op") {
     val t = mkTsdb()
     t.createDatabase("db1")
@@ -528,18 +612,22 @@ class TsdbEngineSpec extends SparkTestBase {
         .as[Long].collect().toSeq.sorted
     def visible(sn: String): Seq[Long] =
       t.select("db1", "m1", sn, Nil, 0L, 1000L).collect().map(_.getLong(0)).toSeq
+    def records: Seq[String] = new java.io.File(s"${t.rootDir}/db1/m1/_meta").listFiles()
+      .filter(_.getName.endsWith(".pending")).map(f => java.nio.file.Files.readString(f.toPath)).toSeq
 
-    // a write of s1 recovers s1 only: the record still names s2, whose
-    // orphan stays on disk and stays invisible
+    // a write of s1 recovers s1 only: the one record left (a fresh one; the
+    // planted record is gone) names s2, whose orphan stays on disk and
+    // stays invisible
     t.writePoints("db1", "m1", "s1", pts((480L, Some(1L), Some(1.25), Some(1.0f))))
     assert(visible("s1") == baseRows.map(_._1) :+ 480L)
-    assert(java.nio.file.Files.readString(record) == "s2\n")
+    assert(!java.nio.file.Files.exists(record))
+    assert(records == Seq("s2\n"))
     assert(stored("s2") == baseRows.map(_._1) :+ 470L)
     assert(visible("s2") == baseRows.map(_._1))
     // the next write of s2 truncates its orphan and removes the record
     t.writePoints("db1", "m1", "s2", pts((490L, Some(1L), Some(1.25), Some(1.0f))))
     assert(stored("s2") == baseRows.map(_._1) :+ 490L)
-    assert(!java.nio.file.Files.exists(record))
+    assert(records.isEmpty)
   }
 
   test("a leftover record naming only another series survives a write untouched") {
