@@ -16,16 +16,7 @@ import java.nio.charset.StandardCharsets
   * it are invisible and silently discarded on write); `timeLast` is the
   * append high-watermark (reference `time_first`/`time_last` files,
   * src/libtsdb/series.cc:56-72, doc/LOCKING.txt:58-76). */
-final case class SeriesRange(timeFirst: Long, timeLast: Long) {
-  def toJson: String = s"""{"version":1,"time_first":$timeFirst,"time_last":$timeLast}"""
-}
-object SeriesRange {
-  private val Re = """\{"version":1,"time_first":(-?\d+),"time_last":(-?\d+)\}""".r
-  def fromJson(s: String): SeriesRange = s.trim match {
-    case Re(a, b) => SeriesRange(a.toLong, b.toLong)
-    case _        => throw new InvalidSchemaException(s"corrupt watermark json: $s")
-  }
-}
+final case class SeriesRange(timeFirst: Long, timeLast: Long)
 
 final case class WriteResult(written: Long, discarded: Long, overwriteVerified: Long)
 
@@ -772,25 +763,12 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
 
   /** Multi-field windowed aggregation — the reference sum_op's actual
     * signature (field LIST, one pass: src/libtsdb/sum_op.cc:115-183).
-    * Empty fields list = all schema fields. The default sum expression is
-    * the per-type rule [[sumOf]]. Pass `sumFor` to override. */
+    * Empty fields list = all schema fields. Sums follow the per-type rule
+    * `TimeSeriesOps.windowSum`. */
   def sumWindowsMulti(db: String, m: String, series: String, fields: Seq[String],
-                      t0: Long, t1: Long, windowWidth: Long,
-                      sumFor: Option[String => Column] = None): DataFrame = {
+                      t0: Long, t1: Long, windowWidth: Long): DataFrame = {
     val (fs, pts) = seriesFrame(db, m, series, fields, t0, t1)
-    val byName = fs.map(f => f.name -> f).toMap
-    TimeSeriesOps.sumWindowsMulti(pts, TimeCol, fs.map(_.name), t0, t1, windowWidth,
-      sumFor.getOrElse(c => sumOf(byName(c))))
-  }
-
-  /** The exact windowed sum of a field, by type: floats take the
-    * order-independent decimal-2 accumulation, integers the native exact
-    * sum (a decimal-2 accumulation overflows past 10^16 and would come back
-    * as double, inexact past 2^53), bools count trues. */
-  private def sumOf(f: Field): Column = f.ftype match {
-    case FieldType.F64 | FieldType.F32 => TimeSeriesOps.sumExact2(col(f.name))
-    case FieldType.Bool                => sum(col(f.name).cast("long"))
-    case _                             => sum(col(f.name))
+    TimeSeriesOps.sumWindowsMulti(pts, TimeCol, fs.map(_.name), t0, t1, windowWidth)
   }
 
   /** Windowed sum/min/max/count for EVERY series of a measurement in ONE
@@ -803,15 +781,15 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * `sum_op`, src/libtsdb/sum_op.cc:9-10); NON-EMPTY windows only — the
     * empty-window spine is a per-series range concept the single-series
     * faces emit; materializing S×W spine cells here would dwarf the data.
-    * Sums follow the per-type rule [[sumOf]]. */
+    * Sums follow the per-type rule `TimeSeriesOps.windowSum`. */
   def sumWindowsAll(db: String, m: String, field: String,
                     t0: Long, t1: Long, windowWidth: Long): DataFrame = {
-    val f = fieldOf(getSchema(db, m), field)
+    fieldOf(getSchema(db, m), field)
     require(windowWidth > 0, "window width must be positive")
-    visibleRange(db, m, t0, t1)
-      .groupBy(col(SeriesCol),
+    val pts = visibleRange(db, m, t0, t1)
+    pts.groupBy(col(SeriesCol),
         TimeSeriesOps.windowStart(col(TimeCol), windowWidth).as("window_start"))
-      .agg(sumOf(f).as("sum_value"),
+      .agg(TimeSeriesOps.windowSum(pts, field).as("sum_value"),
         min(col(field)).as("min_value"), max(col(field)).as("max_value"),
         count(col(field)).as("n"))
   }
@@ -826,9 +804,10 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
   /** Grafana-style ZOOM dispatch (reference datasource.go:236-249: the
     * panel issues a raw select when the range holds few enough points,
     * otherwise a windowed MEAN at panel resolution): `npoints <=
-    * maxDataPoints` → raw points; else per-window decimal-2 means over
-    * `ceil(span / maxDataPoints)`-wide absolute-aligned windows (non-empty
-    * windows — the renderer interpolates gaps). The decision is one
+    * maxDataPoints` → raw points; else per-window means (the rule
+    * `TimeSeriesOps.windowMean`) over `ceil(span / maxDataPoints)`-wide
+    * absolute-aligned windows (non-empty windows — the renderer
+    * interpolates gaps). The decision is one
     * O(index-scale) count over the same read as the data, exactly the
     * reference's npoints check. Unified output: (time_ns, v, n, zoom_mode)
     * with n = points behind each row. */
@@ -846,7 +825,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
       val w = zoomWidth(t0, t1, maxDataPoints)
       base.filter(col(field).isNotNull)
         .groupBy(TimeSeriesOps.windowStart(col(TimeCol), w).as(TimeCol))
-        .agg((TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("v"),
+        .agg(TimeSeriesOps.windowMean(base, field).as("v"),
           count(col(field)).as("n"))
         .select(col(TimeCol), col("v"), col("n"), lit("mean").as("zoom_mode"))
     }
@@ -875,8 +854,9 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
     * collected set, like [[scan]]'s per-series ranges, so the plan carries
     * no series literal however many series there are. Per-series
     * semantics are identical to S independent [[zoom]] calls: raw rows
-    * keep NULL field values (n = 0), mean windows are non-empty decimal-2
-    * means. Output: (series, time_ns, v, n, zoom_mode). */
+    * keep NULL field values (n = 0), mean windows are non-empty means by
+    * `TimeSeriesOps.windowMean`. Output: (series, time_ns, v, n,
+    * zoom_mode). */
   def zoomAll(db: String, m: String, field: String,
               t0: Long, t1: Long, maxDataPoints: Int): DataFrame = {
     require(maxDataPoints > 0, "maxDataPoints must be positive")
@@ -893,7 +873,7 @@ final class Tsdb(val spark: SparkSession, val rootDir: String,
         when(isRaw, col(TimeCol))
           .otherwise(TimeSeriesOps.windowStart(col(TimeCol), w)).as(TimeCol))
       .agg(first(col(field)).as("raw_v"),
-        (TimeSeriesOps.sumExact2(col(field)) / count(col(field))).as("mean_v"),
+        TimeSeriesOps.windowMean(base, field).as("mean_v"),
         count(col(field)).as("n"))
       .select(col(SeriesCol), col(TimeCol),
         when(isRaw, col("raw_v").cast("double")).otherwise(col("mean_v")).as("v"),

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{BooleanType, DataType, DecimalType, DoubleType, FloatType}
 
 /** The reference's complete query-operator surface (SURVEY.md §2.1),
   * re-expressed as declarative DataFrame transforms so Catalyst handles
@@ -23,6 +23,8 @@ import org.apache.spark.sql.types.DecimalType
   *    exact arithmetic. The ops that emit empty windows share one spine:
   *    generated distributed (`spark.range`, never a driver loop),
   *    left-joined to the per-window aggregate, then one global `orderBy`.
+  *    Every windowed sum follows [[windowSum]] and every windowed mean
+  *    [[windowMean]], here, in the engine and in the streaming ops.
   */
 object TimeSeriesOps {
 
@@ -30,6 +32,34 @@ object TimeSeriesOps {
     * the result is independent of partial-aggregation order (bitwise equal
     * across Spark/DuckDB), then surface as double. */
   def sumExact2(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+
+  private def isFloat(t: DataType): Boolean = t == DoubleType || t == FloatType
+
+  /** The sum rule of every windowed aggregate, chosen from the type of `c`
+    * in `df`:
+    *  - floats (F64, F32) take [[sumExact2]], an order-independent decimal
+    *    accumulation that is bitwise equal across partial-aggregation
+    *    orders and engines. Its domain: values are rounded to 2 decimals,
+    *    and the sum must stay below 10^16 (`Decimal(18,2)`), past which it
+    *    throws;
+    *  - integers and decimals (U64) take the native `sum`, exact in their
+    *    own type (a decimal-2 sum overflows past 10^16, a double one is
+    *    inexact past 2^53);
+    *  - bools count their trues. */
+  private[graft] def windowSum(df: DataFrame, c: String): Column = df.schema(c).dataType match {
+    case t if isFloat(t) => sumExact2(col(c))
+    case BooleanType     => sum(col(c).cast("long"))
+    case _               => sum(col(c))
+  }
+
+  /** The mean rule of every windowed aggregate: the [[windowSum]] of `c` as
+    * a double over its non-null count, the reference clients' MEAN
+    * (src/tsdbcli2/main.cc:203-238). A float sum is a double already; a
+    * bool mean is the fraction of trues. */
+  private[graft] def windowMean(df: DataFrame, c: String): Column = {
+    val s = windowSum(df, c)
+    (if (isFloat(df.schema(c).dataType)) s else s.cast("double")) / count(col(c))
+  }
 
   /** Op #1 (select_op_first, reference src/libtsdb/select_op.cc:175-231):
     * range scan [t0,t1] inclusive + projection + LIMIT, time-ascending.
@@ -139,8 +169,8 @@ object TimeSeriesOps {
   }
 
   /** Op #6 (sum_op, reference src/libtsdb/sum_op.cc:6-281) over one field:
-    * [[sumWindowsMulti]] of `valCol` with the decimal-2 sum, its columns
-    * named `window_start, sum_value, min_value, max_value, n`. */
+    * [[sumWindowsMulti]] of `valCol`, its columns named `window_start,
+    * sum_value, min_value, max_value, n`. */
   def sumWindows(df: DataFrame, tsCol: String, valCol: String,
                  t0: Long, t1: Long, w: Long): DataFrame =
     sumWindowsMulti(df, tsCol, Seq(valCol), t0, t1, w)
@@ -152,15 +182,12 @@ object TimeSeriesOps {
     * absolute multiples of `w`; per window and field emits
     * `sum_<f>/min_<f>/max_<f>/n_<f>` (n = non-null count). EMPTY windows
     * inside the range ARE emitted (zero sum, count 0 — the CLI prints `-`,
-    * reference src/tsdbcli2/main.cc:229-235). `sumFor` picks the exact-sum
-    * expression per field (decimal for fixed-precision doubles, plain for
-    * integrals). */
+    * reference src/tsdbcli2/main.cc:229-235). Sums follow [[windowSum]]. */
   def sumWindowsMulti(df: DataFrame, tsCol: String, valCols: Seq[String],
-                      t0: Long, t1: Long, w: Long,
-                      sumFor: String => Column = c => sumExact2(col(c))): DataFrame = {
+                      t0: Long, t1: Long, w: Long): DataFrame = {
     require(valCols.nonEmpty, "need at least one field")
     val aggs = valCols.flatMap { c => Seq(
-      sumFor(c).as(s"sum_$c"), min(c).as(s"min_$c"),
+      windowSum(df, c).as(s"sum_$c"), min(c).as(s"min_$c"),
       max(c).as(s"max_$c"), count(col(c)).as(s"n_$c")) }
     onSpine(df, tsCol, new Grid(t0, t1, w, w), valCols.flatMap(c => Seq(s"sum_$c", s"n_$c"))) {
       _.groupBy(windowStart(col(tsCol), w).as("window_start")).agg(aggs.head, aggs.tail: _*)
@@ -170,9 +197,10 @@ object TimeSeriesOps {
   /** SLIDING windows (batch; extension — the reference's sum_op is tumbling
     * only): width `w`, starts aligned to multiples of `slide` (w divisible
     * by slide), windows fully inside [t0, t1], EMPTY windows emitted like
-    * sumWindows. Each point explodes to its w/slide owning windows and the
-    * aggregation is a plain groupBy — map-side partial agg absorbs the
-    * overlap factor, and no point-to-spine theta join ever forms. */
+    * sumWindows (sums by [[windowSum]]). Each point explodes to its
+    * w/slide owning windows and the aggregation is a plain groupBy —
+    * map-side partial agg absorbs the overlap factor, and no
+    * point-to-spine theta join ever forms. */
   def slidingWindows(df: DataFrame, tsCol: String, valCol: String,
                      t0: Long, t1: Long, w: Long, slide: Long): DataFrame = {
     require(slide > 0 && w % slide == 0, "w must be a positive multiple of slide")
@@ -182,7 +210,7 @@ object TimeSeriesOps {
       _.select(col(tsCol), col(valCol))
         .withColumn("window_start", explode(sequence(aligned - (w - slide), aligned, lit(slide))))
         .groupBy("window_start")
-        .agg(sumExact2(col(valCol)).as("sum_value"),
+        .agg(windowSum(df, valCol).as("sum_value"),
              min(valCol).as("min_value"),
              max(valCol).as("max_value"),
              count(valCol).as("n"))
@@ -192,8 +220,8 @@ object TimeSeriesOps {
   /** GAP FILLING (extension — InfluxDB `fill(previous|linear)` / Timescale
     * `locf`/`interpolate`; dashboards need continuous lines over sparse
     * series, the reference simply emits empty windows): per tumbling
-    * window, the mean of the points in it, and for EMPTY windows both
-    * fill policies — LOCF (last observation carried forward; a PICKED
+    * window, the [[windowMean]] of the points in it, and for EMPTY windows
+    * both fill policies — LOCF (last observation carried forward; a PICKED
     * value, bitwise-stable) and LINEAR (interpolated between the
     * neighboring non-empty windows; leading/trailing gaps take the nearest
     * value).
@@ -212,8 +240,7 @@ object TimeSeriesOps {
               chunkWindows: Long = 1024L): DataFrame = {
     val joined = onSpine(df, tsCol, new Grid(t0, t1, w, w), Seq("n")) {
       _.groupBy(windowStart(col(tsCol), w).as("window_start"))
-        .agg((sumExact2(col(valCol)) / count(valCol)).as("mean_value"),
-             count(valCol).as("n"))
+        .agg(windowMean(df, valCol).as("mean_value"), count(valCol).as("n"))
     }.withColumn("_ck", expr(s"$WindowIdx div ${chunkWindows}L"))
     // (mean, window_start) travel as ONE nullable struct so a carried value
     // always keeps its own timestamp (null exactly when the window is empty)
@@ -251,12 +278,12 @@ object TimeSeriesOps {
   }
 
   /** Op #7 (MEAN, derived client-side in the reference:
-    * src/tsdbcli2/main.cc:203-238 — sum/count of sum_op output). Non-empty
-    * windows only, grouped per series. */
+    * src/tsdbcli2/main.cc:203-238 — sum/count of sum_op output), by
+    * [[windowMean]]. Non-empty windows only, grouped per series. */
   def meanWindows(df: DataFrame, seriesCol: String, tsCol: String,
                   valCol: String, t0: Long, t1: Long, w: Long): DataFrame =
     seriesWindows(df, seriesCol, tsCol, t0, t1, w)(
-      (sumExact2(col(valCol)) / count(valCol)).as("mean_value"), count(valCol).as("n"))
+      windowMean(df, valCol).as("mean_value"), count(valCol).as("n"))
 
   /** Op #8 (min/max zoom, reference grafana datasource.go:384-430). */
   def minMaxWindows(df: DataFrame, seriesCol: String, tsCol: String,

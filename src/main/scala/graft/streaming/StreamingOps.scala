@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.TimeSeriesOps
 
 /** Streaming-native query operators over a point stream (schema:
   * `series: String, time_us: Long, v: Double`) — the Structured Streaming
@@ -26,10 +27,10 @@ object StreamingOps {
   /** Tumbling-window sum/min/max/count per series with event-time watermark.
     * `windowUs`/`watermarkUs` in microseconds of the `time_us` axis. Emits
     * finalized windows (Append mode downstream) once the watermark passes.
-    * Sums use the engine's order-independent decimal-2 accumulation —
-    * incremental state merges combine partial sums in arbitrary order, and
-    * a double sum would drift from the batch aggregation of the same points
-    * (see StreamingRollup / sessionCounts). */
+    * The sum of `v` follows the batch ops' rule `TimeSeriesOps.windowSum`,
+    * so a window's incremental aggregate equals the batch aggregate of the
+    * same points (for a double `v` the rule is order-independent, and
+    * state merges combine partial sums in arbitrary order). */
   def windowedSums(points: DataFrame, windowUs: Long, watermarkUs: Long): DataFrame =
     points
       .withColumn("event_time", timestamp_micros(col("time_us")))
@@ -38,7 +39,7 @@ object StreamingOps {
       .withWatermark("event_time", s"$watermarkUs microseconds")
       .groupBy(col("series"),
         window(col("event_time"), s"$windowUs microseconds"))
-      .agg(graft.ops.TimeSeriesOps.sumExact2(col("v")).as("sum_value"),
+      .agg(TimeSeriesOps.windowSum(points, "v").as("sum_value"),
         min("v").as("min_value"),
         max("v").as("max_value"), count("v").as("n"))
       .select(col("series"),
@@ -60,7 +61,7 @@ object StreamingOps {
       .groupBy(col("series"),
         window(col("event_time"), s"$windowUs microseconds",
           s"$slideUs microseconds"))
-      .agg(graft.ops.TimeSeriesOps.sumExact2(col("v")).as("sum_value"),
+      .agg(TimeSeriesOps.windowSum(points, "v").as("sum_value"),
         min("v").as("min_value"),
         max("v").as("max_value"), count("v").as("n"))
       .select(col("series"),
@@ -72,10 +73,8 @@ object StreamingOps {
     * `gapUs` of silence collapse to one row (count + value sum + bounds) —
     * the classic sessionization the reference cannot express. Spark's
     * `session_window` merges window state incrementally; the watermark
-    * finalizes a session once no point can extend it. The sum uses the
-    * engine's order-independent decimal-2 accumulation (incremental session
-    * merges combine state in arbitrary order; a double sum would drift from
-    * the batch aggregation of the same points — see StreamingRollup). */
+    * finalizes a session once no point can extend it. The sum follows
+    * `TimeSeriesOps.windowSum`, as in [[windowedSums]]. */
   def sessionCounts(points: DataFrame, gapUs: Long, watermarkUs: Long): DataFrame =
     points
       .withColumn("event_time", timestamp_micros(col("time_us")))
@@ -83,7 +82,7 @@ object StreamingOps {
       .groupBy(col("series"),
         session_window(col("event_time"), s"$gapUs microseconds"))
       .agg(count(lit(1)).as("n"),
-        graft.ops.TimeSeriesOps.sumExact2(col("v")).as("sum_value"))
+        TimeSeriesOps.windowSum(points, "v").as("sum_value"))
       .select(col("series"),
         unix_micros(col("session_window.start")).as("session_start"),
         unix_micros(col("session_window.end")).as("session_end"),

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.engine.{MeasurementSchema, Tsdb}
 
@@ -42,21 +41,8 @@ object StreamingRollup {
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val rollup = rollupMeasurement(m, windowUs)
     tsdb.createMeasurement(db, rollup, graft.engine.Rollups.Schema)
-    // same aggregates as StreamingOps.windowedSums, but the sum uses the
-    // engine's order-independent decimal-2 accumulation (incremental
-    // streaming state merges in arbitrary order; a double sum would drift
-    // from the batch `downsample` of the same points)
-    points
-      .withColumn("event_time", timestamp_micros(col("time_us")))
-      .withWatermark("event_time", s"$watermarkUs microseconds")
-      .groupBy(col("series"),
-        window(col("event_time"), s"$windowUs microseconds"))
-      .agg(graft.ops.TimeSeriesOps.sumExact2(col("v")).as("sum_value"),
-        min("v").as("min_value"), max("v").as("max_value"),
-        count("v").as("n"))
-      .select(col("series"),
-        unix_micros(col("window.start")).as(MeasurementSchema.TimeCol),
-        col("sum_value"), col("min_value"), col("max_value"), col("n"))
+    StreamingOps.windowedSums(points, windowUs, watermarkUs)
+      .withColumnRenamed("window_start", MeasurementSchema.TimeCol)
       .writeStream
       .queryName(s"graft-rollup-$db-$rollup")
       .option("checkpointLocation", checkpoint)

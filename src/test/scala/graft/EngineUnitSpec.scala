@@ -52,13 +52,6 @@ class EngineUnitSpec extends SparkTestBase {
     }
   }
 
-  test("SeriesRange json round trip + corrupt fails") {
-    val r = SeriesRange(100L, 420L)
-    assert(SeriesRange.fromJson(r.toJson) == r)
-    assert(SeriesRange.fromJson(SeriesRange(1, 0).toJson) == SeriesRange(1, 0))
-    intercept[InvalidSchemaException](SeriesRange.fromJson("""{"time_first":1}"""))
-  }
-
   private def wmDir(): org.apache.hadoop.fs.Path = {
     val d = java.nio.file.Files.createTempDirectory("wmstore").toFile
     d.deleteOnExit()

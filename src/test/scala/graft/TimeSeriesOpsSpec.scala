@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.TimeSeriesOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.functions.lit
 
 /** Deterministic fixture for the windowed/sequential operator family —
   * the reference's unit-test layer (sum_op_test.cc empty-gap windows,
@@ -178,19 +178,30 @@ class TimeSeriesOpsSpec extends SparkTestBase {
   }
 
   test("sumWindowsMulti aggregates every field in one pass, empty windows included") {
-    val df = Seq((100L, Some(1.0), Some(10L)), (150L, None, Some(20L)),
-                 (250L, Some(3.0), None), (460L, Some(4.0), Some(40L)))
-      .toDF("ts", "a", "b")
-    val r = TimeSeriesOps.sumWindowsMulti(df, "ts", Seq("a", "b"), 100L, 499L, 100L,
-        sumFor = { case "b" => sum(col("b")); case c => TimeSeriesOps.sumExact2(col(c)) })
+    val big = 20000000000000000L // 2·10^16: past what a decimal(18,2) sum holds
+    val df = Seq((100L, Some(1.0), Some(10L), Some(true), big),
+                 (150L, None, Some(20L), Some(false), big + 1),
+                 (250L, Some(3.0), None, None, 5L),
+                 (460L, Some(4.0), Some(40L), Some(true), big))
+      .toDF("ts", "a", "b", "c", "l")
+    // each field's sum follows its type: decimal-2 for the double `a`,
+    // native for the longs `b` and `l`, a count of trues for the bool `c`
+    val r = TimeSeriesOps.sumWindowsMulti(df, "ts", Seq("a", "b", "c", "l"), 100L, 499L, 100L)
       .collect().map(x => (x.getLong(0), x.getDouble(1), x.getLong(4),
-        x.getLong(5), x.getLong(8))).toSeq
-    // (window, sum_a, n_a, sum_b, n_b): per-field NULLs counted separately
+        x.getLong(5), x.getLong(8), x.getLong(9), x.getLong(12), x.getLong(13))).toSeq
+    // (window, sum_a, n_a, sum_b, n_b, trues_c, n_c, sum_l): per-field
+    // NULLs counted separately
     assert(r == Seq(
-      (100L, 1.0, 1L, 30L, 2L),
-      (200L, 3.0, 1L, 0L, 0L),   // b all-NULL in a non-empty window
-      (300L, 0.0, 0L, 0L, 0L),   // fully empty window still emitted
-      (400L, 4.0, 1L, 40L, 1L)))
+      (100L, 1.0, 1L, 30L, 2L, 1L, 2L, 2 * big + 1),
+      (200L, 3.0, 1L, 0L, 0L, 0L, 0L, 5L),   // b, c all-NULL in a non-empty window
+      (300L, 0.0, 0L, 0L, 0L, 0L, 0L, 0L),   // fully empty window still emitted
+      (400L, 4.0, 1L, 40L, 1L, 1L, 1L, big)))
+    // the means over `l` divide that exact sum, as a double, by the count
+    val means = Seq(Some((2 * big + 1).toDouble / 2), Some(5.0), None, Some(big.toDouble))
+    assert(TimeSeriesOps.meanWindows(df.withColumn("series", lit("s")), "series", "ts", "l",
+        100L, 499L, 100L).collect().map(_.getDouble(2)).toSeq == means.flatten)
+    assert(TimeSeriesOps.gapFill(df, "ts", "l", 100L, 499L, 100L).collect()
+      .map(x => if (x.isNullAt(2)) None else Some(x.getDouble(2))).toSeq == means)
   }
 
   test("rate handles counter resets: post-reset reading is the increase") {

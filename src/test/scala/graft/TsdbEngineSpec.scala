@@ -446,6 +446,42 @@ class TsdbEngineSpec extends SparkTestBase {
       Seq((100L, (2 * big + 1).toDouble, 2L), (200L, 5.0, 1L)))
   }
 
+  test("windowed means over i64, u64 and bool fields are exact: meanWindows, gapFill, zoom, zoomAll") {
+    val t = mkTsdb()
+    t.createDatabase("db1")
+    t.createMeasurement("db1", "mi", MeasurementSchema(Seq(
+      Field("i", FieldType.I64), Field("u", FieldType.U64), Field("b", FieldType.Bool))))
+    val big = 20000000000000000L // 2·10^16: past what a decimal(18,2) sum holds
+    val umax = BigDecimal("18446744073709551615") // 2^64 - 1
+    val rows = Seq((100L, big, umax, true), (150L, big + 1, umax, false),
+      (250L, 5L, BigDecimal(7), true), (260L, 6L, BigDecimal(9), true))
+    t.writePoints("db1", "mi", "s1", rows.toDF("time_ns", "i", "u", "b"))
+    // per field, the means of windows [100, 200) and [200, 300): the exact
+    // sum as a double over the count; a bool's is its fraction of trues
+    val means = Map(
+      "i" -> Seq((2 * big + 1).toDouble / 2, 5.5),
+      "u" -> Seq((umax * 2).toDouble / 2, 8.0),
+      "b" -> Seq(0.5, 1.0))
+    val raw = Map("i" -> rows.map(_._2.toDouble), "u" -> rows.map(_._3.toDouble),
+      "b" -> rows.map(r => if (r._4) 1.0 else 0.0))
+    for ((f, want) <- means) {
+      val windows = Seq(100L, 200L).zip(want)
+      assert(t.meanWindows("db1", "mi", "s1", f, 100L, 299L, 100L).collect()
+        .map(r => (r.getLong(1), r.getDouble(2))).toSeq == windows, s"meanWindows $f")
+      assert(t.gapFill("db1", "mi", "s1", f, 100L, 399L, 100L).collect()
+        .map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))).toSeq ==
+        want.map(Some(_)) :+ None, s"gapFill $f")
+      val zoomed = t.zoom("db1", "mi", "s1", f, 100L, 299L, maxDataPoints = 2).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getString(3))).sortBy(_._1).toSeq
+      assert(zoomed == windows.map { case (w, v) => (w, v, "mean") }, s"zoom $f")
+      def all(maxDp: Int) = t.zoomAll("db1", "mi", f, 100L, 299L, maxDp).collect()
+        .map(r => (r.getLong(1), r.getDouble(2), r.getString(4))).sortBy(_._1).toSeq
+      assert(all(2) == zoomed, s"zoomAll mean $f")
+      assert(all(1000) == rows.map(_._1).zip(raw(f)).map { case (ts, v) => (ts, v, "raw") },
+        s"zoomAll raw $f")
+    }
+  }
+
   test("every field-taking op rejects an unknown field with InvalidSchemaException") {
     val t = mkTsdb()
     freshSeries(t, baseRows: _*)
